@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.analysis.{Pca, Sketches, Stats}
-import graft.core.{ColumnMeta, Opset, Profile, RangeJoin}
+import graft.core.{ColumnMeta, Opset, Profile, RangeJoin, SessionArtifacts}
 import graft.llm.MinhashIndex
 import graft.dsp.SignalOps
 import graft.instants.{Indicators, Selector, Splits}
@@ -100,33 +100,21 @@ object SparkEntry {
   /** Indicator bank per sf dir, computed once and cached (all four
     * instants_* queries and the fit below share it — recomputing the
     * window chains per query would multiply the benchmark for no semantic
-    * difference).
+    * difference). Every shared artifact below lives in [[SessionArtifacts]].
     */
-  // Caches key on the SparkSession *object* (reference equality): the cached
-  // plans/models are bound to the session that built them, and identity
-  // hashes are not unique — after a stopped session is GC'd a new one could
-  // collide with a stale key and be served plans bound to the dead context.
-  // Entries of stopped sessions are evicted on every lookup.
-  private val bankCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def cachedBank(s: SparkSession, dir: String): DataFrame = {
-    evictStopped(); hookCleanup(s)
-    bankCache.getOrElseUpdate((s, dir),
+  private def cachedBank(s: SparkSession, dir: String): DataFrame =
+    SessionArtifacts.getOrBuild(s, dir, "bank")(
       Indicators.bank(opsetWide(s, dir).df, "record", "t", IndCodes, SgDeg)._1.cache())
-  }
 
   /** Labels + fitted tree per sf dir: a user fits once and predicts many
     * times, so instants_fit/predict/scores share one fit.
     */
-  private val selectorCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, Selector.SelectorModel)]
   private def fittedSelector(s: SparkSession, dir: String): (DataFrame, Selector.SelectorModel) = {
-    evictStopped(); hookCleanup(s)
-    val r = selectorCache.getOrElseUpdate((s, dir), {
+    val r = SessionArtifacts.getOrBuild(s, dir, "selector") {
       val selected = Splits.argmaxInstants(opset(s, dir), "value")
       val sel = Selector.fit(cachedBank(s, dir), selected, "record", "t", InstFeatCols)
       (selected, sel)
-    })
+    }
     // refresh OUTSIDE the miss path: the export is a single most-recent
     // slot, so a cache HIT (dir A queried again after dir B) must still
     // leave the export describing A's tree for the oracle dump
@@ -178,16 +166,13 @@ object SparkEntry {
   /** Predicted instants per sf dir (belief + argmax over the cached bank),
     * shared by instants_predict and instants_scores.
     */
-  private val computedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def computedInstants(s: SparkSession, dir: String): DataFrame = {
-    evictStopped(); hookCleanup(s)
     // fittedSelector refreshes treeExport even on ITS cache hit; call it
     // here unconditionally (not only in the miss path) so a cache HIT at
     // dir A after a fit at dir B still leaves the export describing A's
     // tree for the oracle dump.
     val (_, sel) = fittedSelector(s, dir)
-    computedCache.getOrElseUpdate((s, dir),
+    SessionArtifacts.getOrBuild(s, dir, "computed")(
       Selector.predictInstants(
         Selector.belief(sel, cachedBank(s, dir), "record", "t"), "record", "t").cache())
   }
@@ -197,17 +182,13 @@ object SparkEntry {
     * grades (real usage: pair once, then cluster), so the shingle →
     * signature → band chain runs once per session/dir, not once per query.
     */
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def cachedMinhashPairs(s: SparkSession, dir: String): DataFrame = {
-    evictStopped(); hookCleanup(s)
-    pairsCache.getOrElseUpdate((s, dir), {
+  private def cachedMinhashPairs(s: SparkSession, dir: String): DataFrame =
+    SessionArtifacts.getOrBuild(s, dir, "pairs") {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       Dedup.minhashLsh(docs, "doc_id", "text",
         MhShingle, MhHashes, MhBands, MhThreshold,
         graft.core.CacheScope.session).cache()
-    })
-  }
+    }
 
   /** Perceptual-hash table per sf dir, computed once and cached: the
     * pair and cluster queries consume the SAME hash table mm_phash
@@ -215,13 +196,9 @@ object SparkEntry {
     * then cluster), so the PNG decode — the dominant cost of all three —
     * runs once per session/dir instead of once per query.
     */
-  private val phashCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def cachedImageHashes(s: SparkSession, dir: String): DataFrame = {
-    evictStopped(); hookCleanup(s)
-    phashCache.getOrElseUpdate((s, dir),
+  private def cachedImageHashes(s: SparkSession, dir: String): DataFrame =
+    SessionArtifacts.getOrBuild(s, dir, "phash")(
       Multimodal.imageHashes(phashFixture(s, dir)).toDF().cache())
-  }
 
   /** Co-purchase edge pairs per sf dir, computed once and cached: FIVE
     * graph queries (triangles, clustering, both probes, kcore) analyze
@@ -229,11 +206,8 @@ object SparkEntry {
     * each analysis over it — so the lineitem self-join that derives it
     * runs once per session/dir instead of once per query.
     */
-  private val graphEdgesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def cachedCoPurchaseEdges(s: SparkSession, dir: String): DataFrame = {
-    evictStopped(); hookCleanup(s)
-    graphEdgesCache.getOrElseUpdate((s, dir), {
+  private def cachedCoPurchaseEdges(s: SparkSession, dir: String): DataFrame =
+    SessionArtifacts.getOrBuild(s, dir, "graphEdges") {
       val li = s.read.parquet(s"$dir/lineitem.parquet")
         .filter(col("l_linenumber") <= TriMaxLine)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
@@ -241,50 +215,35 @@ object SparkEntry {
         .join(li.select(col("ok").as("ok2"), col("pk").as("p2")),
           col("ok") === col("ok2") && col("p1") < col("p2"))
         .select("p1", "p2").cache()
-    })
-  }
+    }
 
   /** Full and probe-sliced triangle tables per sf dir, cached: the
     * clustering twins consume the SAME numerator their triangle queries
-    * grade ("count triangles once, then coefficient" — the phashCache
+    * grade ("count triangles once, then coefficient" — the phash
     * doctrine), so wedge generation, the dominant cost, runs once.
     */
-  private val triCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def cachedTriangles(s: SparkSession, dir: String): DataFrame = {
-    evictStopped(); hookCleanup(s)
-    triCache.getOrElseUpdate((s, dir),
+  private def cachedTriangles(s: SparkSession, dir: String): DataFrame =
+    SessionArtifacts.getOrBuild(s, dir, "tri")(
       graft.graph.Graph.triangles(cachedCoPurchaseEdges(s, dir), "p1", "p2").cache())
-  }
-  private val triProbeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def cachedTrianglesProbe(s: SparkSession, dir: String): DataFrame = {
-    evictStopped(); hookCleanup(s)
-    triProbeCache.getOrElseUpdate((s, dir),
+  private def cachedTrianglesProbe(s: SparkSession, dir: String): DataFrame =
+    SessionArtifacts.getOrBuild(s, dir, "triProbe")(
       graft.graph.Graph.trianglesProbe(cachedCoPurchaseEdges(s, dir), "p1", "p2",
         a => substring(md5(a.cast("string")), 1, 1) === GraphProbeResidue).cache())
-  }
 
-  /** IVF coarse-quantizer centroids per (sf dir, k, iters), trained once
-    * and cached: FIVE ivf queries (search, recall, index write/append,
-    * stream assign) and the two SemDeDup twins each deterministically
-    * train the SAME quantizer over the same corpus — real usage trains
-    * it once and FREEZES it in the index artifact (writeIvfIndex's
-    * `_graft_centroids.txt` doctrine). The cached value is a metadata-
-    * sized driver array (k × dim doubles), dropped with the session
-    * caches between bench passes like every other memoized model.
+  /** IVF coarse-quantizer centroids (k = IvfK, IvfIters Lloyd rounds) per
+    * sf dir, trained once and cached: FIVE ivf queries (ann_ivf,
+    * ann_recall, ann_indexed, ann_indexed_append, stream_ivf_assign) each
+    * deterministically train the SAME quantizer over the same corpus —
+    * real usage trains it once and FREEZES it in the index artifact
+    * (writeIvfIndex's `_graft_centroids.txt` doctrine). The cached value
+    * is a metadata-sized driver array (k × dim doubles), dropped with the
+    * session caches between bench passes like every other memoized model.
     */
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[
-      (SparkSession, String, Int, Int), Array[Array[Double]]]
-  private def cachedIvfCentroids(s: SparkSession, dir: String,
-                                 k: Int, iters: Int): Array[Array[Double]] = {
-    evictStopped(); hookCleanup(s)
-    centroidCache.getOrElseUpdate((s, dir, k, iters),
+  private def cachedIvfCentroids(s: SparkSession, dir: String): Array[Array[Double]] =
+    SessionArtifacts.getOrBuild(s, dir, "centroid")(
       Similarity.ivfCentroids(
         s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
-        k = k, iters = iters))
-  }
+        k = IvfK, iters = IvfIters))
 
   /** DSIR importance weights per sf dir, computed once and cached: both
     * resampling twins (top-k and histogram-threshold) consume the SAME
@@ -292,92 +251,19 @@ object SparkEntry {
     * once, then draws samples — so the gram-bucket census runs once per
     * session/dir instead of once per query.
     */
-  private val dsirCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def cachedDsirWeights(s: SparkSession, dir: String): DataFrame = {
-    evictStopped(); hookCleanup(s)
-    dsirCache.getOrElseUpdate((s, dir), {
+  private def cachedDsirWeights(s: SparkSession, dir: String): DataFrame =
+    SessionArtifacts.getOrBuild(s, dir, "dsir") {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       Pipeline.importanceWeights(docs,
         docs.filter(col("source") === DsirTargetSource),
         "doc_id", "text", Seq(1, 2), DsirBuckets).cache()
-    })
-  }
-
-  private def evictStopped(): Unit = {
-    def stopped(k: (SparkSession, String)): Boolean = k._1.sparkContext.isStopped
-    bankCache.keys.filter(stopped).foreach(bankCache.remove)
-    dsirCache.keys.filter(stopped).foreach(dsirCache.remove)
-    centroidCache.keys.filter(k => k._1.sparkContext.isStopped)
-      .foreach(centroidCache.remove)
-    selectorCache.keys.filter(stopped).foreach(selectorCache.remove)
-    computedCache.keys.filter(stopped).foreach(computedCache.remove)
-    pairsCache.keys.filter(stopped).foreach(pairsCache.remove)
-    phashCache.keys.filter(stopped).foreach(phashCache.remove)
-    graphEdgesCache.keys.filter(stopped).foreach(graphEdgesCache.remove)
-    triCache.keys.filter(stopped).foreach(triCache.remove)
-    triProbeCache.keys.filter(stopped).foreach(triProbeCache.remove)
-  }
-
-  /** Sessions whose context already carries the eviction listener, weakly
-    * keyed so the guard set itself never pins a session.
-    */
-  private val cleanupHooked =
-    java.util.Collections.newSetFromMap(
-      java.util.Collections.synchronizedMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  /** Evict `s`'s cache entries the moment its context stops: without the
-    * listener a stopped-then-abandoned session stays pinned by the strong
-    * TrieMap keys until some LATER cache lookup happens to run
-    * [[evictStopped]] — indefinitely, in a long-lived process that never
-    * touches these queries again.
-    */
-  private def hookCleanup(s: SparkSession): Unit =
-    if (cleanupHooked.add(s)) {
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          // the context is already stopped here — drop references only,
-          // no unpersist (its RDDs died with the context)
-          bankCache.keys.filter(_._1 eq s).foreach(bankCache.remove)
-          selectorCache.keys.filter(_._1 eq s).foreach(selectorCache.remove)
-          computedCache.keys.filter(_._1 eq s).foreach(computedCache.remove)
-          pairsCache.keys.filter(_._1 eq s).foreach(pairsCache.remove)
-          phashCache.keys.filter(_._1 eq s).foreach(phashCache.remove)
-          graphEdgesCache.keys.filter(_._1 eq s).foreach(graphEdgesCache.remove)
-          triCache.keys.filter(_._1 eq s).foreach(triCache.remove)
-          triProbeCache.keys.filter(_._1 eq s).foreach(triProbeCache.remove)
-          dsirCache.keys.filter(_._1 eq s).foreach(dsirCache.remove)
-          centroidCache.keys.filter(_._1 eq s).foreach(centroidCache.remove)
-        }
-      })
     }
 
   /** Drop every memoized plan/model bound to `s` and unpersist its cached
     * data. Bench calls this between timing passes so every pass is a cold
     * run; long-lived sessions can call it to release driver/executor memory.
     */
-  def clearSessionCaches(s: SparkSession): Unit = {
-    bankCache.keys.filter(_._1 eq s).foreach(k =>
-      bankCache.remove(k).foreach(_.unpersist(false)))
-    selectorCache.keys.filter(_._1 eq s).foreach(selectorCache.remove)
-    computedCache.keys.filter(_._1 eq s).foreach(k =>
-      computedCache.remove(k).foreach(_.unpersist(false)))
-    pairsCache.keys.filter(_._1 eq s).foreach(k =>
-      pairsCache.remove(k).foreach(_.unpersist(false)))
-    phashCache.keys.filter(_._1 eq s).foreach(k =>
-      phashCache.remove(k).foreach(_.unpersist(false)))
-    graphEdgesCache.keys.filter(_._1 eq s).foreach(k =>
-      graphEdgesCache.remove(k).foreach(_.unpersist(false)))
-    triCache.keys.filter(_._1 eq s).foreach(k =>
-      triCache.remove(k).foreach(_.unpersist(false)))
-    triProbeCache.keys.filter(_._1 eq s).foreach(k =>
-      triProbeCache.remove(k).foreach(_.unpersist(false)))
-    dsirCache.keys.filter(_._1 eq s).foreach(k =>
-      dsirCache.remove(k).foreach(_.unpersist(false)))
-    centroidCache.keys.filter(_._1 eq s).foreach(centroidCache.remove)
-  }
+  def clearSessionCaches(s: SparkSession): Unit = SessionArtifacts.clear(s)
 
   /** Recursively delete a directory tree now; missing paths are fine. */
   private def deleteTree(p: java.nio.file.Path): Unit =
@@ -4001,7 +3887,7 @@ object SparkEntry {
 
     "ann_ivf" -> { (s, dir) =>
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val cents = cachedIvfCentroids(s, dir, IvfK, IvfIters)
+      val cents = cachedIvfCentroids(s, dir)
       ivfCentsExport = Some(cents)
       Similarity.ivfTopK(emb, "vec_id", "embedding", AnnQueryIds, AnnK, cents, nProbe = IvfProbe)
         .orderBy("q_id", "rank")
@@ -4013,7 +3899,7 @@ object SparkEntry {
     // sample; the oracle composes the two existing SQL constructions.
     "ann_recall" -> { (s, dir) =>
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val cents = cachedIvfCentroids(s, dir, IvfK, IvfIters)
+      val cents = cachedIvfCentroids(s, dir)
       ivfCentsExport = Some(cents)
       val exact = Similarity.topK(emb, "vec_id", "embedding", AnnQueryIds, AnnK)
       val approx = Similarity.ivfTopK(emb, "vec_id", "embedding", AnnQueryIds,
@@ -4043,7 +3929,7 @@ object SparkEntry {
     // cells — graded result-identical to the compute-side operator.
     "ann_indexed" -> { (s, dir) =>
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val cents = cachedIvfCentroids(s, dir, IvfK, IvfIters)
+      val cents = cachedIvfCentroids(s, dir)
       ivfCentsExport = Some(cents)
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index_${math.abs(dir.hashCode)}"
       Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, path)
@@ -4061,7 +3947,7 @@ object SparkEntry {
     // index — graded by the SAME frozen-centroid oracle as ann_indexed.
     "ann_indexed_append" -> { (s, dir) =>
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val cents = cachedIvfCentroids(s, dir, IvfK, IvfIters)
+      val cents = cachedIvfCentroids(s, dir)
       ivfCentsExport = Some(cents)
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index_append_${math.abs(dir.hashCode)}"
       Similarity.writeIvfIndex(emb.filter(col("vec_id") % 2 === 0),
@@ -4083,7 +3969,7 @@ object SparkEntry {
       val path = s"$dir/embeddings.parquet"
       val schema = s.read.parquet(path).schema
       val emb = s.read.parquet(path)
-      val cents = cachedIvfCentroids(s, dir, IvfK, IvfIters)
+      val cents = cachedIvfCentroids(s, dir)
       ivfCentsExport = Some(cents)
       val outPath = java.nio.file.Files.createTempDirectory("graft-stream-ivf")
       deleteAtExit(outPath)
@@ -4663,7 +4549,7 @@ object SparkEntry {
     // -- LLM: SemDeDup semantic near-dup (row 51) --
     "dedup_semantic" -> { (s, dir) =>
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val cents = cachedIvfCentroids(s, dir, SemK, SemIters)
+      val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", SemK, SemIters)
       semCentsExport = Some(cents)
       Similarity.semanticDup(emb, "vec_id", "embedding", SemThreshold, cents)
         .orderBy("id_a", "id_b")

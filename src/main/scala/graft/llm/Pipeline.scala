@@ -294,6 +294,14 @@ object Pipeline {
     * `top_word_frac` is a single division of exact integer counts, so
     * both engines evaluate identical doubles at the threshold — no
     * boundary ambiguity in the keep set.
+    *
+    * Caching: the filtered head (steps 1–3) is persisted once, because
+    * steps 4 and 5 read it from several sides. By default it is
+    * registered under [[graft.core.CacheScope.session]] and stays in
+    * executor storage until the session drops it, so every call adds one
+    * persisted table. A long-lived caller cleaning many corpora should
+    * pass its own `scope` and `release()` it once the result is
+    * consumed (see [[graft.core.CacheScope]]).
     */
   def cleanCorpus(docs: DataFrame, bench: DataFrame, idCol: String, textCol: String,
                   lang: String = "en", minQuality: Double = 0.6,

@@ -38,4 +38,26 @@ class SparkEntrySpec extends SparkSpec {
       assert(!sql.contains("`"), s"$name: backticks are Spark-only quoting")
     }
   }
+
+  // A consumer of a shared session artifact must return the same rows
+  // whether its producer query built the artifact or the consumer did.
+  // Input: the sf0.001 tables committed with the benchmark.
+  private val Dir = "perfbench/fixture"
+  for ((producer, consumer) <- Seq(
+      "graph_triangles" -> "graph_clustering",
+      "dedup_minhash_pairs" -> "dedup_clusters",
+      "dsir_weights" -> "dsir_sample")) {
+    test(s"$consumer returns the same rows with or without $producer run first") {
+      def rows(q: String) =
+        SparkEntry.queries(q)(spark, Dir).collect().map(_.toString).sorted.toSeq
+      SparkEntry.clearSessionCaches(spark)
+      rows(producer)
+      val producerFirst = rows(consumer)
+      SparkEntry.clearSessionCaches(spark)
+      val consumerFirst = rows(consumer)
+      SparkEntry.clearSessionCaches(spark)
+      assert(producerFirst.nonEmpty)
+      assert(consumerFirst == producerFirst)
+    }
+  }
 }

@@ -1,0 +1,78 @@
+package graft.core
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerProbe
+import org.apache.spark.scheduler.SparkListenerApplicationEnd
+import org.apache.spark.storage.StorageLevel
+
+import graft.SparkSpec
+
+class SessionArtifactsSpec extends SparkSpec {
+
+  private def counted[V](n: AtomicInteger)(v: => V): V = { n.incrementAndGet(); v }
+
+  test("build runs once per (session, dir, key)") {
+    val s = spark.newSession()
+    val n = new AtomicInteger
+    val a = SessionArtifacts.getOrBuild(s, "d", "k")(counted(n)(Array(1.0, 2.0)))
+    val b = SessionArtifacts.getOrBuild(s, "d", "k")(counted(n)(Array(3.0)))
+    assert(n.get == 1)
+    assert(a eq b)
+    SessionArtifacts.getOrBuild(s, "d", "other")(counted(n)(0))
+    assert(n.get == 2)
+    SessionArtifacts.clear(s)
+  }
+
+  test("another dir or a child session builds its own entry") {
+    val parent = spark.newSession()
+    val child = parent.newSession()
+    val n = new AtomicInteger
+    SessionArtifacts.getOrBuild(parent, "d1", "k")(counted(n)("p1"))
+    assert(SessionArtifacts.getOrBuild(parent, "d2", "k")(counted(n)("p2")) == "p2")
+    assert(SessionArtifacts.getOrBuild(child, "d1", "k")(counted(n)("c1")) == "c1")
+    assert(n.get == 3)
+    assert(SessionArtifacts.getOrBuild(parent, "d1", "k")(counted(n)("x")) == "p1")
+    SessionArtifacts.clear(parent)
+    SessionArtifacts.clear(child)
+  }
+
+  test("clear(child) unpersists the child's DataFrames and leaves the parent's alone") {
+    val parent = spark.newSession()
+    val child = parent.newSession()
+    val p = SessionArtifacts.getOrBuild(parent, "d", "df")(parent.range(7).toDF("p").cache())
+    val c = SessionArtifacts.getOrBuild(child, "d", "df")(child.range(5).toDF("c").cache())
+    SessionArtifacts.getOrBuild(child, "d", "model")(Array(Array(1.0)))
+    assert(p.count() == 7 && c.count() == 5)
+    SessionArtifacts.clear(child)
+    assert(c.storageLevel == StorageLevel.NONE)
+    assert(p.storageLevel != StorageLevel.NONE)
+    val n = new AtomicInteger
+    SessionArtifacts.getOrBuild(child, "d", "model")(counted(n)(Array(Array(2.0))))
+    SessionArtifacts.getOrBuild(parent, "d", "df")(counted(n)(parent.range(1).toDF()))
+    assert(n.get == 1, "the child's model is rebuilt, the parent's frame is served")
+    SessionArtifacts.clear(parent)
+    SessionArtifacts.clear(child)
+    assert(p.storageLevel == StorageLevel.NONE)
+  }
+
+  test("one end listener per context, however many sessions use the store") {
+    val sessions = Seq.fill(4)(spark.newSession())
+    sessions.foreach(s => SessionArtifacts.getOrBuild(s, "d", "k")(1))
+    val listeners = ListenerProbe.registered[SessionArtifacts.EndListener](spark.sparkContext)
+    assert(listeners.size == 1)
+    sessions.foreach(SessionArtifacts.clear)
+  }
+
+  test("application end drops the context's entries") {
+    val s = spark.newSession()
+    val n = new AtomicInteger
+    SessionArtifacts.getOrBuild(s, "d", "k")(counted(n)(1))
+    // delivered directly: stopping the suite's shared context is not an option
+    ListenerProbe.registered[SessionArtifacts.EndListener](spark.sparkContext)
+      .foreach(_.onApplicationEnd(SparkListenerApplicationEnd(0L)))
+    SessionArtifacts.getOrBuild(s, "d", "k")(counted(n)(1))
+    assert(n.get == 2)
+    SessionArtifacts.clear(s)
+  }
+}

@@ -180,7 +180,7 @@ object Bench {
     // commits as a provenance artifact beside BENCH_r{N}.json.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       new java.io.File("BENCH_GRID.json").getAbsolutePath)
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passes,"n_ok":${okNames.size},"n_err":$nerr,"n_runs":$runs,"n_sessions":$sessions,"sf":${Json.q(sfDir)}}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passes,"n_ok":${okNames.size},"n_err":$nerr,"n_runs":$runs,"n_sessions":$sessions,"sf":${Json.q(sfDir)},"cpus":${cpusJson(cpus)}}"""
     try {
       val p = java.nio.file.Paths.get(outPath)
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
@@ -190,6 +190,21 @@ object Bench {
         System.err.println(s"[bench] could not write $outPath: $e — stdout line stands alone")
     }
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"detail":${Json.q(outPath)},"n_ok":${okNames.size},"n_err":$nerr,"n_runs":$runs,"n_sessions":$sessions,"sf":${Json.q(sfDir)}}""")
+    println(summaryLine(total, okNames.size, nerr, sfDir, cpus, runs, sessions))
     spark.stop()
   }
+
+  private def cpusJson(cpus: String): String = cpus.toIntOption.fold(Json.q(cpus))(_.toString)
+
+  /** The run in one line of at most 500 characters, printed after the full
+    * line: a consumer that keeps only the tail of stdout still reads the
+    * total, the error count and the rig it ran on. `sf` keeps its last 40
+    * characters and `cpus` its first 10, so even fully escaped input stays
+    * inside the bound.
+    */
+  def summaryLine(total: Double, nOk: Int, nErr: Int, sfDir: String, cpus: String,
+                  runs: Int, sessions: Int): String =
+    s"""{"total":$total,"unit":"sec","n_ok":$nOk,"n_err":$nErr,""" +
+      s""""sf":${Json.q(sfDir.takeRight(40))},"cpus":${cpusJson(cpus.take(10))},""" +
+      s""""n_runs":$runs,"n_sessions":$sessions}"""
 }

@@ -79,6 +79,19 @@ object Graph {
     }
   }
 
+  /** Canonical undirected simple-graph edge set: (min, max) id order,
+    * self-loops dropped, parallel edges collapsed.
+    */
+  private def canonical(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    canonicalPairs(edges, srcCol, dstCol).distinct()
+
+  /** [[canonical]] before the distinct: parallel edges still repeat. */
+  private def canonicalPairs(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges
+      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
+        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
+      .filter(col("u") =!= col("v"))
+
   /** Exact per-vertex triangle counts via DEGREE ORIENTATION — the
     * MapReduce-era answer to the wedge explosion (Suri & Vassilvitskii
     * 2011, "Counting Triangles and the Curse of the Last Reducer";
@@ -95,9 +108,25 @@ object Graph {
     *
     * Every triangle is counted exactly once: its minimum-(degree, id)
     * vertex is the unique apex whose two out-edges form the wedge, so no
-    * post-join distinct is needed. All three stages are plain equi-joins
-    * / aggregations on vertex keys — hash-partitionable, map-side
-    * combined, nothing driver-sized.
+    * post-join distinct is needed.
+    *
+    * Each intermediate is planned once, and only the degree count pays
+    * for collapsing parallel edges. Orientation needs no degree joins:
+    * one map-side-combined aggregation over the distinct canonical pairs
+    * gives each vertex its degree; every pair splits into its two
+    * half-edges, one join on the vertex hands each half-edge its own
+    * endpoint's degree, and one aggregation per canonical pair (parallel
+    * copies land in the same group) keeps the (degree, id)-minimum
+    * endpoint as apex `a` and the other as `b`. Wedges need no
+    * self-join: one aggregation per apex collects its out-neighbors into
+    * a list, and two row-local explodes pair them (`b < c`). That list
+    * is bounded by the oriented out-degree, so it holds O(√m) entries on
+    * any graph, a million-degree hub included. The closing edge is a
+    * semi-join against the canonical pairs (a parallel copy cannot
+    * count a triangle twice), then the 3-corner credit. Every stage is
+    * an equi-join or aggregation on vertex keys — hash-partitionable,
+    * nothing driver-sized, no window (a hub would put its whole
+    * neighborhood in one task).
     *
     * Input edges are canonicalized first (undirected: (min,max) id
     * order, self-loops dropped, parallel edges collapsed). Returns
@@ -105,15 +134,6 @@ object Graph {
     * clustering-coefficient numerator); vertices in no triangle are
     * absent (count 0).
     */
-  /** Canonical undirected simple-graph edge set: (min, max) id order,
-    * self-loops dropped, parallel edges collapsed.
-    */
-  private def canonical(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-
   def triangles(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
     trianglesImpl(edges, srcCol, dstCol, probe = None)
 
@@ -138,30 +158,35 @@ object Graph {
 
   private def trianglesImpl(edges: DataFrame, srcCol: String, dstCol: String,
                             probe: Option[Column => Column]): DataFrame = {
-    val e0 = canonical(edges, srcCol, dstCol)
-    val deg = e0.select(col("u").as("n")).unionAll(e0.select(col("v").as("n")))
+    // parallel edges only matter to the degree count: the orientation
+    // groups by the canonical pair and the closing join is a semi-join,
+    // so both read the pairs as they come and skip the distinct's
+    // shuffle (a cached input read twice gets fresh output ids, so its
+    // exchanges are never reused: every extra read is an extra shuffle)
+    val pairs = canonicalPairs(edges, srcCol, dstCol)
+    val deg = pairs.distinct().select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("d"))
-    // orient by (degree, id): lower endpoint keeps the out-edge
-    val dir = e0
-      .join(deg.select(col("n").as("u"), col("d").as("_du")), "u")
-      .join(deg.select(col("n").as("v"), col("d").as("_dv")), "v")
-      .select(
-        when(struct(col("_du"), col("u")) < struct(col("_dv"), col("v")),
-          struct(col("u").as("a"), col("v").as("b")))
-          .otherwise(struct(col("v").as("a"), col("u").as("b"))).as("_e"))
-      .select(col("_e.a").as("a"), col("_e.b").as("b"))
+    // orient by (degree, id): each pair splits into its two half-edges,
+    // each picks up its own endpoint's degree, and the pair's group keeps
+    // the lower (degree, id) endpoint as the apex
+    val dir = pairs.select(col("u"), col("v"), explode(array(col("u"), col("v"))).as("n"))
+      .join(deg, "n")
+      .groupBy("u", "v")
+      .agg(min(struct(col("d"), col("n"))).as("_lo"),
+        max(struct(col("d"), col("n"))).as("_hi"))
+      .select(col("_lo.n").as("a"), col("_hi.n").as("b"))
     // APEX RESTRICTION: filter AFTER orientation (the apex is already a
-    // pure function of the full canonical graph) and BEFORE the wedge
-    // self-join, so the slice cuts the quadratic term, not the setup —
-    // both wedge sides share the apex key, so one filter restricts both
+    // pure function of the full canonical graph) and BEFORE the wedges,
+    // so the slice cuts the quadratic term, not the setup
     val dirP = probe.fold(dir)(p => dir.filter(p(col("a"))))
-    // wedges from out-edges of the shared apex; (b, c) kept in id order so
-    // the closing lookup hits e0's canonical (min, max) form directly
-    val d2 = dirP.select(col("a"), col("b").as("c"))
-    val wedges = dirP.join(d2, Seq("a")).filter(col("b") < col("c"))
-    val tris = wedges.join(e0,
-      wedges("b") === e0("u") && wedges("c") === e0("v"))
-      .select(col("a"), col("b"), col("c"))
+    // wedges from the out-list of each apex; (b, c) kept in id order so
+    // the closing lookup hits the canonical (min, max) form directly
+    val wedges = dirP.groupBy("a").agg(collect_list(col("b")).as("_bs"))
+      .select(col("a"), col("_bs"), explode(col("_bs")).as("b"))
+      .select(col("a"), col("b"), explode(col("_bs")).as("c"))
+      .filter(col("b") < col("c"))
+    val tris = wedges.join(pairs,
+      wedges("b") === pairs("u") && wedges("c") === pairs("v"), "left_semi")
     // 3-corner credit as a ROW-LOCAL explode — a 3-branch unionAll here
     // replays the whole wedge pipeline once per corner (the branches get
     // distinct expression ids, and exchange reuse only dedupes the
@@ -171,17 +196,6 @@ object Graph {
       .groupBy("node").agg(count(lit(1)).as("n_tri"))
   }
 
-  /** Local clustering coefficient per vertex, in EXACT 1e-6 integer
-    * ticks: `coeff_ticks = (2·10^6·n_tri) div (d·(d−1))` — how many of a
-    * vertex's neighbor pairs are themselves connected, the standard
-    * per-node cohesion metric over [[triangles]]. Pure BIGINT arithmetic
-    * (float division would sum nothing here, but the tick pin keeps the
-    * surface hash-gradeable like PageRank). EVERY vertex of the
-    * canonical graph gets a row (`n_tri` 0 when triangle-free); degree-1
-    * vertices have no neighbor pair and coefficient 0 by convention.
-    * Cost: [[triangles]] + one degree aggregation + a left join on the
-    * vertex key.
-    */
   /** Fixed-round k-core peel: up to `rounds` iterations of "drop every
     * vertex with degree < k (and its edges)", returning the surviving
     * degree table `(node, degree)`. Like [[pagerank]], the graded
@@ -245,6 +259,17 @@ object Graph {
     degrees(e)
   }
 
+  /** Local clustering coefficient per vertex, in EXACT 1e-6 integer
+    * ticks: `coeff_ticks = (2·10^6·n_tri) div (d·(d−1))` — how many of a
+    * vertex's neighbor pairs are themselves connected, the standard
+    * per-node cohesion metric over [[triangles]]. Pure BIGINT arithmetic
+    * (float division would sum nothing here, but the tick pin keeps the
+    * surface hash-gradeable like PageRank). EVERY vertex of the
+    * canonical graph gets a row (`n_tri` 0 when triangle-free); degree-1
+    * vertices have no neighbor pair and coefficient 0 by convention.
+    * Cost: [[triangles]] + one degree aggregation + a left join on the
+    * vertex key.
+    */
   def clustering(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
     clusteringImpl(edges, srcCol, dstCol, probe = None)
 

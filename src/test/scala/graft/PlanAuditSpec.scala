@@ -510,6 +510,31 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("Graph.triangles plans each intermediate once: 7 distinct exchanges, not 22") {
+    // cached input edges, as SparkEntry feeds them: a cached relation read
+    // on both sides of a self-join gets fresh output ids, so exchanges
+    // over the duplicated subtrees are never reused — each copy runs.
+    // The two-degree-join orientation under a wedge self-join planned
+    // 22 distinct exchanges here; a count above 7 means a duplicated
+    // subtree is back
+    val rnd = new scala.util.Random(11)
+    val edges = (Seq.fill(400)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong)) ++
+      (1 to 40).map(i => (0L, i.toLong))).toDF("s", "d").cache()
+    try {
+      val tri = graft.graph.Graph.triangles(edges, "s", "d")
+      tri.collect()
+      val exchanges = collectAll(plan(tri)) {
+        case s: ShuffleExchangeExec => s: SparkPlan
+        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b
+      }
+      // a reused exchange is walked into as its original: count each once
+      val distinct = exchanges.foldLeft(List.empty[SparkPlan]) { (seen, e) =>
+        if (seen.exists(_ eq e)) seen else e :: seen
+      }
+      assert(distinct.size === 7, s"distinct exchanges in:\n${plan(tri)}")
+    } finally edges.unpersist()
+  }
+
   test("graph_triangles: the l_linenumber cap reaches the parquet scan as a pushed filter") {
     val p = plan(SparkEntry.queries("graph_triangles")(spark, dir))
     val scans = collectAll(p) {

@@ -155,6 +155,56 @@ class GraphSpec extends SparkSpec {
     assert(r === Map(0L -> 1L, 1L -> 1L, 2L -> 1L))
   }
 
+  test("triangles on generated multigraphs: brute force, any partitioning, probe and clustering twins") {
+    // seeded multigraphs mixing every input shape the canonicalization and
+    // the (degree, id) orientation must absorb: parallel edges, reversed
+    // pairs, self-loops, equal-degree cliques (ties broken by id) and one
+    // low-id hub adjacent to about half the vertices
+    import org.scalacheck.{Gen, rng}
+    def sampled[A](g: Gen[A], n: Int, seed: Long): Seq[A] =
+      (0 until n).flatMap(i => g.apply(Gen.Parameters.default, rng.Seed(seed + i)))
+    val genV = Gen.choose(1L, 40L)
+    val genPair = Gen.zip(genV, genV)
+    val genEdges: Gen[Seq[(Long, Long)]] = Gen.frequency(
+      8 -> genPair.map(Seq(_)),
+      2 -> genPair.map(p => Seq(p, p)),
+      2 -> genPair.map(p => Seq(p, p.swap)),
+      1 -> genV.map(v => Seq((v, v))),
+      4 -> genV.map(v => Seq((0L, v))),
+      1 -> Gen.choose(100L, 140L).map(b => // a 4-clique: four degree-3 ties
+        for (i <- 0L to 3L; j <- i + 1 to 3L) yield (b * 4 + i, b * 4 + j)),
+    )
+    def reference(raw: Seq[(Long, Long)]): Map[Long, Long] = {
+      val es = raw.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+        .filter(p => p._1 != p._2).toSet
+      val adj = es.toSeq.flatMap(p => Seq(p, p.swap)).groupBy(_._1)
+        .map { case (n, ps) => n -> ps.map(_._2).toSet }
+      val counts = for {
+        (a, b) <- es.toSeq; c <- adj(b).toSeq if c > b && adj(a)(c); n <- Seq(a, b, c)
+      } yield n
+      counts.groupBy(identity).map { case (n, xs) => n -> xs.size.toLong }
+    }
+    def asMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.collect().sortBy(_.getLong(0)).map(_.toSeq).toSeq
+    for (seed <- Seq(3L, 17L, 101L)) {
+      val raw = sampled(genEdges, 220, seed).flatten
+      val edges = raw.toDF("s", "d")
+      val want = reference(raw)
+      assert(want.nonEmpty && want.contains(0L), s"seed=$seed: fixture must close hub triangles")
+      assert(asMap(Graph.triangles(edges, "s", "d")) === want, s"seed=$seed")
+      for (parts <- Seq(1, 7))
+        assert(asMap(Graph.triangles(edges.repartition(parts), "s", "d")) === want,
+          s"seed=$seed repartition($parts)")
+      assert(asMap(Graph.trianglesProbe(edges, "s", "d", _ => lit(true))) === want,
+        s"seed=$seed all-true probe")
+      assert(sortedRows(Graph.clusteringFromCounts(edges, "s", "d",
+        Graph.triangles(edges, "s", "d"))) === sortedRows(Graph.clustering(edges, "s", "d")),
+        s"seed=$seed clustering")
+    }
+  }
+
   test("kcore: peeling a K4-plus-tail leaves exactly the K4; enough rounds is a fixpoint") {
     // K4 on 1-4 plus a pendant path 4-5-6: 3-core = the K4
     val g = ((for { a <- 1 to 4; b <- 1 to 4 if a < b } yield (a.toLong, b.toLong)) ++

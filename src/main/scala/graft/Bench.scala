@@ -67,7 +67,6 @@ object Bench {
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.extensions", "graft.GraftExtensions")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

@@ -19,7 +19,6 @@ object Explain {
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -8,9 +8,10 @@ import graft.llm.TextAnalysis
 import org.apache.spark.sql.types.DataTypes
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Session extensions registering graft's native Catalyst expressions so
-  * they are callable from SQL and `functions.call_function`. Enable with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")`.
+/** SQL names for graft's native Catalyst expressions, so they are
+  * callable from SQL text and `functions.call_function`. Enable with
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")`. graft's
+  * own operators do not need it: they build the expressions directly.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -929,7 +929,7 @@ object SparkEntry {
   private val MinAutoMaxBands = 32
 
   /** DuckDB CTE: doc_id + distinct md5-based 32-bit shingle hashes,
-    * mirroring `array_distinct(Dedup.ngramHashes(text, MhShingle))`.
+    * mirroring `Dedup.distinctNgramHashes(text, MhShingle)`.
     */
   private val ShingleCte =
     s"""sh AS (

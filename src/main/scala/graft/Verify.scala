@@ -28,7 +28,6 @@ object Verify {
       // default; read as long nanos (ts is only used for ordering, which
       // long nanos preserve — matches DuckDB's native ns ordering).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -45,7 +45,7 @@ case class BpeApplyRanked(child: Expression, merges: Seq[(String, String)])
   require(merges.forall { case (l, r) =>
     l.nonEmpty && r.nonEmpty &&
       !l.contains("<") && !l.contains(">") && !r.contains("<") && !r.contains(">") },
-    "graft_bpe_ranked: merge symbols must be non-empty and contain no < or >")
+    "graft_bpe_ranked: merge symbols must be non-empty and contain no < or > (the train contract)")
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {

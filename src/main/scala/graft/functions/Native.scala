@@ -2,39 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-session availability probe for the [[graft.GraftExtensions]]
-  * expressions. Operators that prefer the codegen'd `graft_dot` /
-  * `graft_fingerprint` call sites use this to fall back to their HOF
-  * twins in sessions that did not set
-  * `spark.sql.extensions=graft.GraftExtensions` (e.g. a driver-provided
-  * smoke session) instead of failing analysis with an
-  * unresolved-function error.
-  *
-  * The probe is one catalog lookup per session, memoized in a weak map so
-  * stopped sessions do not pin driver memory. Column construction happens
-  * on the driver with an active session; with no active session at all we
-  * answer `false` — the HOF fallback works everywhere, the native path is
-  * only an optimization.
-  *
-  * CAVEAT: the probe answers for the session active at COLUMN-CONSTRUCTION
-  * time. A Column built under an extensions-enabled session and later
-  * analyzed against a plain session still fails resolution (and the
-  * reverse silently takes the HOF path) — build Columns in the session
-  * that will execute them, which is what every graft operator does (they
-  * take the DataFrame, whose session is active on the calling thread).
+/** Whether the active session resolves graft's SQL function names, i.e.
+  * was built with `spark.sql.extensions=graft.GraftExtensions`. graft's
+  * operators do not read it: they build their native expressions
+  * directly and run in any session. The benchmark harness reads it to
+  * check which kind of session it started.
   */
 object Native {
-  private val known = new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
   def registered: Boolean =
-    SparkSession.getActiveSession.exists { s =>
-      known.synchronized {
-        var v = known.get(s)
-        if (v == null) {
-          v = java.lang.Boolean.valueOf(s.catalog.functionExists("graft_dot"))
-          known.put(s, v)
-        }
-        v.booleanValue()
-      }
-    }
+    SparkSession.getActiveSession.exists(_.catalog.functionExists("graft_dot"))
 }

@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (fraction of the doc taken by its most frequent word, by words
   * occurring at least twice, and by its most frequent adjacent bigram).
   *
-  * The declarative twin ([[graft.llm.TextAnalysis.repetitionHof]])
+  * A declarative twin (the reference NativeEquivalenceSpec pins it to)
   * counts each distinct token by filtering the token array — O(distinct
   * × n) per document through generic HOF evaluation, quadratic on
   * low-redundancy text. Here counts come from one hash-map pass over

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Distinct character-n-gram MD5-prefix hashes of a string, in first-
   * occurrence order — the one-pass native form of
   * `array_distinct(transform(array_distinct(shingles(text, n)), g ->
-  * conv(substring(md5(g), 1, 8), 16, 10)))` (see `Dedup.ngramHashes`).
+  * conv(substring(md5(g), 1, 8), 16, 10)))` (see `Dedup.distinctNgramHashes`).
   *
   * The declarative chain allocates, per shingle, a substring, a 32-char
   * hex string, and a conv parse, through generic HOF evaluation — the

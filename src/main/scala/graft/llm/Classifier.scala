@@ -4,6 +4,8 @@ import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Catalyst.{column, expression}
+import graft.functions.GramTickSum
 
 /** Learned quality classification — the fastText-style third filter of
   * the standard cleaning stack (after heuristic signals and LM
@@ -233,23 +235,14 @@ object Classifier {
     * contract (see object doc). Exposed as a Column so callers can
     * compose it into any projection.
     *
-    * Execution: the fused native scan `graft_gram_tick_sum` when the
-    * extensions are registered (one tokenize + one digest + one
-    * primitive table probe per gram instance); the HOF fold twin
-    * otherwise — spec-pinned bit-equal (NativeEquivalenceSpec).
+    * Execution: the fused native scan [[graft.functions.GramTickSum]]
+    * (one tokenize + one digest + one primitive table probe per gram
+    * instance) — spec-pinned bit-equal to an HOF fold of the tick table
+    * over [[Pipeline.gramBuckets]] (NativeEquivalenceSpec).
     */
   def logitTicks(text: Column, model: TextClassifierModel): Column =
-    if (graft.functions.Native.registered)
-      call_function("graft_gram_tick_sum", text,
-        lit(model.ns.mkString(",")), lit(model.dim),
-        lit(model.interceptTicks), lit(model.coefTicks))
-    else {
-      val ticksArr = array(model.coefTicks.map(lit): _*)
-      aggregate(
-        Pipeline.gramBuckets(text, model.ns, model.dim),
-        lit(model.interceptTicks),
-        (acc, b) => acc + element_at(ticksArr, (b + 1).cast("int")))
-    }
+    column(GramTickSum(expression(text), model.ns, model.dim,
+      model.interceptTicks, model.coefTicks))
 
   /** Score a corpus: `(idCol, logit_ticks, score, pred)` — `score` the
     * tick logit as a double (ticks/1e6), `pred` the logit>0 decision.

@@ -3,6 +3,9 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Catalyst.{column, expression}
+import graft.functions.{Md5Prefix32, MinhashSigs, SetOverlap, ShingleHashes, WordNgramHashSeq,
+  WordNgramHashes}
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -33,25 +36,12 @@ object Dedup {
   }
 
   /** A deterministic 32-bit token hash both Spark and an ANSI-SQL oracle
-    * can compute: the first 8 hex chars of md5, read as an integer.
-    * Resolves to the native [[graft.functions.Md5Prefix32]] (one digest
-    * call, no hex string round trip) when the session registered
-    * [[graft.GraftExtensions]]; the declarative chain otherwise.
+    * can compute: the first 8 hex chars of md5, read as an integer —
+    * `conv(substring(md5(c), 1, 8), 16, 10)`, computed by the native
+    * [[graft.functions.Md5Prefix32]] (one digest call, no hex string
+    * round trip).
     */
-  def md5Hash32(c: Column): Column =
-    if (graft.functions.Native.registered) call_function("graft_md5_32", c)
-    else conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
-  /** Character n-gram set of `text` (distinct substrings of length n;
-    * a text shorter than n yields itself as the single shingle).
-    */
-  def charShingles(text: Column, n: Int): Column =
-    array_distinct(
-      transform(
-        sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
-        i => text.substr(i, lit(n)),
-      )
-    )
+  def md5Hash32(c: Column): Column = column(Md5Prefix32(expression(c)))
 
   /** MinHash signature: for permutation k, `min over shingles of
     * (a_k * h(shingle) + b_k) mod P`. Coefficients are a deterministic
@@ -67,29 +57,21 @@ object Dedup {
   def minhashCoeff(k: Int): (Long, Long) = graft.functions.MinhashSigs.coeff(k)
 
   /** Add `sig_0..sig_{numHashes-1}` MinHash columns computed from a
-    * `shingle_hashes: array<long>` column. Resolves to the one-pass
-    * native [[graft.functions.MinhashSigs]] when the session registered
-    * [[graft.GraftExtensions]] (the declarative chain walks the shingle
-    * array — and allocates a transformed copy of it — once PER
-    * permutation; auto-banded configs run dozens); the declarative
-    * per-column chain otherwise.
+    * `shingle_hashes: array<long>` column: sig_k = `array_min` of
+    * `(h * a_k + b_k) % MinhashP` over the array, all k in one pass of
+    * the native [[graft.functions.MinhashSigs]] (a per-permutation
+    * declarative chain would walk — and copy — the array once PER
+    * permutation; auto-banded configs run dozens).
     */
-  def minhashSignature(df: DataFrame, hashesCol: String, numHashes: Int): DataFrame =
-    if (graft.functions.Native.registered) {
-      // one projection computes the array, a second picks the elements:
-      // CollapseProject keeps the non-cheap array expression un-inlined
-      // (it is referenced numHashes times), so it evaluates once per row
-      val sigs = df.withColumn("_graft_sigs",
-        call_function("graft_minhash_sigs", col(hashesCol), lit(numHashes)))
-      sigs.select(df.columns.map(col) ++ (0 until numHashes).map(k =>
-        element_at(col("_graft_sigs"), k + 1).as(s"sig_$k")): _*)
-    } else (0 until numHashes).foldLeft(df) { (d, k) =>
-      val (a, b) = minhashCoeff(k)
-      d.withColumn(
-        s"sig_$k",
-        array_min(transform(col(hashesCol), h => (h * a + b) % MinhashP)),
-      )
-    }
+  def minhashSignature(df: DataFrame, hashesCol: String, numHashes: Int): DataFrame = {
+    // one projection computes the array, a second picks the elements:
+    // CollapseProject keeps the non-cheap array expression un-inlined
+    // (it is referenced numHashes times), so it evaluates once per row
+    val sigs = df.withColumn("_graft_sigs",
+      column(MinhashSigs(expression(col(hashesCol)), numHashes)))
+    sigs.select(df.columns.map(col) ++ (0 until numHashes).map(k =>
+      element_at(col("_graft_sigs"), k + 1).as(s"sig_$k")): _*)
+  }
 
   /** Banded-LSH candidate pairs from MinHash signatures: band key =
     * concatenated rows of the band → groupBy band key → within-bucket
@@ -351,35 +333,28 @@ object Dedup {
       .select($"id_a", $"id_b", $"jaccard")
   }
 
-  /** md5-based 32-bit hashes of the distinct character n-grams of `text`. */
-  def ngramHashes(text: Column, n: Int): Column =
-    transform(charShingles(text, n), g => md5Hash32(g))
-
-  /** `array_distinct(ngramHashes(text, n))` — the shingle-set column every
-    * MinHash/Jaccard operator starts from. Resolves to the one-pass native
-    * [[graft.functions.ShingleHashes]] when registered (the declarative
-    * chain pays a substring + hex md5 + conv parse per shingle through
-    * generic HOF evaluation — the dominant cost of MinHash at any scale).
+  /** md5-32 hashes ([[md5Hash32]]) of the distinct character n-grams of
+    * `text` (substrings of length n; a text shorter than n yields itself
+    * as the single shingle) — the shingle-set column every
+    * MinHash/Jaccard operator starts from. One pass of the native
+    * [[graft.functions.ShingleHashes]]: a declarative chain pays a
+    * substring + hex md5 + conv parse per shingle through generic HOF
+    * evaluation, the dominant cost of MinHash at any scale.
     */
   def distinctNgramHashes(text: Column, n: Int): Column =
-    if (graft.functions.Native.registered)
-      call_function("graft_shingle_hashes", text, lit(n))
-    else array_distinct(ngramHashes(text, n))
+    column(ShingleHashes(expression(text), n))
 
   /** `(inter, uni)` distinct-set sizes of two long-array columns as
-    * doubles — `size(array_intersect)` / `size(array_union)` semantics.
-    * Resolves to the one-pass native [[graft.functions.SetOverlap]] when
-    * registered: the exact-Jaccard re-rank evaluates this once per
-    * candidate pair, and a near-dup mega-cluster legitimately makes all
-    * its C(k,2) pairs candidates, so per-pair cost is the whole game.
+    * doubles — `size(array_intersect)` / `size(array_union)` semantics,
+    * in one pass of the native [[graft.functions.SetOverlap]]: the
+    * exact-Jaccard re-rank evaluates this once per candidate pair, and a
+    * near-dup mega-cluster legitimately makes all its C(k,2) pairs
+    * candidates, so per-pair cost is the whole game.
     */
-  def overlapCols(a: Column, b: Column): (Column, Column) =
-    if (graft.functions.Native.registered) {
-      val ov = call_function("graft_set_overlap", a, b)
-      (ov.getField("inter").cast("double"), ov.getField("uni").cast("double"))
-    } else
-      (size(array_intersect(a, b)).cast("double"),
-        size(array_union(a, b)).cast("double"))
+  def overlapCols(a: Column, b: Column): (Column, Column) = {
+    val ov = column(SetOverlap(expression(a), expression(b)))
+    (ov.getField("inter").cast("double"), ov.getField("uni").cast("double"))
+  }
 
   /** Lowercased whitespace tokens (empty text → empty array). */
   def tokens(text: Column): Column =
@@ -419,17 +394,11 @@ object Dedup {
 
   /** md5-based 32-bit hashes of the distinct word n-grams of `text`
     * (lowercased whitespace tokens, n-grams joined with one space; fewer
-    * than n tokens yields the whole token list as the single gram).
+    * than n tokens yields the whole token list as the single gram), one
+    * pass of the native [[graft.functions.WordNgramHashes]].
     */
   def wordNgramHashes(text: Column, n: Int): Column =
-    if (graft.functions.Native.registered)
-      call_function("graft_word_ngram_hashes", text, lit(n))
-    else {
-      val toks = tokens(text)
-      array_distinct(transform(
-        sequence(lit(1), greatest(size(toks) - (n - 1), lit(1))),
-        i => md5Hash32(concat_ws(" ", slice(toks, i, lit(n))))))
-    }
+    column(WordNgramHashes(expression(text), n))
 
   /** n-gram Jaccard near-dedup with shared-shingle blocking: a document
     * pair becomes a candidate iff it shares at least `minShared` *selected*
@@ -680,14 +649,7 @@ object Dedup {
     * `posexplode` recovers `(position, gram)` for span location.
     */
   def wordNgramHashSeq(text: Column, n: Int): Column =
-    if (graft.functions.Native.registered)
-      call_function("graft_word_ngram_hash_seq", text, lit(n))
-    else {
-      val toks = tokens(text)
-      transform(
-        sequence(lit(1), greatest(size(toks) - (n - 1), lit(1))),
-        i => md5Hash32(concat_ws(" ", slice(toks, i, lit(n)))))
-    }
+    column(WordNgramHashSeq(expression(text), n))
 
   /** Exact-substring duplicated SPANS — where [[dupPassageStats]] only
     * scores documents by their duplicated-gram fraction, this LOCATES

@@ -2,6 +2,8 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Catalyst.{column, expression}
+import graft.functions.HashEmbed
 
 /** Text → vector: deterministic hashing-trick document embeddings — the
   * missing link between the raw-text head of the pipeline and the
@@ -21,10 +23,9 @@ import org.apache.spark.sql.functions._
   * bit-for-bit on any engine, rounded to 6 for the graded hash.
   *
   * Scale shape: ONE text scan, zero shuffle at any corpus size — the
-  * embedding is a per-row projection (native single-pass scan when the
-  * extensions are registered; an explode → groupBy fallback would
-  * shuffle gram instances, so the fallback instead folds per row with a
-  * HOF — slower, never wider). Feeding `ivfIndexTopK`/`semDedup` from
+  * embedding is a per-row projection, one native pass per row (an
+  * explode → groupBy formulation would shuffle gram instances). Feeding
+  * `ivfIndexTopK`/`semDedup` from
   * raw text is `hashedEmbeddings(docs) → the existing vector operator`;
   * the embedding column's type matches the `embeddings` table contract
   * (`array<double>`).
@@ -32,30 +33,11 @@ import org.apache.spark.sql.functions._
 object Embeddings {
 
   /** Dense signed-count embedding as a Column (`array<int>`, length
-    * `dim`). Native single-pass scan when registered; HOF fold twin
-    * otherwise (spec-pinned bit-equal, NativeEquivalenceSpec).
+    * `dim`): one native pass per row, spec-pinned bit-equal to an HOF
+    * scatter fold (NativeEquivalenceSpec).
     */
   def hashEmbed(text: Column, ns: Seq[Int], dim: Int): Column =
-    if (graft.functions.Native.registered)
-      call_function("graft_hash_embed", text, lit(ns.mkString(",")), lit(dim))
-    else {
-      // per-row fold over raw gram-instance hashes (bucket AND sign both
-      // derive from the same 32-bit prefix) scattered into a dim-array —
-      // O(dim·grams) interpreted, the correct-but-slow extension-less twin
-      val toks = Dedup.tokens(text)
-      val hs = ns.map { n =>
-        transform(
-          sequence(lit(1), greatest(size(toks) - (n - 1), lit(1))),
-          i => Dedup.md5Hash32(concat_ws(" ", slice(toks, i, lit(n)))))
-      }.reduce(concat(_, _))
-      // h < 2^32 so the double quotient is exact; floor(h/dim) matches
-      // the native path's long division bit-for-bit
-      transform(sequence(lit(0), lit(dim - 1)), i =>
-        aggregate(hs, lit(0), (acc, h) =>
-          acc + when((h % dim).cast("int") === i,
-            when(floor(h / dim).cast("long") % 2 === 0, 1).otherwise(-1))
-            .otherwise(0)))
-    }
+    column(HashEmbed(expression(text), ns, dim))
 
   /** `(idCol, emb, norm, vec)` per document: `emb` the exact integer
     * vector, `norm` its L2 norm (rounded 6), `vec` the L2-normalized

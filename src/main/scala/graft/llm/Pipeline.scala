@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Catalyst.{column, expression}
+import graft.functions.{ChunkHashes, GramBuckets, GramTickSum}
 
 /** Corpus-assembly operators for a training-data pipeline: deterministic
   * stratified sampling and token-budget sequence packing. Both are pure
@@ -206,16 +208,15 @@ object Pipeline {
     require(chunkTokens > 0, "chunk: chunkTokens must be positive")
     require(stride > 0 && stride <= chunkTokens,
       "chunk: stride must be in [1, chunkTokens]")
-    // Hot path: one native tokenize-once pass emits every chunk's
+    // Without text: one native tokenize-once pass emits every chunk's
     // (start, len, md5-32) directly ([[graft.functions.ChunkHashes]]);
-    // posexplode's position IS chunk_id. The declarative twin below
-    // re-slices and re-hashes the token array per chunk — spec-pinned
-    // equal, kept for plain sessions and for `withText` (the text
-    // column is only materialized when asked for).
-    if (!withText && graft.functions.Native.registered)
+    // posexplode's position IS chunk_id. `withText` needs the chunk
+    // text itself, so it re-slices the token array per chunk — the
+    // same chunks and hashes, spec-pinned equal.
+    if (!withText)
       docs.select(col(idCol),
-          posexplode(call_function("graft_chunks", col(textCol),
-            lit(chunkTokens), lit(stride))).as(Seq("chunk_id", "_c")))
+          posexplode(column(ChunkHashes(expression(col(textCol)), chunkTokens, stride)))
+            .as(Seq("chunk_id", "_c")))
         .select(col(idCol), col("chunk_id").cast("long").as("chunk_id"),
           col("_c.start_tok").as("start_tok"),
           col("_c.n_tokens").as("n_tokens"),
@@ -228,8 +229,7 @@ object Pipeline {
       val out = Seq(col(idCol), col("chunk_id").cast("long").as("chunk_id"),
         (col("chunk_id") * stride).cast("long").as("start_tok"),
         size(piece).cast("long").as("n_tokens"),
-        Dedup.md5Hash32(ctext).as("chunk_hash")) ++
-        (if (withText) Seq(ctext.as("chunk_text")) else Nil)
+        Dedup.md5Hash32(ctext).as("chunk_hash"), ctext.as("chunk_text"))
       docs.select(col(idCol), Dedup.tokens(col(textCol)).as("_ts"))
         .withColumn("_n", size(col("_ts")))
         .filter(col("_n") > 0)
@@ -391,16 +391,7 @@ object Pipeline {
     * document receives a weight.
     */
   private[llm] def gramBuckets(text: Column, ns: Seq[Int], buckets: Int): Column =
-    if (graft.functions.Native.registered)
-      call_function("graft_gram_buckets", text, lit(ns.mkString(",")), lit(buckets))
-    else {
-      val toks = Dedup.tokens(text)
-      ns.map { n =>
-        transform(
-          sequence(lit(1), greatest(size(toks) - (n - 1), lit(1))),
-          i => Dedup.md5Hash32(concat_ws(" ", slice(toks, i, lit(n)))) % buckets)
-      }.reduce(concat(_, _))
-    }
+    column(GramBuckets(expression(text), ns, buckets))
 
   /** DSIR importance weights (Xie et al. 2023, "Data Selection for
     * Language Models via Importance Resampling"): score every document
@@ -422,10 +413,10 @@ object Pipeline {
     *
     * Scale shape: the two distributions are `buckets`-row aggregations
     * (map-side combined; metadata-sized BY CONSTRUCTION — the paper
-    * uses 10k buckets) joined into ONE broadcast ratio table; scoring
-    * is one exploded scan probing the broadcast plus a
-    * map-side-combined per-doc sum — the same two-phase plan as
-    * [[decontaminate]]. Nothing data-sized converges anywhere.
+    * uses 10k buckets) joined into ONE ratio table, collected to the
+    * driver; scoring is one text-scan projection summing each
+    * document's gram-instance ticks. Nothing data-sized converges
+    * anywhere.
     */
   def importanceWeights(docs: DataFrame, target: DataFrame, idCol: String, textCol: String,
                         ns: Seq[Int] = Seq(1, 2), buckets: Int = 512,
@@ -456,24 +447,19 @@ object Pipeline {
       .select(col("_b"),
         floor((log((col("_ct") + alpha) / (col("_tt") + aB))
           - log((col("_cr") + alpha) / (col("_tr") + aB))) * 1e6 + 0.5).as("_lri"))
-    if (graft.functions.Native.registered) {
-      // The log-ratio table is metadata-sized by construction (<= buckets
-      // rows — the sanctioned collect class), so the scoring probe runs
-      // as ONE text-scan projection: per doc, the integer tick sum over
-      // gram instances (graft_gram_tick_sum, intercept 0), never the
-      // exploded gram stream. Buckets absent from BOTH corpora are
-      // unreachable by any document (same hash), so the 0-fill is inert.
-      // Bit-equal to the explode+join plan below: same ticks, same exact
-      // integer sum, same single /1e6 (spec-pinned, PipelineSpec).
-      val ticks = new Array[Long](buckets)
-      ratio.collect().foreach(r => ticks(r.getLong(0).toInt) = r.getLong(1))
-      docs.select(col(idCol),
-        (call_function("graft_gram_tick_sum", col(textCol),
-          lit(ns.mkString(",")), lit(buckets), lit(0L), lit(ticks)) / 1e6)
-          .as("weight"))
-    } else
-      dg.join(broadcast(ratio), "_b")
-        .groupBy(idCol).agg((sum("_lri") / 1e6).as("weight"))
+    // The log-ratio table is metadata-sized by construction (<= buckets
+    // rows — the sanctioned collect class), so the scoring probe runs as
+    // ONE text-scan projection: per doc, the integer tick sum over gram
+    // instances ([[graft.functions.GramTickSum]], intercept 0), never the
+    // exploded gram stream. Buckets absent from BOTH corpora are
+    // unreachable by any document (same hash), so the 0-fill is inert.
+    // Bit-equal to an explode + broadcast-join + per-doc sum plan: same
+    // ticks, same exact integer sum, same single /1e6 (PipelineSpec).
+    val ticks = new Array[Long](buckets)
+    ratio.collect().foreach(r => ticks(r.getLong(0).toInt) = r.getLong(1))
+    docs.select(col(idCol),
+      (column(GramTickSum(expression(col(textCol)), ns, buckets, 0L, ticks)) / 1e6)
+        .as("weight"))
   }
 
   /** DSIR's selection step: Gumbel-top-k resampling — sampling k

@@ -3,16 +3,18 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Catalyst.{column, expression}
+import graft.functions.TermHits
 
 /** Sparse lexical retrieval over the corpus: BM25 (Robertson-Spärck
   * Jones) top-k scoring of a metadata-sized query set — the retrieval
   * half of a RAG/data-curation stack, and the classic counterexample to
   * "similarity search needs embeddings" at 100 TB.
   *
-  * Scale shape: the corpus tokenizes ONCE as a projection; only tokens
-  * matching a query term survive to the shuffle (the term filter is a
-  * broadcast-literal `isin` applied map-side), so the single data
-  * exchange carries query-term hits, not the corpus. Document frequency,
+  * Scale shape: the corpus tokenizes ONCE, in one native pass per
+  * document ([[graft.functions.TermHits]]: length + per-query-term
+  * frequencies); only (doc, term) pairs with a hit survive, so what
+  * moves downstream is query-term hits, not the corpus. Document frequency,
   * idf, and the query table are all metadata-sized and broadcast. The
   * per-query top-k runs TWO-PHASE — per-input-partition top-k, then
   * top-k of the k×P survivors — so a handful of queries never funnels
@@ -46,42 +48,21 @@ object Retrieval {
     // fuses into ONE native pass over the text (graft_term_hits); the
     // resulting projection is per-doc METADATA (id + a handful of
     // longs), cached so the corpus-stats action and the hits branch
-    // share the single tokenization. Sessions without GraftExtensions
-    // take the declarative twin: tokenize for stats, tokenize again,
-    // explode every token through the term filter, and count per
-    // (doc, term) on a doc-keyed exchange.
-    val (nDocs, avgdl, hits) =
-      if (graft.functions.Native.registered) {
-        val th = docs.select(col(idCol),
-            call_function("graft_term_hits", col(textCol),
-              typedLit(terms)).as("_th"))
-          .cache()
-        val stats = th.agg(count(lit(1)),
-          sum(col("_th.dl")).cast("long")).head()
-        val n = stats.getLong(0)
-        val h = th.filter(col("_th").isNotNull)
-          .select(col(idCol), col("_th.dl").as("_dl"),
-            posexplode(col("_th.tf")).as(Seq("_i", "_tf")))
-          .filter(col("_tf") > 0)
-          .withColumn("_t", element_at(typedLit(terms), col("_i") + 1))
-          .select(col(idCol), col("_t"), col("_tf"), col("_dl"))
-        (n, stats.getLong(1).toDouble / n, h)
-      } else {
-        val toks = docs.select(col(idCol),
-          Dedup.tokens(col(textCol)).as("_ts"))
-        // corpus stats: two exact longs reach the driver; avgdl is ONE
-        // double division of them — both engines divide the same integers
-        val stats = toks.agg(count(lit(1)), sum(size(col("_ts"))).cast("long")).head()
-        val n = stats.getLong(0)
-        val h = toks
-          .select(col(idCol), size(col("_ts")).cast("long").as("_dl"),
-            explode(col("_ts")).as("_t"))
-          .filter(col("_t").isin(terms: _*))
-          .repartition(col(idCol))
-          .groupBy(col(idCol), col("_t"))
-          .agg(count(lit(1)).as("_tf"), max(col("_dl")).as("_dl"))
-        (n, stats.getLong(1).toDouble / n, h)
-      }
+    // share the single tokenization
+    val th = docs.select(col(idCol),
+        column(TermHits(expression(col(textCol)), terms)).as("_th"))
+      .cache()
+    // corpus stats: two exact longs reach the driver; avgdl is ONE
+    // double division of them — both engines divide the same integers
+    val stats = th.agg(count(lit(1)), sum(col("_th.dl")).cast("long")).head()
+    val nDocs = stats.getLong(0)
+    val avgdl = stats.getLong(1).toDouble / nDocs
+    val hits = th.filter(col("_th").isNotNull)
+      .select(col(idCol), col("_th.dl").as("_dl"),
+        posexplode(col("_th.tf")).as(Seq("_i", "_tf")))
+      .filter(col("_tf") > 0)
+      .withColumn("_t", element_at(typedLit(terms), col("_i") + 1))
+      .select(col(idCol), col("_t"), col("_tf"), col("_dl"))
 
     // df over the hits table (already distinct per (doc, term)):
     // |terms| rows, idf quantized to ticks, broadcast back

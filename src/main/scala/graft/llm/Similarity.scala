@@ -3,12 +3,14 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Catalyst.{column, expression}
+import graft.functions.{ArrayDotProduct, PqSubCode}
 
 /** Embedding similarity search and near-duplicate detection.
   *
   * Scale design (100 TB): the brute-force path broadcasts only the (tiny)
   * query set and scans the corpus once — the per-row work is a codegen'd
-  * higher-order-function dot product, no UDF, no driver-side index. The
+  * native dot product, no UDF, no driver-side index. The
   * LSH path buckets vectors by random-hyperplane sign patterns (classic
   * SimHash-for-cosine, multi-table OR-amplification) so the only pairwise
   * work is within a bucket; candidates never go all-pairs.
@@ -135,19 +137,11 @@ object Similarity {
   def asDouble(a: Column): Column = transform(a, x => x.cast("double"))
 
   /** Left-fold dot product — same summation order as a SQL
-    * `list_reduce(list_transform(...))`, so results are bit-identical.
-    * Resolves to the native codegen'd [[graft.functions.ArrayDotProduct]]
-    * when the session registered [[graft.GraftExtensions]], and falls back
-    * to the semantically identical HOF formulation otherwise — callers
-    * never see an unresolved-function error.
+    * `list_reduce(list_transform(...))`, so results are bit-identical —
+    * as the native codegen'd [[graft.functions.ArrayDotProduct]].
     */
   def dot(a: Column, b: Column): Column =
-    if (graft.functions.Native.registered) call_function("graft_dot", a, b)
-    else dotHof(a, b)
-
-  /** HOF fallback for sessions without [[graft.GraftExtensions]]. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
+    column(ArrayDotProduct(expression(a), expression(b)))
 
   def norm(a: Column): Column =
     sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v * v))
@@ -1100,26 +1094,18 @@ object Similarity {
   }
 
   /** PQ code for subspace `j`: index of the L2-nearest codeword,
-    * first-index tiebreak — the argmin runs on TICK distances so the
-    * comparison the oracle replays is integer-exact.
+    * first-index tiebreak — the argmin runs on TICK distances
+    * ([[subDistTicksArr]]'s arithmetic) so the comparison the oracle
+    * replays is integer-exact. One generated loop,
+    * [[graft.functions.PqSubCode]]: left-to-right accumulation, Spark's
+    * HALF_UP tick rounding, low-index ties, pinned bit-equal to the HOF
+    * argmin by NativeEquivalenceSpec. The native expression is ENCODE's
+    * whole cost model: the HOF form allocates per (row, subspace,
+    * codeword) and evaluates interpreted (lambdas are CodegenFallback),
+    * measured ~7× of the ann_pq query at sf1.
     */
   private def subCode(v: Column, book: Array[Array[Double]], j: Int): Column =
-    // the native expression is ENCODE's whole cost model: the HOF twin
-    // below allocates per (row, subspace, codeword) and evaluates
-    // interpreted (lambdas are CodegenFallback) — measured ~7× of the
-    // ann_pq query at sf1; graft_pq_code is the identical arithmetic
-    // (left-to-right accumulation, Spark's HALF_UP tick rounding,
-    // low-index ties) as one generated loop, pinned bit-equal by
-    // NativeEquivalenceSpec
-    if (graft.functions.Native.registered)
-      call_function("graft_pq_code", v,
-        typedLit(book.map(_.toSeq).toSeq), lit(j * book(0).length))
-    else {
-      val scored = zip_with(subDistTicksArr(v, book, j),
-        sequence(lit(0), lit(book.length - 1)),
-        (t, i) => struct(t.as("d"), i.as("c")))
-      element_at(array_sort(scored), 1).getField("c")
-    }
+    column(PqSubCode(expression(v), book, j * book(0).length))
 
   /** Train per-subspace PQ codebooks: `m` subspaces of `dim/m` dims, each
     * with `ksub` codewords from a few L2 Lloyd iterations. Training runs

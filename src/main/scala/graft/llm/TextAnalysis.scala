@@ -2,6 +2,10 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Catalyst.{column, expression}
+import graft.functions.{AsciiRollingHash, BpeApplyRanked, BpeCount, CharSetCount, GramBuckets,
+  GramCounts, LangBest, LangScores, PiiScan, RepetitionStats, SubwordEncode, WordSetCount,
+  WsTokenCount}
 
 /** Text-analysis operators for large-scale training-data pipelines, built
   * entirely from codegen'd `org.apache.spark.sql.functions` (no UDFs): at
@@ -15,17 +19,11 @@ object TextAnalysis {
 
   val FpMod = 1000000007L // fingerprint modulus (fits 31*mod+cp in a long)
 
-  /** Whitespace token count; empty/blank text counts 0. Native
-    * one-scan expression when the extensions are registered
-    * ([[graft.functions.WsTokenCount]], spec-pinned equal); the
-    * trim+split form otherwise.
+  /** Whitespace token count; empty/blank text counts 0. The native
+    * one-scan [[graft.functions.WsTokenCount]] (spec-pinned equal to
+    * the trim+split form).
     */
-  def tokenCount(text: Column): Column =
-    if (graft.functions.Native.registered)
-      call_function("graft_ws_count", text)
-    else
-      when(length(trim(text)) === 0, lit(0L))
-        .otherwise(size(split(trim(text), "\\s+")).cast("long"))
+  def tokenCount(text: Column): Column = column(WsTokenCount(expression(text)))
 
   /** Count of regex matches (codegen'd). */
   def matchCount(text: Column, pattern: String): Column =
@@ -44,55 +42,18 @@ object TextAnalysis {
     * approximates a byte-pair pre-tokenizer's segment count without a
     * vocabulary (e.g. `don't stop` → `don`, `'t`, ` stop` = 3).
     */
-  def bpeTokenCount(text: Column): Column =
-    if (graft.functions.Native.registered)
-      call_function("graft_bpe_count", text)
-    else
-      regexp_count(text, lit(BpePattern)).cast("long")
+  def bpeTokenCount(text: Column): Column = column(BpeCount(expression(text)))
 
   /** REAL vocab-driven subword ids — greedy longest-match against a
-    * broadcast-literal `vocab` (the WordPiece inference rule; −1 =
-    * unknown character): see [[graft.functions.SubwordEncode]] for the
-    * pinned semantics. Native one-trie-pass expression when the
-    * extensions are registered; otherwise an HOF twin that folds over
-    * character positions carrying a (cursor, ids) state — identical
-    * output, spec-pinned (NativeEquivalenceSpec convention). Token
+    * literal `vocab` (the WordPiece inference rule; −1 = unknown
+    * character): see [[graft.functions.SubwordEncode]] for the pinned
+    * semantics. One native trie pass per row (spec-pinned equal to an
+    * HOF fold over character positions, NativeEquivalenceSpec). Token
     * BUDGETS for packing/chunking come from `size(subwordIds(...))` —
     * vocabulary-real counts, not the [[BpePattern]] regex approximation.
     */
   def subwordIds(text: Column, vocab: Seq[String]): Column =
-    if (graft.functions.Native.registered)
-      call_function("graft_subword_encode", text, array(vocab.map(lit): _*))
-    else {
-      // HOF twin: per word, fold positions 1..len; state = (cursor, ids).
-      // A position below the cursor is already consumed; at the cursor,
-      // the longest vocab prefix wins (vocab pre-sorted length-desc so
-      // the FIRST filter survivor is the winner), else -1 consumes one
-      // char. O(len × |vocab|) per row — the documented fallback cost.
-      val ordered = vocab.zipWithIndex.sortBy { case (w, i) => (-w.length, i) }
-      val vlit = array(ordered.map { case (w, i) =>
-        struct(lit(w).as("w"), lit(i).as("id"))
-      }: _*)
-      val words = filter(split(text, "\\s+"), w => length(w) > 0)
-      val perWord = transform(words, w =>
-        aggregate(
-          sequence(lit(1), length(w)),
-          struct(lit(1).as("cur"), array().cast("array<int>").as("ids")),
-          (st, pos) => {
-            val hit = try_element_at(filter(vlit,
-              v => pos === st.getField("cur") &&
-                substring(w, pos, length(v.getField("w"))) === v.getField("w")), lit(1))
-            when(pos < st.getField("cur"), st)
-              .when(hit.isNotNull,
-                struct((pos + length(hit.getField("w"))).as("cur"),
-                  concat(st.getField("ids"), array(hit.getField("id"))).as("ids")))
-              .otherwise(
-                struct((pos + 1).as("cur"),
-                  concat(st.getField("ids"), array(lit(-1))).as("ids")))
-          },
-          st => st.getField("ids")))
-      when(text.isNotNull, flatten(perWord))
-    }
+    column(SubwordEncode(expression(text), vocab))
 
   /** BPE vocab TRAINING — the classic merge loop (Sennrich et al. 2016,
     * public knowledge), distributed the way the algorithm itself is
@@ -263,35 +224,17 @@ object TextAnalysis {
     * agrees (the train contract's determinism argument, verbatim).
     *
     * Execution: merges are LITERALS (the metadata-sized trained
-    * artifact, the frozen-centroid doctrine), so the whole per-word
-    * loop unrolls at PLAN TIME into a chain of codegen'd `replace`
-    * calls inside one `transform` — a pure zero-shuffle projection at
-    * any corpus size; cost is `nMerges` linear scans of each word,
-    * with no per-row interpretation.
+    * artifact, the frozen-centroid doctrine) of one native pass,
+    * [[graft.functions.BpeApplyRanked]]: each distinct word per task is
+    * encoded once by imperative splices — a pure zero-shuffle projection
+    * at any corpus size, spec-pinned bit-equal to the chain of literal
+    * `replace` calls (which paid nMerges string rebuilds per token
+    * INSTANCE: measured 180 s at docs×100, native ~its tokenize cost).
+    * Empty `merges` runs zero splices: each word comes back split into
+    * its characters.
     */
-  def bpeApplyRanked(text: Column, merges: Seq[(String, String)]): Column = {
-    require(merges.forall { case (l, r) => l.nonEmpty && r.nonEmpty &&
-      !l.contains("<") && !l.contains(">") && !r.contains("<") && !r.contains(">") },
-      "bpeApplyRanked: merge symbols must be non-empty without < or > (the train contract)")
-    if (merges.nonEmpty && graft.functions.Native.registered)
-      // one memoized imperative pass per distinct word per task
-      // ([[graft.functions.BpeApplyRanked]], spec-pinned bit-equal): the
-      // declarative chain below pays nMerges string rebuilds per token
-      // INSTANCE (measured 180 s at docs×100, native ~its tokenize cost)
-      call_function("graft_bpe_ranked", text,
-        array(merges.map { case (l, r) => array(lit(l), lit(r)) }: _*))
-    else {
-      val words = filter(split(text, "\\s+"), w => length(w) > 0)
-      flatten(transform(words, w => {
-        val wrapped = concat_ws("",
-          transform(split(w, ""), c => concat(lit("<"), c, lit(">"))))
-        val merged = merges.foldLeft(wrapped) { case (s, (l, r)) =>
-          call_function("replace", s, lit(s"<$l><$r>"), lit(s"<$l$r>"))
-        }
-        split(regexp_replace(merged, "^<|>$", ""), "><")
-      }))
-    }
-  }
+  def bpeApplyRanked(text: Column, merges: Seq[(String, String)]): Column =
+    column(BpeApplyRanked(expression(text), merges))
 
   /** Per-language stopword lists for the language-ID heuristic. Order is
     * the deterministic tie-break order.
@@ -303,39 +246,28 @@ object TextAnalysis {
     "es" -> Seq("el", "los", "de", "y", "un", "es", "que", "en", "una", "por"),
   )
 
-  private def stopwordPattern(words: Seq[String]): String =
-    words.mkString("\\b(", "|", ")\\b")
-
-  /** `matchCount(lowered, stopwordPattern(words))` — native
-    * boundary-delimited literal-word scan when registered.
+  /** Count of boundary-delimited `words` in `lowered` — the native
+    * literal-word scan, equal to `matchCount` of `\b(w1|w2|…)\b`.
     */
   private def stopwordCount(lowered: Column, words: Seq[String]): Column =
-    if (graft.functions.Native.registered)
-      call_function("graft_word_count", lowered, array(words.map(lit): _*))
-    else matchCount(lowered, stopwordPattern(words))
+    column(WordSetCount(expression(lowered), words))
 
-  /** `matchCount(text, "[<chars>]")` for a plain ASCII char set —
-    * native set-membership scan when registered.
+  /** Count of characters from a plain ASCII set — the native
+    * set-membership scan, equal to `matchCount` of `[<chars>]`.
     */
-  private def charSetCount(text: Column, chars: String, pattern: String): Column =
-    if (graft.functions.Native.registered)
-      call_function("graft_charset_count", text, lit(chars))
-    else matchCount(text, pattern)
+  private def charSetCount(text: Column, chars: String): Column =
+    column(CharSetCount(expression(text), chars))
 
   /** Per-language stopword-hit counts over lowercased text. */
   def langScores(text: Column): Seq[(String, Column)] =
     langScoresLowered(lower(text))
 
   /** ALL language scores as ONE array column (order = [[LangStopwords]]
-    * order) — the fused single-scan native expression when registered
-    * (alias the result ONCE in its own projection, then `element_at` —
-    * the CSE rule), an array of the per-language scans otherwise.
+    * order) — the fused single-scan native expression (alias the result
+    * ONCE in its own projection, then `element_at` — the CSE rule).
     */
   def langScoresArray(lowered: Column): Column =
-    if (graft.functions.Native.registered)
-      call_function("graft_lang_scores", lowered,
-        array(LangStopwords.map { case (_, ws) => array(ws.map(lit): _*) }: _*))
-    else array(langScoresLowered(lowered).map(_._2): _*)
+    column(LangScores(expression(lowered), LangStopwords.map(_._2)))
 
   /** [[langScores]] over a PRE-LOWERED column — alias `lower(text)`
     * once in its own projection when scoring several languages: the
@@ -348,29 +280,16 @@ object TextAnalysis {
       lang -> stopwordCount(lowered, words)
     }
 
-  /** The WHOLE language-ID row from one fused scan when registered —
-    * `struct(scores, best)` via `graft_lang_best`, so the argmax rides
-    * the counting pass instead of a greatest/when-chain projection;
-    * falls back to [[langScoresArray]] + a declarative argmax struct
-    * (identical values, spec-pinned). Alias ONCE in its own projection,
-    * then read `.getField("scores")`/`.getField("best")`; map `best`
-    * (−1 = "und") to names with [[langNameFromBest]].
+  /** The WHOLE language-ID row from one fused scan —
+    * `struct(scores, best)` via [[graft.functions.LangBest]], so the
+    * argmax rides the counting pass instead of a greatest/when-chain
+    * projection (spec-pinned equal to [[langScoresArray]] +
+    * [[langIdFromScores]]). Alias ONCE in its own projection, then read
+    * `.getField("scores")`/`.getField("best")`; map `best` (−1 = "und")
+    * to names with [[langNameFromBest]].
     */
   def langBestStruct(lowered: Column): Column =
-    if (graft.functions.Native.registered)
-      call_function("graft_lang_best", lowered,
-        array(LangStopwords.map { case (_, ws) => array(ws.map(lit): _*) }: _*))
-    else {
-      val scores = langScoresLowered(lowered).map(_._2)
-      val best = scores.zipWithIndex.foldLeft(lit(-1)) { case (acc, (s, i)) =>
-        // strictly-greater keeps the FIRST max (the argmax tie-break)
-        when(s > coalesce(
-          scores.zipWithIndex.filter(_._2 < i).map(_._1)
-            .reduceOption((a, b) => greatest(a, b)).getOrElse(lit(0L)),
-          lit(0L)) && s > 0, lit(i)).otherwise(acc)
-      }
-      struct(array(scores: _*).as("scores"), best.as("best"))
-    }
+    column(LangBest(expression(lowered), LangStopwords.map(_._2)))
 
   /** Map [[langBestStruct]]'s `best` index to the language name
     * ("und" for −1).
@@ -444,14 +363,11 @@ object TextAnalysis {
     val safeTok = when(nTokens === 0, lit(1L)).otherwise(nTokens)
     val safeChr = when(nChars === 0, lit(1L)).otherwise(nChars)
     // non-ws codepoint count: length minus the ASCII \s chars (each one
-    // codepoint) — native path skips the regex strip's full string copy
-    val nonWs =
-      if (graft.functions.Native.registered)
-        nChars - call_function("graft_charset_count", text, lit(" \t\n\u000B\f\r"))
-      else length(regexp_replace(text, "\\s", "")).cast("long")
+    // codepoint) — no regex strip, no string copy
+    val nonWs = nChars - charSetCount(text, " \t\n\u000B\f\r")
     val meanTokLen = nonWs.cast("double") / safeTok
-    val punct = charSetCount(text, ".,;:!?", "[.,;:!?]").cast("double") / safeChr
-    val digit = charSetCount(text, "0123456789", "[0-9]").cast("double") / safeChr
+    val punct = charSetCount(text, ".,;:!?").cast("double") / safeChr
+    val digit = charSetCount(text, "0123456789").cast("double") / safeChr
     val stop  = stopwordCount(lower(text), LangStopwords.head._2).cast("double") / safeTok
     val lenScore = least(nChars.cast("double") / lit(200.0), lit(1.0))
     val score = lenScore * 0.4 +
@@ -479,62 +395,22 @@ object TextAnalysis {
     * fingerprint differently. Within ASCII, char == code unit == code
     * point == UTF-8 byte.
     *
-    * Resolves to the native codegen'd
-    * [[graft.functions.AsciiRollingHash]] — one pass over the UTF-8 bytes,
-    * no per-character substring allocation — when the session registered
-    * [[graft.GraftExtensions]], and falls back to the semantically
-    * identical [[fingerprintHof]] otherwise.
+    * The native codegen'd [[graft.functions.AsciiRollingHash]]: one pass
+    * over the UTF-8 bytes, no per-character substring allocation.
     */
-  def fingerprint(text: Column): Column =
-    if (graft.functions.Native.registered) call_function("graft_fingerprint", text)
-    else fingerprintHof(text)
-
-  /** HOF fallback for sessions without [[graft.GraftExtensions]]. */
-  def fingerprintHof(text: Column): Column = {
-    val asciiOnly = regexp_replace(text, "[^\\x00-\\x7F]", "")
-    aggregate(
-      transform(filter(split(asciiOnly, ""), c => c =!= ""), c => ascii(c).cast("long")),
-      lit(0L),
-      (acc, cp) => (acc * 31L + cp) % FpMod,
-    )
-  }
+  def fingerprint(text: Column): Column = column(AsciiRollingHash(expression(text), FpMod))
 
   /** Within-document repetition statistics (the Gopher-rule quality
     * family: Rae et al. 2021 filter documents whose most frequent word,
     * duplicate words, or most frequent n-gram take too large a
     * fraction): `struct(n_tokens, top_word_frac, dup_word_frac,
-    * top_bigram_frac)` over lowercased whitespace tokens. Resolves to
-    * the one-pass native [[graft.functions.RepetitionStats]] when the
-    * session registered `graft.GraftExtensions`; the HOF twin counts
-    * each distinct token by re-filtering the token array — O(distinct ×
-    * n) per document, correct everywhere but quadratic on
-    * low-redundancy text, so the native path is the scale answer.
-    * Fractions are unrounded here so both paths produce bit-identical
-    * doubles; round at the call site.
+    * top_bigram_frac)` over lowercased whitespace tokens: one hash-map
+    * pass per row ([[graft.functions.RepetitionStats]]). An HOF
+    * formulation would re-filter the token array per distinct token —
+    * O(distinct × n) per document, quadratic on low-redundancy text.
+    * Fractions are unrounded here; round at the call site.
     */
-  def repetitionStruct(text: Column): Column =
-    if (graft.functions.Native.registered) call_function("graft_repetition", text)
-    else repetitionHof(text)
-
-  /** HOF fallback for sessions without [[graft.GraftExtensions]]. */
-  def repetitionHof(text: Column): Column = {
-    val toks = graft.llm.Dedup.tokens(text)
-    val n = size(toks)
-    val cnts = transform(array_distinct(toks), t => size(filter(toks, x => x === t)))
-    val topW = when(n === 0, lit(0.0)).otherwise(array_max(cnts).cast("double") / n)
-    val dupW = when(n === 0, lit(0.0)).otherwise(
-      aggregate(cnts, lit(0), (a, c) => a + when(c >= 2, c).otherwise(lit(0)))
-        .cast("double") / n)
-    val bgs = transform(sequence(lit(1), n - 1), i => concat_ws(" ", slice(toks, i, lit(2))))
-    val topB = when(n < 2, lit(0.0)).otherwise(
-      array_max(transform(array_distinct(bgs), g => size(filter(bgs, x => x === g))))
-        .cast("double") / (n - 1))
-    when(text.isNotNull, struct(
-      n.cast("long").as("n_tokens"),
-      topW.as("top_word_frac"),
-      dupW.as("dup_word_frac"),
-      topB.as("top_bigram_frac")))
-  }
+  def repetitionStruct(text: Column): Column = column(RepetitionStats(expression(text)))
 
   /** Per-document repetition DataFrame: `idCol, n_tokens,
     * top_word_frac, dup_word_frac, top_bigram_frac` (fractions rounded
@@ -626,9 +502,8 @@ object TextAnalysis {
     * Scale shape: two training aggregations (map-side combined,
     * metadata-sized outputs ≤ uniBuckets/bigBuckets rows) broadcast to
     * one scoring scan — three scans total, nothing data-sized shuffles
-    * except the per-doc integer sum. Native one-pass gram hashing
-    * (`graft_gram_buckets`) on the hot path, HOF fallback in plain
-    * sessions.
+    * except the per-doc integer sum. Gram hashing is the native
+    * one-pass [[graft.functions.GramBuckets]].
     */
   def bigramNll(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
                 model: Option[DataFrame] = None,
@@ -638,14 +513,7 @@ object TextAnalysis {
     require(alpha > 0, "bigramNll: alpha must be positive (a zero bucket has no finite log)")
     import org.apache.spark.sql.functions.broadcast
     def gramB(text: Column, n: Int, buckets: Int): Column =
-      if (graft.functions.Native.registered)
-        call_function("graft_gram_buckets", text, lit(n.toString), lit(buckets))
-      else {
-        val toks = Dedup.tokens(text)
-        transform(
-          sequence(lit(1), greatest(size(toks) - (n - 1), lit(1))),
-          i => Dedup.md5Hash32(concat_ws(" ", slice(toks, i, lit(n)))) % buckets)
-      }
+      column(GramBuckets(expression(text), Seq(n), buckets))
     val train = model.getOrElse(docs)
     val qu = train.select(explode(gramB(col(textCol), 1, uniBuckets)).as("_bu"))
       .groupBy("_bu").agg(count(lit(1)).as("_cu"))
@@ -698,8 +566,8 @@ object TextAnalysis {
     *
     * Scale shape: ONE corpus scan — both count tables come from a single
     * tagged aggregation (a bigram is emitted as `"w1 w2"`, unambiguous
-    * because tokens cannot contain whitespace). On the native path the
-    * scan is `graft_gram_counts` — a per-document hash-map pass that
+    * because tokens cannot contain whitespace). The scan is
+    * [[graft.functions.GramCounts]] — a per-document hash-map pass that
     * pre-aggregates in-doc repeats, so the explode emits distinct grams
     * per doc, not instances (the original two-scan instance-explode
     * formulation measured 10.9 s at 500k docs; this one 6.3 s). The
@@ -717,20 +585,8 @@ object TextAnalysis {
     require(k >= 1, "collocations: k must be >= 1")
     import org.apache.spark.sql.functions.broadcast
     val counts = scope.cache(
-      if (graft.functions.Native.registered)
-        // one hash-map pass per document pre-aggregates in-doc repeats,
-        // so the explode emits DISTINCT grams per doc, not instances
-        docs.select(explode(call_function("graft_gram_counts", col(textCol))).as("_e"))
-          .groupBy(col("_e.g").as("_g")).agg(sum(col("_e.c")).as("_c"))
-      else {
-        val base = docs.select(Dedup.tokens(col(textCol)).as("_ts"))
-        val bigrams = when(size(col("_ts")) >= 2,
-          transform(sequence(lit(1), size(col("_ts")) - 1), i =>
-            concat_ws(" ", element_at(col("_ts"), i), element_at(col("_ts"), i + 1))))
-          .otherwise(array().cast("array<string>"))
-        base.select(explode(concat(col("_ts"), bigrams)).as("_g"))
-          .groupBy("_g").agg(count(lit(1)).as("_c"))
-      })
+      docs.select(explode(column(GramCounts(expression(col(textCol))))).as("_e"))
+        .groupBy(col("_e.g").as("_g")).agg(sum(col("_e.c")).as("_c")))
     val uni = counts.filter(!col("_g").contains(" "))
     val cb = counts.filter(col("_g").contains(" "))
       .select(split(col("_g"), " ").getItem(0).as("w1"),
@@ -765,52 +621,41 @@ object TextAnalysis {
     ("ip", "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b", "<IP>"),
   )
 
-  /** Per-kind PII match counts (codegen'd `regexp_count` projections). */
+  /** Per-kind PII match counts (codegen'd `regexp_count` projections) —
+    * the declarative form of [[piiAnalysis]]'s counts.
+    */
   def piiCols(text: Column): Seq[(String, Column)] =
     PiiPatterns.map { case (kind, pat, _) => s"n_$kind" -> matchCount(text, pat) }
 
   /** Text with every PII match replaced by its placeholder, applied in
     * [[PiiPatterns]] order (email first: an IP-shaped string inside an
     * email domain is redacted as part of the email, never double-hit).
-    * Pure per-row projection — zero shuffle at any corpus size. Native
-    * single-scan when the extensions are registered (one struct field
-    * read = one evaluation); the regex chain otherwise.
+    * Pure per-row projection — zero shuffle at any corpus size: the
+    * native single scan [[graft.functions.PiiScan]] (one struct field
+    * read = one evaluation), spec-pinned equal to the sequential
+    * `regexp_replace` chain.
     */
   def redactPii(text: Column): Column =
-    if (graft.functions.Native.registered)
-      call_function("graft_pii_scan", text).getField("redacted")
-    else
-      PiiPatterns.foldLeft(text) { case (t, (_, pat, rep)) =>
-        regexp_replace(t, pat, rep)
-      }
+    column(PiiScan(expression(text))).getField("redacted")
 
   /** The combined PII table over a corpus: `(idCol, n_email, n_phone,
     * n_ip, red_fp)` — counts over the original text, fingerprint of the
-    * sequentially-redacted text. Native path: ONE `graft_pii_scan`
-    * struct aliased in its own projection (the SubwordEncode CSE rule —
-    * four getFields of an inlined non-cheap expression would evaluate
-    * the scan four times), then the fingerprint over the redacted
-    * field. Declarative path: the regex chain (6 regex passes).
+    * sequentially-redacted text. ONE [[graft.functions.PiiScan]] struct
+    * aliased in its own projection (the SubwordEncode CSE rule — four
+    * getFields of an inlined non-cheap expression would evaluate the
+    * scan four times), then the fingerprint over the redacted field.
     */
   def piiAnalysis(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    if (graft.functions.Native.registered)
-      df.select(col(idCol),
-          call_function("graft_pii_scan", col(textCol)).as("_pii"))
-        .select(col(idCol),
-          col("_pii.n_email").as("n_email"),
-          col("_pii.n_phone").as("n_phone"),
-          col("_pii.n_ip").as("n_ip"),
-          fingerprint(col("_pii.redacted")).as("red_fp"))
-    else
-      df.select(col(idCol) +:
-        piiCols(col(textCol)).map { case (n, c) => c.as(n) } :+
-        fingerprint(redactPii(col(textCol))).as("red_fp"): _*)
+    df.select(col(idCol), column(PiiScan(expression(col(textCol)))).as("_pii"))
+      .select(col(idCol),
+        col("_pii.n_email").as("n_email"),
+        col("_pii.n_phone").as("n_phone"),
+        col("_pii.n_ip").as("n_ip"),
+        fingerprint(col("_pii.redacted")).as("red_fp"))
 
-  /** The full analysis DataFrame over a `documents`-shaped table. Safe in
-    * ANY session: [[fingerprint]] probes [[graft.functions.Native]] and
-    * uses the codegen'd native expression when `graft.GraftExtensions` is
-    * registered, the HOF twin otherwise (e.g. the driver's smoke session
-    * running `SparkEntry.entry`).
+  /** The full analysis DataFrame over a `documents`-shaped table. Runs
+    * in any session, with or without `spark.sql.extensions`: the native
+    * expressions are built directly, not looked up by name.
     */
   def analyze(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val t = col(textCol)

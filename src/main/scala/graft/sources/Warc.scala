@@ -74,70 +74,36 @@ object Warc {
         Seq(col("_rec.uri").as("uri"), col("_rec.ok").as("ok"),
           col("_rec.payload").as("payload")): _*)
 
-  /** Read `.warc.wet.gz`-style files into `(path, ok, blob)` — the
-    * COMPRESSED crawl head: real CommonCrawl drops ship one gzip file
-    * per WET segment, and gzip is not splittable, so the unit of
-    * parallelism is the FILE (Spark's `binaryFile` source reads one
-    * whole file per row — the same one-file-one-task contract as the
-    * HDF5 migration path, sources/Hdf5Opset.scala). Parallelism at
-    * 100 TB comes from the segment count (CommonCrawl ships ~72k
-    * segments per crawl), not from splitting within a member.
+  /** Read `.warc.wet.gz`-style files into one row per WARC record,
+    * `(path, gz_ok, uri, ok, payload)` — the COMPRESSED crawl head: real
+    * CommonCrawl drops ship one gzip file per WET segment, and gzip is
+    * not splittable, so the unit of parallelism is the FILE (Spark's
+    * `binaryFile` source reads one whole file per row — the same
+    * one-file-one-task contract as the HDF5 migration path,
+    * sources/Hdf5Opset.scala). Parallelism at 100 TB comes from the
+    * segment count (CommonCrawl ships ~72k segments per crawl), not from
+    * splitting within a member.
     *
     * The gunzip is the justified per-partition codec call (the
     * [[graft.llm.Multimodal]] exception): `GZIPInputStream` reads
     * CONCATENATED members transparently, which matters because real
-    * `.warc.gz` files are per-RECORD gzip members back to back —
-    * either layout inflates to the same record stream. Truncated or
-    * non-gzip bytes degrade to `ok = false` with whatever prefix
-    * inflated (never throw); compose [[extractRecords]] on `blob`,
-    * whose per-record Content-Length check then bounds any damage to
-    * the affected tail records.
-    */
-  def readGzip(spark: org.apache.spark.sql.SparkSession, path: String,
-               maxInflatedBytes: Int = 1 << 30): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (p, bytes) =>
-        val out = new java.io.ByteArrayOutputStream()
-        var ok = true
-        try {
-          val in = new java.util.zip.GZIPInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          val buf = new Array[Byte](64 * 1024)
-          var n = in.read(buf)
-          while (n > 0 && out.size <= maxInflatedBytes) {
-            out.write(buf, 0, n)
-            n = in.read(buf)
-          }
-          if (out.size > maxInflatedBytes) ok = false // bomb guard: truncate loudly
-        } catch {
-          case _: java.io.IOException => ok = false // truncated/corrupt member
-        }
-        (p, ok, new String(out.toByteArray, "UTF-8"))
-      }).toDF("path", "ok_gzip", "blob")
-  }
-
-  /** The RECORD-STREAMED compressed read — [[readGzip]] + [[records]]
-    * fused so the whole inflated segment NEVER materializes: the
-    * gunzip stream is split at `WARC/1.0\n` boundaries AS IT INFLATES
-    * and each record emits as its own row, `(path, gz_ok, uri, ok,
-    * payload)`. This is the production path for real WET drops —
-    * [[readGzip]]'s whole-blob form holds compressed bytes + an
-    * inflated copy + a UTF-16 blob String at once (~3× the inflated
-    * segment transient per task — fine on a fat driver box, an
+    * `.warc.gz` files are per-RECORD gzip members back to back — either
+    * layout inflates to the same record stream. The stream is split at
+    * `WARC/1.0\n` boundaries AS IT INFLATES and each record emits as its
+    * own row, so the whole inflated segment NEVER materializes: peak
+    * per-task memory is the compressed file plus ONE record
+    * (`maxRecordBytes` bounds it — an over-cap record truncates to
+    * `gz_ok = false`, later records unaffected). A whole-blob read would
+    * hold compressed bytes + an inflated copy + a UTF-16 blob String at
+    * once (~3× the inflated segment transient per task — an
     * executor-OOM hazard at 32 tasks × 8–16 GiB executors reading
-    * ~400 MB-inflated members); here peak per-task memory is the
-    * compressed file plus ONE record (`maxRecordBytes` bounds it — an
-    * over-cap record truncates to `gz_ok = false`, later records
-    * unaffected).
+    * ~400 MB-inflated members).
     *
     * Split semantics are [[records]]' exactly: the 9-byte ASCII
     * delimiter can never appear inside a multi-byte UTF-8 char, so
     * byte-level scanning equals the declarative regex split
-    * (spec-pinned equal to `extractRecords(readGzip(…))` on
-    * single-member, concatenated-member, and corrupt fixtures).
+    * (spec-pinned equal to [[extractRecords]] over whole inflated blobs
+    * on single-member, concatenated-member, and corrupt fixtures).
     * Truncated/corrupt gzip degrades: records fully inflated before
     * the error keep `gz_ok = true`, the partial tail record emits with
     * `gz_ok = false`, and the per-record Content-Length check (`ok`)
@@ -163,9 +129,8 @@ object Warc {
           // non-gzip bytes — degrade to a SENTINEL row, not silence:
           // `truncated` starts true so the EOF flush emits one
           // (path, gz_ok=false, "") row even though no record bytes ever
-          // inflated (the whole-blob twin surfaces the same damage as
-          // its ok_gzip=false row; a zero-row degrade made file-level
-          // damage unobservable downstream — advisor, round 16)
+          // inflated (a zero-row degrade would make file-level damage
+          // unobservable downstream)
           private val in: java.io.InputStream =
             try new java.util.zip.GZIPInputStream(
               new java.io.ByteArrayInputStream(bytes))

@@ -12,8 +12,8 @@ object EntryProbeMain {
     spark.sparkContext.setLogLevel("ERROR")
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY rows=$n")
-    // graft-function call sites must fall back to their HOF twins here
-    // (no GraftExtensions in this session)
+    // graft's operators build their native expressions directly, so
+    // these queries run on the native path with no GraftExtensions
     for (q <- Seq("ann_topk", "text_fingerprint", "dedup_minhash_sig", "dedup_jaccard",
         "text_collocations", "text_perplexity", "text_repetition")) {
       val c = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()

@@ -19,7 +19,7 @@ class ArrayDotProductSpec extends SparkSpec {
   test("matches the HOF dot product bit-for-bit") {
     val out = df.select($"id",
         Similarity.dot($"a", $"b").as("native"),
-        Similarity.dotHof($"a", $"b").as("hof"))
+        graft.llm.ReferenceTwins.dotHof($"a", $"b").as("hof"))
       .collect()
     out.foreach(r => assert(r.getDouble(1) === r.getDouble(2)))
     assert(out.find(_.getLong(0) == 1L).get.getDouble(1) === 32.0)
@@ -39,7 +39,7 @@ class ArrayDotProductSpec extends SparkSpec {
     ).toDF("id", "a", "b")
     val rows = weird.select($"id",
       Similarity.dot($"a", $"b").as("native"),
-      Similarity.dotHof($"a", $"b").as("hof")).collect()
+      graft.llm.ReferenceTwins.dotHof($"a", $"b").as("hof")).collect()
     rows.foreach { r =>
       assert(r.isNullAt(1) === r.isNullAt(2), s"id ${r.getLong(0)}")
       assert(r.isNullAt(1))

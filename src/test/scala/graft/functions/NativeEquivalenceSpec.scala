@@ -37,7 +37,7 @@ class NativeEquivalenceSpec extends SparkSpec {
     val df = (sampled(genText, 300, 7L) :+ null).toDF("text")
     val bad = df.select(col("text"),
         Dedup.distinctNgramHashes(col("text"), 5).as("nat"),
-        array_distinct(transform(Dedup.charShingles(col("text"), 5),
+        array_distinct(transform(graft.llm.ReferenceTwins.charShingles(col("text"), 5),
           g => declMd5(g))).as("dec"))
       .filter(not(col("nat") <=> col("dec")))
     assert(bad.count() === 0L, bad.collect().take(3).mkString("\n"))
@@ -62,7 +62,7 @@ class NativeEquivalenceSpec extends SparkSpec {
     val df = (sampled(genText, 300, 17L) :+ null).toDF("text")
     val bad = df.select(col("text"),
         call_function("graft_repetition", col("text")).as("nat"),
-        graft.llm.TextAnalysis.repetitionHof(col("text")).as("dec"))
+        graft.llm.ReferenceTwins.repetitionHof(col("text")).as("dec"))
       .filter(not(col("nat") <=> col("dec")))
     assert(bad.count() === 0L, bad.collect().take(3).mkString("\n"))
   }
@@ -107,8 +107,9 @@ class NativeEquivalenceSpec extends SparkSpec {
     "bucket votes, quotient-parity sign)") {
     import graft.llm.Embeddings
     val dim = 16
-    // the fallback arm of hashEmbed IS the declarative twin; force it by
-    // building the HOF form explicitly (Native stays registered)
+    // the declarative twin: per-row scatter fold over raw gram-instance
+    // hashes (bucket AND sign both derive from the same 32-bit prefix);
+    // h < 2^32 so the double quotient is exact
     val toks = Dedup.tokens(col("text"))
     val hs = Seq(1, 2).map { n =>
       transform(
@@ -161,7 +162,7 @@ class NativeEquivalenceSpec extends SparkSpec {
       sampled(Gen.listOfN(d, genVal).map(_.toArray), 8, 99L).toArray
     val df = vecs.map(v => Tuple1(v.toSeq)).toDF("v")
     (0 until m).foreach { j =>
-      // HOF twin inlined (the Similarity private formulation)
+      // HOF twin inlined (Similarity.subDistTicksArr + a (ticks, index) argmin)
       val sv = slice(col("v"), j * d + 1, d)
       val cwLit = array(book.map(cw =>
         array(cw.map(lit): _*)): _*)
@@ -207,9 +208,9 @@ class NativeEquivalenceSpec extends SparkSpec {
     val vocab = Seq("a", "b", "c", "ab", "abc", "th", "the", "q", "1", "水", "é")
     val native = call_function("graft_subword_encode", col("text"),
       array(vocab.map(lit): _*))
-    // the HOF twin from TextAnalysis.subwordIds' fallback branch, inlined
-    // against the same vocab (Native.registered is true in this session,
-    // so calling subwordIds would just take the native path twice)
+    // the HOF twin, inlined against the same vocab: per word, fold
+    // positions 1..len carrying (cursor, ids); vocab sorted length-desc
+    // so the FIRST filter survivor is the longest match
     val ordered = vocab.zipWithIndex.sortBy { case (w, i) => (-w.length, i) }
     val vlit = array(ordered.map { case (w, i) =>
       struct(lit(w).as("w"), lit(i).as("id"))
@@ -418,7 +419,7 @@ class NativeEquivalenceSpec extends SparkSpec {
       .toDF("h")
     for ((mw, mld) <- Seq((3, 0.33), (0, 1.0), (1, 0.0), (2, 0.5))) {
       val nat = call_function("graft_html_extract", col("h"), lit(mw), lit(mld))
-      val dec = graft.llm.Html.extractTextDeclarative(col("h"), mw, mld)
+      val dec = graft.llm.ReferenceTwins.extractTextDeclarative(col("h"), mw, mld)
       val bad = df.select(col("h"), nat.as("nat"), dec.as("dec"))
         .filter(not(col("nat") <=> col("dec")))
       assert(bad.count() === 0L,
@@ -472,7 +473,7 @@ class NativeEquivalenceSpec extends SparkSpec {
     for ((ct, st) <- Seq((4, 3), (4, 4), (1, 1), (7, 2))) {
       val nat = graft.llm.Pipeline.chunk(df, "doc_id", "text", ct, st)
       assert(nat.queryExecution.analyzed.toString.contains("graft_chunks"),
-        "native path must engage under the extensions-enabled test session")
+        "chunk without text must plan the native expression")
       assert(nat.exceptAll(decl(ct, st)).count() === 0L)
       assert(decl(ct, st).exceptAll(nat).count() === 0L)
     }

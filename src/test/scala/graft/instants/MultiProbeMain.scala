@@ -39,10 +39,10 @@ object MultiProbeMain {
       val s1c = s1.cache()
       t("stage1 cache materialize")(s1c.count())
       t("eps agg from CACHED stage1")(
-        Indicators.epsilonsFromSg(s1c, "record", "t", combos, 2, "_bk"))
+        ReferenceTwins.epsilonsFromSg(s1c, "record", "t", combos, 2, "_bk"))
       s1c.unpersist(true)
       t("eps agg from UNCACHED stage1")(
-        Indicators.epsilonsFromSg(s1, "record", "t", combos, 2, "_bk"))
+        ReferenceTwins.epsilonsFromSg(s1, "record", "t", combos, 2, "_bk"))
       val (bankDf, _) = t("bank build (epsilon job inside)")(
         Indicators.bank(base, "record", "t", codes, 2))
       t("bank output count")(bankDf.count())

@@ -52,8 +52,8 @@ class SelectorSpec extends SparkSpec {
         .toDF("record", "t", "value"))
       .withColumn("v2", col("value") * col("value"))
     val combos = Seq(("value", 7, 1), ("value", 9, 0), ("v2", 7, 1), ("value", 15, 2))
-    val viaArray = Indicators.epsilonsArray(mixed, "record", "t", combos, 2)
-    val viaWindow = Indicators.epsilonsFromSg(
+    val viaArray = Indicators.epsilons(mixed, "record", "t", combos, 2)
+    val viaWindow = ReferenceTwins.epsilonsFromSg(
       Indicators.withStage1Sg(mixed, "record", "t", combos, 2, "_eq"),
       "record", "t", combos, 2, "_eq")
     assert(viaArray.keySet === viaWindow.keySet)
@@ -65,9 +65,9 @@ class SelectorSpec extends SparkSpec {
     // a combo no record can satisfy must fail loudly on both paths
     val tooWide = Seq(("value", 31, 1))
     intercept[IllegalArgumentException](
-      Indicators.epsilonsArray(mixed, "record", "t", tooWide, 2))
+      Indicators.epsilons(mixed, "record", "t", tooWide, 2))
     intercept[IllegalArgumentException](
-      Indicators.epsilonsFromSg(
+      ReferenceTwins.epsilonsFromSg(
         Indicators.withStage1Sg(mixed, "record", "t", tooWide, 2, "_eq2"),
         "record", "t", tooWide, 2, "_eq2"))
   }

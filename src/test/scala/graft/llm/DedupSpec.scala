@@ -17,7 +17,7 @@ class DedupSpec extends SparkSpec {
 
   test("charShingles: distinct n-grams; short text yields itself") {
     def sh(t: String, n: Int): Seq[String] =
-      Seq(t).toDF("text").select(Dedup.charShingles(col("text"), n)).as[Seq[String]].head()
+      Seq(t).toDF("text").select(ReferenceTwins.charShingles(col("text"), n)).as[Seq[String]].head()
     assert(sh("abcab", 3) === Seq("abc", "bca", "cab"))
     assert(sh("ab", 3) === Seq("ab"))
   }
@@ -29,7 +29,7 @@ class DedupSpec extends SparkSpec {
       (3L, "zzzz qqqq kkkk wwww vvvv uuuu"),
     ).toDF("doc_id", "text")
     val base = docs.select(col("doc_id"),
-      array_distinct(Dedup.ngramHashes(col("text"), 5)).as("sh"))
+      array_distinct(ReferenceTwins.ngramHashes(col("text"), 5)).as("sh"))
     val sigs = Dedup.minhashSignature(base, "sh", 16).drop("sh").collect()
       .map(r => r.getLong(0) -> (1 to 16).map(r.getLong)).toMap
     assert(sigs(1L) === sigs(2L))
@@ -95,7 +95,7 @@ class DedupSpec extends SparkSpec {
     def declMd5(c: org.apache.spark.sql.Column) =
       conv(substring(md5(c), 1, 8), 16, 10).cast("long")
     def declShingles(c: org.apache.spark.sql.Column, n: Int) =
-      array_distinct(transform(Dedup.charShingles(c, n), g => declMd5(g)))
+      array_distinct(transform(ReferenceTwins.charShingles(c, n), g => declMd5(g)))
     val texts = Seq(
       null.asInstanceOf[String], "", "ab", "aaaaaaaa",
       "hello world hello world",

@@ -43,7 +43,7 @@ class TextAnalysisSpec extends SparkSpec {
     // the native byte-level expression and the HOF codepoint fallback agree
     for (t <- Seq("hello world", "héllo 😀wörld", "", "a1!"))
       assert(onText[Long](t, TextAnalysis.fingerprint) ===
-        onText[Long](t, TextAnalysis.fingerprintHof))
+        onText[Long](t, ReferenceTwins.fingerprintHof))
   }
 
   test("repetition: fractions match hand counts, edge cases are zeros") {

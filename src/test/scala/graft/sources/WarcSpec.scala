@@ -82,7 +82,7 @@ class WarcSpec extends SparkSpec {
       java.nio.file.Files.write(new java.io.File(dir, "b.wet.gz").toPath, gz(rec1) ++ gz(rec2))
       java.nio.file.Files.write(new java.io.File(dir, "c.wet.gz").toPath,
         Array[Byte](1, 2, 3, 4))
-      val blobs = Warc.readGzip(spark, dir.getAbsolutePath + "/*.wet.gz")
+      val blobs = ReferenceTwins.readGzip(spark, dir.getAbsolutePath + "/*.wet.gz")
       val byFile = blobs.collect().map(r =>
         (r.getString(0).split('/').last, (r.getBoolean(1), r.getString(2)))).toMap
       assert(byFile("a.wet.gz") === ((true, rec1 + rec2)))

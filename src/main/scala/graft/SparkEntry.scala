@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.analysis.{Pca, Sketches, Stats}
-import graft.core.{ColumnMeta, Opset, Profile, RangeJoin, SessionArtifacts}
+import graft.core.{ColumnMeta, Opset, Parquet, Profile, RangeJoin, SessionArtifacts}
 import graft.llm.MinhashIndex
 import graft.dsp.SignalOps
 import graft.instants.{Indicators, Selector, Splits}
@@ -184,7 +184,7 @@ object SparkEntry {
     */
   private def cachedMinhashPairs(s: SparkSession, dir: String): DataFrame =
     SessionArtifacts.getOrBuild(s, dir, "pairs") {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       Dedup.minhashLsh(docs, "doc_id", "text",
         MhShingle, MhHashes, MhBands, MhThreshold,
         graft.core.CacheScope.session).cache()
@@ -208,7 +208,7 @@ object SparkEntry {
     */
   private def cachedCoPurchaseEdges(s: SparkSession, dir: String): DataFrame =
     SessionArtifacts.getOrBuild(s, dir, "graphEdges") {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Parquet.read(s, s"$dir/lineitem.parquet")
         .filter(col("l_linenumber") <= TriMaxLine)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       li.select(col("ok"), col("pk").as("p1"))
@@ -242,7 +242,7 @@ object SparkEntry {
   private def cachedIvfCentroids(s: SparkSession, dir: String): Array[Array[Double]] =
     SessionArtifacts.getOrBuild(s, dir, "centroid")(
       Similarity.ivfCentroids(
-        s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
+        Parquet.read(s, s"$dir/embeddings.parquet"), "vec_id", "embedding",
         k = IvfK, iters = IvfIters))
 
   /** DSIR importance weights per sf dir, computed once and cached: both
@@ -253,7 +253,7 @@ object SparkEntry {
     */
   private def cachedDsirWeights(s: SparkSession, dir: String): DataFrame =
     SessionArtifacts.getOrBuild(s, dir, "dsir") {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       Pipeline.importanceWeights(docs,
         docs.filter(col("source") === DsirTargetSource),
         "doc_id", "text", Seq(1, 2), DsirBuckets).cache()
@@ -1927,7 +1927,7 @@ object SparkEntry {
     // is NOT the expensive pass — measured, the extra exchange (and the
     // wider cached layout it leaves for the banded pair join and the
     // component rounds downstream) cost more than the serial scan
-    s.read.parquet(s"$dir/documents.parquet")
+    Parquet.read(s, s"$dir/documents.parquet")
       .select(col("doc_id").cast("long")).as[Long]
       .mapPartitions(_.map { id =>
         val base = id - id % 4
@@ -2471,7 +2471,7 @@ object SparkEntry {
   )
 
   private def lineitemLabeled(s: SparkSession, dir: String): DataFrame = {
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Parquet.read(s, s"$dir/lineitem.parquet")
     li.select(
       col("l_orderkey") :: col("l_linenumber") ::
       LineitemLabels.map { case (c, lab) => col(c).as(lab) }.toList: _*)
@@ -2492,7 +2492,7 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Parquet.read(spark, s"$dir/documents.parquet")
     val winners = Dedup.exact(docs, "doc_id", Seq("text")).select("doc_id", "dup_count")
     TextAnalysis.analyze(docs).join(winners, "doc_id").orderBy("doc_id")
   }
@@ -2624,7 +2624,7 @@ object SparkEntry {
 
     // -- PCA correlation circle (row 16) --
     "pca_corr" -> { (s, dir) =>
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Parquet.read(s, s"$dir/lineitem.parquet")
       val cols = PcaCols
       val pairs = for (a <- cols; b <- cols if a <= b) yield (a, b)
       val agg = li.agg(
@@ -2646,7 +2646,7 @@ object SparkEntry {
       // the Rayleigh quotient v'Cv over DuckDB's OWN correlation matrix,
       // then re-derives loadings and EVR — the eigensystem property is
       // checked, not echoed.
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Parquet.read(s, s"$dir/lineitem.parquet")
       val (df, vecs, n) = Pca.circleWithEigen(li, PcaCols, s)
       pcaEigenExport = Some((vecs, n))
       df.orderBy("component", "variable")
@@ -2751,14 +2751,14 @@ object SparkEntry {
 
     // -- LLM: exact dedup (row 27) --
     "dedup_exact" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       Dedup.exact(docs, "doc_id", Seq("text"))
         .select(col("doc_id"), col("n_chars"), col("dup_count"))
         .orderBy("doc_id")
     },
 
     "dedup_exact_salted" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       graft.core.Salting.saltedDedupExact(docs, "doc_id", Seq("text"))
         .select("doc_id", "dup_count").orderBy("doc_id")
     },
@@ -2766,7 +2766,7 @@ object SparkEntry {
     // -- LLM: MinHash-LSH near-dedup (row 28) --
     "dedup_minhash_sig" -> { (s, dir) =>
       val docs = graft.core.Fanout.fanOut(
-        s.read.parquet(s"$dir/documents.parquet"))
+        Parquet.read(s, s"$dir/documents.parquet"))
       val base = docs.select(col("doc_id"),
         Dedup.distinctNgramHashes(col("text"), MhShingle).as("sh"))
       Dedup.minhashSignature(base, "sh", MhHashes).drop("sh").orderBy("doc_id")
@@ -2780,7 +2780,7 @@ object SparkEntry {
     // linear-candidate scale path), graded at every SF by ONE static
     // oracle that re-derives the banding dynamically (see minhashAutoCtes).
     "dedup_minhash_auto" -> { (s, dir) =>
-      Dedup.minhashLshAuto(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+      Dedup.minhashLshAuto(Parquet.read(s, s"$dir/documents.parquet"), "doc_id", "text",
           MhShingle, MhThreshold, targetRecall = MinAutoRecall, s0 = MinAutoS0,
           candPerBand = MinAutoCandPerBand, minRows = MinAutoMinRows,
           maxRows = MinAutoMaxRows, maxBands = MinAutoMaxBands)
@@ -2795,7 +2795,7 @@ object SparkEntry {
     // dedup_minhash_pairs run restricted to batch-touching pairs — which
     // is literally what the oracle SQL says.
     "dedup_minhash_incr" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_mh_index_${math.abs(dir.hashCode)}"
       MinhashIndex.write(docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text",
         path, MinhashIndex.Config(MhShingle, MhHashes, MhBands, MhThreshold),
@@ -2809,7 +2809,7 @@ object SparkEntry {
       // near-dup CLUSTER assignment: minhash pairs → connected components
       // (min-label propagation) → every document labeled with its
       // component representative + cluster size
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       Dedup.clusters(docs, "doc_id", cachedMinhashPairs(s, dir)).orderBy("doc_id")
     },
 
@@ -2828,7 +2828,7 @@ object SparkEntry {
     // the real stream, never a warm checkpoint no-op.
     "stream_neardup" -> { (s, dir) =>
       val path = s"$dir/documents.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = Parquet.schema(s, path)
       val outPath = java.nio.file.Files.createTempDirectory("graft-stream-nd")
       // the returned (lazy) plan reads claims parquet from this dir, so it
       // cannot be deleted here — but without cleanup a multi-pass bench at
@@ -2859,8 +2859,8 @@ object SparkEntry {
       deleteTree(in)
       deleteTree(java.nio.file.Paths.get(out, "ckpt"))
       val verdicts = graft.streaming.StreamOps.nearDupVerdicts(
-        s.read.parquet(s"$out/claims"))
-      s.read.parquet(path).select(col("doc_id"))
+        Parquet.read(s, s"$out/claims"))
+      Parquet.read(s, path).select(col("doc_id"))
         .join(verdicts, Seq("doc_id"), "left")
         .select(col("doc_id"), col("dup_of"),
           coalesce(col("is_dup"), lit(false)).as("is_dup"))
@@ -2883,7 +2883,7 @@ object SparkEntry {
     // window grid as the DuckDB oracle's epoch_us floor.
     "stream_counts" -> { (s, dir) =>
       val path = s"$dir/events.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = Parquet.schema(s, path)
       val outPath = java.nio.file.Files.createTempDirectory("graft-stream-cnt")
       deleteAtExit(outPath)
       val out = outPath.toString
@@ -2920,7 +2920,7 @@ object SparkEntry {
           counts, s"$out/rows", s"$out/ckpt").awaitTermination())
       deleteTree(in)
       deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      s.read.parquet(s"$out/rows")
+      Parquet.read(s, s"$out/rows")
         .select(col("window.start").cast("long").as("win_start"),
           col("event_type"), col("n"),
           round(col("avg_value"), 6).as("avg_value"))
@@ -2937,7 +2937,7 @@ object SparkEntry {
     // the key preserves), never the nondeterministic doc_id.
     "stream_dedup" -> { (s, dir) =>
       val path = s"$dir/documents.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = Parquet.schema(s, path)
       val outPath = java.nio.file.Files.createTempDirectory("graft-stream-dd")
       deleteAtExit(outPath)
       val out = outPath.toString
@@ -2953,7 +2953,7 @@ object SparkEntry {
           kept.select("text"), s"$out/rows", s"$out/ckpt").awaitTermination())
       deleteTree(in)
       deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      s.read.parquet(s"$out/rows")
+      Parquet.read(s, s"$out/rows")
         .select(md5(col("text").cast("binary")).as("fp"),
           length(col("text")).cast("long").as("len"))
         .orderBy("fp")
@@ -2973,7 +2973,7 @@ object SparkEntry {
     "stream_sessions" -> { (s, dir) =>
       import s.implicits._
       val path = s"$dir/events.parquet"
-      val ev = s.read.parquet(path)
+      val ev = Parquet.read(s, path)
       val outPath = java.nio.file.Files.createTempDirectory("graft-stream-sw")
       deleteAtExit(outPath)
       val out = outPath.toString
@@ -2993,7 +2993,7 @@ object SparkEntry {
           sess, s"$out/rows", s"$out/ckpt").awaitTermination())
       deleteTree(java.nio.file.Paths.get(in))
       deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      s.read.parquet(s"$out/rows")
+      Parquet.read(s, s"$out/rows")
         .filter(col("user_id") >= 0)
         .select(col("user_id"),
           unix_micros(col("session.start")).as("sess_start_us"),
@@ -3014,7 +3014,7 @@ object SparkEntry {
     // = the same register + estimator SQL as sketch_hll.
     "stream_hll" -> { (s, dir) =>
       val path = s"$dir/events.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = Parquet.schema(s, path)
       val outPath = java.nio.file.Files.createTempDirectory("graft-stream-hll")
       deleteAtExit(outPath)
       val out = outPath.toString
@@ -3030,7 +3030,7 @@ object SparkEntry {
           regs, s"$out/rows", s"$out/ckpt").awaitTermination())
       deleteTree(in)
       deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      val folded = s.read.parquet(s"$out/rows")
+      val folded = Parquet.read(s, s"$out/rows")
         .groupBy("event_type", "bucket")
         .agg(max(col("mj")).cast("int").as("mj"))
       Sketches.hllEstimate(folded, Seq("event_type"), HllP)
@@ -3047,7 +3047,7 @@ object SparkEntry {
     // Stats.binnedQuantilesFromCounts — graded against the IDENTICAL
     // batch oracle as stats_quantiles_binned.
     "stream_quantiles" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
         .select(col("event_type"), col("value"))
       val bounds = ev.filter(col("value").isNotNull)
         .groupBy("event_type")
@@ -3067,7 +3067,7 @@ object SparkEntry {
           cnts, s"$out/rows", s"$out/ckpt").awaitTermination())
       deleteTree(java.nio.file.Paths.get(in))
       deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      val folded = s.read.parquet(s"$out/rows")
+      val folded = Parquet.read(s, s"$out/rows")
         .groupBy("event_type", "_bin")
         .agg(max(col("_c")).as("_c"))
       Stats.binnedQuantilesFromCounts(folded, bounds,
@@ -3085,7 +3085,7 @@ object SparkEntry {
     // each event lands once). Zero state store: ≤ k rows per (group,
     // batch) of landed artifact IS the state. Oracle = sketch_kmv's.
     "stream_kmv" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
         .select(col("event_type"), col("event_id"), col("value"))
       val outPath = java.nio.file.Files.createTempDirectory("graft-stream-kmv")
       deleteAtExit(outPath)
@@ -3113,7 +3113,7 @@ object SparkEntry {
     // TopK fold IS the global top-k (top-k under a total order composes
     // over disjoint batches). Same oracle family as events_topk.
     "stream_topk" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
         .select(col("user_id"), col("event_id"), col("value"))
       val outPath = java.nio.file.Files.createTempDirectory("graft-stream-topk")
       deleteAtExit(outPath)
@@ -3141,7 +3141,7 @@ object SparkEntry {
     // per batch, and the read-back max-fold is idempotent. Grades
     // against the IDENTICAL batch oracle.
     "stream_latest" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       val outPath = java.nio.file.Files.createTempDirectory("graft-stream-lt")
       deleteAtExit(outPath)
       val out = outPath.toString
@@ -3150,7 +3150,7 @@ object SparkEntry {
           EventOps.eventMicros(ev, "ts").as("tus"), col("event_id"), col("value"))
         .write.parquet(in)
       val stream = s.readStream
-        .schema(s.read.parquet(in).schema).parquet(in)
+        .schema(Parquet.schema(s, in)).parquet(in)
         .groupBy("user_id", "event_type")
         .agg(max(struct(col("tus"), col("event_id"), col("value"))).as("_m"))
       withStreamWidth(s, s"$dir/events.parquet")(
@@ -3158,7 +3158,7 @@ object SparkEntry {
           stream, s"$out/rows", s"$out/ckpt").awaitTermination())
       deleteTree(java.nio.file.Paths.get(in))
       deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      s.read.parquet(s"$out/rows")
+      Parquet.read(s, s"$out/rows")
         .groupBy("user_id", "event_type").agg(max(col("_m")).as("_m"))
         .select(col("user_id"), col("event_type"), col("_m.tus").as("last_us"),
           col("_m.event_id").as("event_id"), col("_m.value").as("value"))
@@ -3199,7 +3199,7 @@ object SparkEntry {
           stream, s"$out/rows", s"$out/ckpt").awaitTermination())
       deleteTree(java.nio.file.Paths.get(in))
       deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      s.read.parquet(s"$out/rows").orderBy("record", "t")
+      Parquet.read(s, s"$out/rows").orderBy("record", "t")
     },
 
     // -- Structured Streaming interval join (row 39) --
@@ -3230,7 +3230,7 @@ object SparkEntry {
       // child session makes the set-without-restore safe)
       s.conf.set("spark.sql.shuffle.partitions", math.max(1L,
         math.min(32768L, regularFileBytes(path) / (8L << 20) + 1)).toString)
-      val schema = s.read.parquet(path).schema
+      val schema = Parquet.schema(s, path)
       val outPath = java.nio.file.Files.createTempDirectory("graft-stream-ij")
       deleteAtExit(outPath)
       val out = outPath.toString
@@ -3262,7 +3262,7 @@ object SparkEntry {
         joined, s"$out/rows", s"$out/ckpt").awaitTermination()
       deleteTree(in)
       deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      s.read.parquet(s"$out/rows").orderBy("click_id", "view_id")
+      Parquet.read(s, s"$out/rows").orderBy("click_id", "view_id")
     },
 
     // -- Structured Streaming running argmax (row 39) --
@@ -3297,35 +3297,35 @@ object SparkEntry {
           am, s"$out/rows", s"$out/ckpt").awaitTermination())
       deleteTree(java.nio.file.Paths.get(in))
       deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      s.read.parquet(s"$out/rows")
+      Parquet.read(s, s"$out/rows")
         .select(col("record"), col("instant"), round(col("best"), 6).as("best"))
         .orderBy("record")
     },
 
     // -- batch event analytics (row 56) --
     "events_sessions" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       EventOps.sessionize(ev, "user_id", EventOps.eventMicros(ev, "ts"),
           "event_id", SessionGapUs)
         .orderBy("user_id", "session_id")
     },
 
     "events_funnel" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       EventOps.funnel(ev, "user_id", EventOps.eventMicros(ev, "ts"),
           "event_type", FunnelSteps)
         .orderBy("user_id")
     },
 
     "events_retention" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       EventOps.retention(ev, "user_id", EventOps.eventMicros(ev, "ts"))
         .orderBy("cohort_day", "day_offset")
     },
 
     // -- Generic two-phase top-k per key (row 67) --
     "events_topk" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       graft.core.TopK.perKey(
           ev.select(col("user_id"), col("event_id"), col("value")),
           Seq("user_id"), Seq(col("value").desc, col("event_id")), 3)
@@ -3333,7 +3333,7 @@ object SparkEntry {
     },
 
     "events_latest" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       EventOps.latestSnapshot(ev, Seq("user_id", "event_type"),
           EventOps.eventMicros(ev, "ts"), "event_id", Seq("value"))
         .orderBy("user_id", "event_type")
@@ -3341,7 +3341,7 @@ object SparkEntry {
 
     // -- Exact pinned-formula quantiles (row 62) --
     "stats_quantiles" -> { (s, dir) =>
-      Stats.quantiles(s.read.parquet(s"$dir/events.parquet"),
+      Stats.quantiles(Parquet.read(s, s"$dir/events.parquet"),
           Seq("event_type"), col("value"), QuantilePs)
         .orderBy("event_type", "p")
     },
@@ -3351,7 +3351,7 @@ object SparkEntry {
     // map-combined scans) against the identical formula in DuckDB.
     // stats_quantiles above stays the exactness-premium option.
     "stats_quantiles_binned" -> { (s, dir) =>
-      Stats.binnedQuantiles(s.read.parquet(s"$dir/events.parquet"),
+      Stats.binnedQuantiles(Parquet.read(s, s"$dir/events.parquet"),
           Seq("event_type"), col("value"), QuantilePs, QuantileBins)
         .orderBy("event_type", "p")
     },
@@ -3360,7 +3360,7 @@ object SparkEntry {
     // primitive. Weight re-derived from event_id so the oracle replays it;
     // ticks keep every cumulative integer-exact.
     "stats_wquantiles" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       Stats.weightedQuantiles(ev, Seq("event_type"), col("value"),
           (col("event_id") % 7 + 1).cast("double"), QuantilePs)
         .orderBy("event_type", "p")
@@ -3370,7 +3370,7 @@ object SparkEntry {
     // standard pre-training outlier clip, bounds from the exact two-pass
     // quantiles, clip via one broadcast join (the corpus never shuffles).
     "stats_winsorize" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
         .select("event_id", "event_type", "value")
       Stats.winsorize(ev, Seq("event_type"), col("value"), "value_w", 0.05, 0.95)
         .select(col("event_id"), col("event_type"), round(col("value_w"), 6).as("value_w"))
@@ -3381,7 +3381,7 @@ object SparkEntry {
     // outlier-insensitive standardization; zero-IQR groups yield NULL
     // (pinned 0/0 convention).
     "stats_robust_scale" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
         .select("event_id", "event_type", "value")
       Stats.robustScale(ev, Seq("event_type"), col("value"), "value_r")
         .select(col("event_id"), col("event_type"), col("value_r"))
@@ -3393,14 +3393,14 @@ object SparkEntry {
     // up-on-tie bucket rule, broadcast boundary assignment: the corpus
     // shuffles only for the final (group, bucket) count.
     "stats_histogram" -> { (s, dir) =>
-      Stats.equiDepthHistogram(s.read.parquet(s"$dir/events.parquet"),
+      Stats.equiDepthHistogram(Parquet.read(s, s"$dir/events.parquet"),
           Seq("event_type"), col("value"), HistBuckets)
         .orderBy("event_type", "bucket")
     },
 
     // -- Deterministic HLL distinct-count sketch (row 58) --
     "sketch_hll" -> { (s, dir) =>
-      Sketches.hll(s.read.parquet(s"$dir/events.parquet"),
+      Sketches.hll(Parquet.read(s, s"$dir/events.parquet"),
           Seq("event_type"), col("user_id"), HllP)
         .orderBy("event_type")
     },
@@ -3412,11 +3412,11 @@ object SparkEntry {
     // 1e-4 ticks PER ROW before the integer sum (float revenue sums in
     // shuffle order and cannot be hash-graded).
     "star_join" -> { (s, dir) =>
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val o = s.read.parquet(s"$dir/orders.parquet")
-      val c = s.read.parquet(s"$dir/customer.parquet")
-      val n = s.read.parquet(s"$dir/nation.parquet")
-      val r = s.read.parquet(s"$dir/region.parquet")
+      val li = Parquet.read(s, s"$dir/lineitem.parquet")
+      val o = Parquet.read(s, s"$dir/orders.parquet")
+      val c = Parquet.read(s, s"$dir/customer.parquet")
+      val n = Parquet.read(s, s"$dir/nation.parquet")
+      val r = Parquet.read(s, s"$dir/region.parquet")
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .join(c, o("o_custkey") === c("c_custkey"))
         .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
@@ -3430,7 +3430,7 @@ object SparkEntry {
 
     // -- OLAP rollup: event counts at three granularities (row 66) --
     "events_rollup" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       // integer `div`, never `/`: long/long is DOUBLE division in Spark,
       // and float rounding could bump the truncated quotient across a day
       // boundary once day indexes grow past the double mantissa's exact
@@ -3447,7 +3447,7 @@ object SparkEntry {
 
     // -- Integer-tick PageRank over the user/event-type graph (row 65) --
     "graph_pagerank" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       val fwd = ev.select(concat(lit("u:"), col("user_id")).as("src"),
         concat(lit("t:"), col("event_type")).as("dst"))
       val edges = fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
@@ -3476,7 +3476,7 @@ object SparkEntry {
     // customer count. Same operator, same oracle construction.
     "graph_triangles_hub" -> { (s, dir) =>
       import s.implicits._
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = Parquet.read(s, s"$dir/orders.parquet")
       val spokes = o.select((col("o_custkey") + lit(8)).cast("long").as("p1"),
         (col("o_orderkey") % 8).cast("long").as("p2"))
       val hubPairs = (for { i <- 0 until 8; j <- i + 1 until 8 }
@@ -3539,7 +3539,7 @@ object SparkEntry {
     // per blob in doc_id order, and the operator splits + parses them
     // back. Oracle = the closed-form record table.
     "source_warc" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       val uri = concat(lit("https://site"), col("doc_id").cast("string"), lit("/doc"))
       val declared = when(col("doc_id") % 11 === 0, octet_length(col("text")) + 1)
         .otherwise(octet_length(col("text")))
@@ -3558,7 +3558,7 @@ object SparkEntry {
     },
 
     "source_jsonl" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       val outPath = java.nio.file.Files.createTempDirectory("graft-jsonl")
       deleteAtExit(outPath)
       val corpus = s"$outPath/corpus"
@@ -3572,9 +3572,9 @@ object SparkEntry {
 
     // -- Salted skew join: result-identical rewrite (row 27 sibling) --
     "join_salted" -> { (s, dir) =>
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Parquet.read(s, s"$dir/lineitem.parquet")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-      val ord = s.read.parquet(s"$dir/orders.parquet")
+      val ord = Parquet.read(s, s"$dir/orders.parquet")
         .select(col("o_orderkey").as("l_orderkey"), col("o_totalprice"))
       graft.core.Salting.skewJoin(li, ord, Seq("l_orderkey"),
           Seq(col("l_orderkey"), col("l_linenumber")), salts = 8)
@@ -3584,14 +3584,14 @@ object SparkEntry {
     // -- Z-order layout key (row 63) --
     "layout_zorder" -> { (s, dir) =>
       graft.sources.Layout.zorderByRange(
-          s.read.parquet(s"$dir/lineitem.parquet"), ZCols, ZBits)
+          Parquet.read(s, s"$dir/lineitem.parquet"), ZCols, ZBits)
         .select(col("l_orderkey"), col("l_linenumber"), col("z_key"))
         .orderBy("l_orderkey", "l_linenumber")
     },
 
     // -- Deterministic count-min sketch: per-user event frequency (row 58) --
     "sketch_cms" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       // ONE events scan: the per-user counts feed both the weighted
       // counter build (identical counters to the per-instance form) and
       // the probe side; the cached table is user-count-sized
@@ -3605,9 +3605,9 @@ object SparkEntry {
 
     // -- Deterministic Bloom filter: build on orders, probe customers (row 58) --
     "sketch_bloom" -> { (s, dir) =>
-      val words = Sketches.bloomWords(s.read.parquet(s"$dir/orders.parquet"),
+      val words = Sketches.bloomWords(Parquet.read(s, s"$dir/orders.parquet"),
         col("o_custkey"), BloomBits, BloomK)
-      Sketches.bloomProbe(s.read.parquet(s"$dir/customer.parquet").select("c_custkey"),
+      Sketches.bloomProbe(Parquet.read(s, s"$dir/customer.parquet").select("c_custkey"),
           col("c_custkey"), "may_contain", words, BloomBits, BloomK)
         .orderBy("c_custkey")
     },
@@ -3619,7 +3619,7 @@ object SparkEntry {
     // a hash match proves merge == union — the property that lets
     // per-partition/per-day sketches combine without touching raw data.
     "sketch_hll_merge" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       val halves = Seq(ev.filter(col("event_id") % 2 === 0),
         ev.filter(col("event_id") % 2 =!= 0))
         .map(h => Sketches.hllRegisters(h, Seq("event_type"), col("user_id"), HllP))
@@ -3629,7 +3629,7 @@ object SparkEntry {
     },
 
     "sketch_cms_merge" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       val halves = Seq(ev.filter(col("event_id") % 2 === 0),
         ev.filter(col("event_id") % 2 =!= 0))
         .map(h => Sketches.cmsCounters(h, col("user_id"), CmsWidth, CmsDepth))
@@ -3640,11 +3640,11 @@ object SparkEntry {
     },
 
     "sketch_bloom_union" -> { (s, dir) =>
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = Parquet.read(s, s"$dir/orders.parquet")
       val halves = Seq(o.filter(col("o_orderkey") % 2 === 0),
         o.filter(col("o_orderkey") % 2 =!= 0))
         .map(h => Sketches.bloomWords(h, col("o_custkey"), BloomBits, BloomK))
-      Sketches.bloomProbe(s.read.parquet(s"$dir/customer.parquet").select("c_custkey"),
+      Sketches.bloomProbe(Parquet.read(s, s"$dir/customer.parquet").select("c_custkey"),
           col("c_custkey"), "may_contain", Sketches.bloomMerge(halves), BloomBits, BloomK)
         .orderBy("c_custkey")
     },
@@ -3655,7 +3655,7 @@ object SparkEntry {
     // form of stats_quantiles, graded bit-for-bit because the sample and
     // the type-7 formula are both pure functions of the ids and values.
     "sketch_kmv" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       Sketches.kmvQuantiles(
           Sketches.kmvSketch(ev, Seq("event_type"), col("event_id"), col("value"),
             KmvK, KmvSeed),
@@ -3667,7 +3667,7 @@ object SparkEntry {
     // bit-identical to the whole-corpus sketch (bottom-k under a total
     // order composes), so the SAME oracle grades it.
     "sketch_kmv_merge" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       val halves = Seq(ev.filter(col("event_id") % 2 === 0),
         ev.filter(col("event_id") % 2 =!= 0))
         .map(h => Sketches.kmvSketch(h, Seq("event_type"), col("event_id"),
@@ -3686,7 +3686,7 @@ object SparkEntry {
     // inequality-join machinery. Integer micros end to end; value sums
     // in 1e-6 ticks.
     "join_range" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       val tus = EventOps.eventMicros(ev, "ts")
       val pts = ev.select(tus.as("p_us"), col("value").as("p_value"))
       val win = ev.filter(col("event_type") === "error")
@@ -3704,7 +3704,7 @@ object SparkEntry {
     // attribution windows, canonical-bin dedup-free equi-join rewrite,
     // integer micros and 1e-6 value ticks end to end.
     "join_interval" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       val tus = EventOps.eventMicros(ev, "ts")
       val err = ev.filter(col("event_type") === "error")
         .select(col("event_id").as("window_id"), tus.as("w_start"),
@@ -3734,7 +3734,7 @@ object SparkEntry {
     // (NO join — one exchange on user_id) grades against DuckDB's NATIVE
     // ASOF LEFT JOIN, two independent formulations of the semantics.
     "join_asof" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       val tus = EventOps.eventMicros(ev, "ts")
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), tus.as("tus"))
@@ -3760,7 +3760,7 @@ object SparkEntry {
     // on negated times; DuckDB's native ASOF with l.t <= r.t is the
     // independent formulation.
     "join_asof_fwd" -> { (s, dir) =>
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       val tus = EventOps.eventMicros(ev, "ts")
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), tus.as("tus"))
@@ -3781,7 +3781,7 @@ object SparkEntry {
 
     // -- Schema-dynamic table profiling (row 59) --
     "profile_table" -> { (s, dir) =>
-      Profile.profile(s.read.parquet(s"$dir/lineitem.parquet"))
+      Profile.profile(Parquet.read(s, s"$dir/lineitem.parquet"))
         .orderBy("column")
     },
 
@@ -3789,26 +3789,26 @@ object SparkEntry {
     // (pinned Sketches register contract) — register-sized shuffle
     // regardless of table width or size.
     "profile_table_approx" -> { (s, dir) =>
-      Profile.profileApprox(s.read.parquet(s"$dir/lineitem.parquet"))
+      Profile.profileApprox(Parquet.read(s, s"$dir/lineitem.parquet"))
         .orderBy("column")
     },
 
     // -- LLM: SimHash near-dedup (row 29) --
     "dedup_simhash" -> { (s, dir) =>
-      Dedup.simhash(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+      Dedup.simhash(Parquet.read(s, s"$dir/documents.parquet"), "doc_id", "text")
         .orderBy("doc_id")
     },
 
     // -- LLM: n-gram Jaccard near-dedup (row 30) --
     "dedup_jaccard" -> { (s, dir) =>
-      Dedup.ngramJaccard(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+      Dedup.ngramJaccard(Parquet.read(s, s"$dir/documents.parquet"), "doc_id", "text",
           JacN, JacMod, JacThreshold, JacMinShared, JacMaxDf)
         .orderBy("id_a", "id_b")
     },
 
     // -- LLM: embedding-cosine near-dup (row 31) --
     "dedup_cosine" -> { (s, dir) =>
-      Similarity.cosineDup(s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
+      Similarity.cosineDup(Parquet.read(s, s"$dir/embeddings.parquet"), "vec_id", "embedding",
           CosDupThreshold, Planes, LshBits, LshTables)
         .orderBy("id_a", "id_b")
     },
@@ -3818,7 +3818,7 @@ object SparkEntry {
     // scale path), graded at every SF by ONE static oracle that re-derives
     // the config dynamically in SQL (see autoCfgCte).
     "dedup_cosine_auto" -> { (s, dir) =>
-      Similarity.cosineDupAuto(s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
+      Similarity.cosineDupAuto(Parquet.read(s, s"$dir/embeddings.parquet"), "vec_id", "embedding",
           CosDupThreshold, AutoRecall, AutoOcc,
           minBits = AutoMinBits, maxBits = AutoMaxBits, maxTables = AutoMaxTables)
         .orderBy("id_a", "id_b")
@@ -3832,7 +3832,7 @@ object SparkEntry {
     // >79 GB). This row is the third-decade HASH cell for the bucket-local
     // cosine machinery; the subset identity is pinned by spec.
     "dedup_cosine_probe" -> { (s, dir) =>
-      Similarity.cosineDupProbe(s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
+      Similarity.cosineDupProbe(Parquet.read(s, s"$dir/embeddings.parquet"), "vec_id", "embedding",
           CosDupThreshold, idc => substring(md5(idc.cast("string")), 1, 1) === "0",
           AutoRecall, AutoOcc,
           minBits = AutoMinBits, maxBits = AutoMaxBits, maxTables = AutoMaxTables)
@@ -3843,7 +3843,7 @@ object SparkEntry {
     // fraction at linear cost and shows the audit is slice-independent —
     // no privileged residue, any 1/16 of the pair space hash-matches.
     "dedup_cosine_probe2" -> { (s, dir) =>
-      Similarity.cosineDupProbe(s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
+      Similarity.cosineDupProbe(Parquet.read(s, s"$dir/embeddings.parquet"), "vec_id", "embedding",
           CosDupThreshold, idc => substring(md5(idc.cast("string")), 1, 1) === "1",
           AutoRecall, AutoOcc,
           minBits = AutoMinBits, maxBits = AutoMaxBits, maxTables = AutoMaxTables)
@@ -3852,7 +3852,7 @@ object SparkEntry {
 
     // -- LLM: similarity search (rows 32-33) --
     "ann_topk" -> { (s, dir) =>
-      Similarity.topK(s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
+      Similarity.topK(Parquet.read(s, s"$dir/embeddings.parquet"), "vec_id", "embedding",
           AnnQueryIds, AnnK)
         .orderBy("q_id", "rank")
     },
@@ -3861,7 +3861,7 @@ object SparkEntry {
     // nearest, labels derived as vec_id % 5 so the oracle re-derives
     // them; vote ties break by the smaller label (pinned).
     "ann_knn" -> { (s, dir) =>
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Parquet.read(s, s"$dir/embeddings.parquet")
       val labels = emb.select(col("vec_id"), (col("vec_id") % 5).as("lbl"))
       Similarity.knnPredict(emb, "vec_id", "embedding",
           labels, "vec_id", "lbl", AnnQueryIds, AnnK)
@@ -3869,7 +3869,7 @@ object SparkEntry {
     },
 
     "ann_lsh" -> { (s, dir) =>
-      Similarity.lshTopK(s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
+      Similarity.lshTopK(Parquet.read(s, s"$dir/embeddings.parquet"), "vec_id", "embedding",
           AnnQueryIds, AnnK, Planes, LshBits, LshTables)
         .orderBy("q_id", "rank")
     },
@@ -3880,13 +3880,13 @@ object SparkEntry {
     // recall 0.9, so the round-11 "the obvious name is the auto path"
     // doctrine carries an oracle row of its own.
     "ann_lsh_auto" -> { (s, dir) =>
-      Similarity.lshTopK(s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
+      Similarity.lshTopK(Parquet.read(s, s"$dir/embeddings.parquet"), "vec_id", "embedding",
           AnnQueryIds, AnnK)
         .orderBy("q_id", "rank")
     },
 
     "ann_ivf" -> { (s, dir) =>
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Parquet.read(s, s"$dir/embeddings.parquet")
       val cents = cachedIvfCentroids(s, dir)
       ivfCentsExport = Some(cents)
       Similarity.ivfTopK(emb, "vec_id", "embedding", AnnQueryIds, AnnK, cents, nProbe = IvfProbe)
@@ -3898,7 +3898,7 @@ object SparkEntry {
     // Exact top-k vs the frozen-centroid IVF top-k over the same query
     // sample; the oracle composes the two existing SQL constructions.
     "ann_recall" -> { (s, dir) =>
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Parquet.read(s, s"$dir/embeddings.parquet")
       val cents = cachedIvfCentroids(s, dir)
       ivfCentsExport = Some(cents)
       val exact = Similarity.topK(emb, "vec_id", "embedding", AnnQueryIds, AnnK)
@@ -3914,7 +3914,7 @@ object SparkEntry {
     // integer of the vectors from md5 closed form and replays the
     // identical cosine (dot and norms over exact integer-valued doubles).
     "ann_text" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       val emb = graft.llm.Embeddings
         .hashedEmbeddings(docs, "doc_id", "text", TxtEmbDim, TxtEmbNs)
         .select(col("doc_id").as("vec_id"),
@@ -3928,12 +3928,12 @@ object SparkEntry {
     // cell-partitioned parquet index with the scan pruned to the probed
     // cells — graded result-identical to the compute-side operator.
     "ann_indexed" -> { (s, dir) =>
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Parquet.read(s, s"$dir/embeddings.parquet")
       val cents = cachedIvfCentroids(s, dir)
       ivfCentsExport = Some(cents)
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index_${math.abs(dir.hashCode)}"
       Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, path)
-      Similarity.ivfIndexTopK(s.read.parquet(path),
+      Similarity.ivfIndexTopK(Parquet.read(s, path),
           emb.filter(col("vec_id").isin(AnnQueryIds: _*)),
           "vec_id", "embedding", AnnK, cents, IvfProbe)
         .orderBy("q_id", "rank")
@@ -3946,7 +3946,7 @@ object SparkEntry {
     // batch-independent, so the result is identical to the one-shot
     // index — graded by the SAME frozen-centroid oracle as ann_indexed.
     "ann_indexed_append" -> { (s, dir) =>
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Parquet.read(s, s"$dir/embeddings.parquet")
       val cents = cachedIvfCentroids(s, dir)
       ivfCentsExport = Some(cents)
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index_append_${math.abs(dir.hashCode)}"
@@ -3954,7 +3954,7 @@ object SparkEntry {
         "vec_id", "embedding", cents, path)
       Similarity.appendToIvfIndex(emb.filter(col("vec_id") % 2 =!= 0),
         "vec_id", "embedding", path)
-      Similarity.ivfIndexTopK(s.read.parquet(path),
+      Similarity.ivfIndexTopK(Parquet.read(s, path),
           emb.filter(col("vec_id").isin(AnnQueryIds: _*)),
           "vec_id", "embedding", AnnK, cents, IvfProbe)
         .orderBy("q_id", "rank")
@@ -3967,8 +3967,8 @@ object SparkEntry {
     // assignment re-derived in SQL (the ann_ivf asg CTE).
     "stream_ivf_assign" -> { (s, dir) =>
       val path = s"$dir/embeddings.parquet"
-      val schema = s.read.parquet(path).schema
-      val emb = s.read.parquet(path)
+      val schema = Parquet.schema(s, path)
+      val emb = Parquet.read(s, path)
       val cents = cachedIvfCentroids(s, dir)
       ivfCentsExport = Some(cents)
       val outPath = java.nio.file.Files.createTempDirectory("graft-stream-ivf")
@@ -3983,7 +3983,7 @@ object SparkEntry {
           stream, "embedding", cents, s"$out/rows", s"$out/ckpt").awaitTermination())
       deleteTree(in)
       deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      s.read.parquet(s"$out/rows")
+      Parquet.read(s, s"$out/rows")
         .select(col("vec_id"), col("cell").cast("long").as("cell"))
         .orderBy("vec_id")
     },
@@ -3995,7 +3995,7 @@ object SparkEntry {
     // index in hot storage. Oracle = frozen codebooks, encode + ADC
     // replayed in SQL on integer ticks.
     "ann_pq" -> { (s, dir) =>
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Parquet.read(s, s"$dir/embeddings.parquet")
       val books = Similarity.pqCodebooks(emb, "vec_id", "embedding",
         m = PqM, ksub = PqKsub, iters = PqIters)
       pqBooksExport = Some(books)
@@ -4005,7 +4005,7 @@ object SparkEntry {
 
     // -- LLM: multimodal binary columns (row 34) --
     "mm_features" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       Multimodal.extractFeatures(Multimodal.asBinary(docs, "doc_id", "text"))
         .toDF().orderBy("doc_id")
     },
@@ -4017,7 +4017,7 @@ object SparkEntry {
       // oracle computes the expected features analytically. A decoder bug
       // (channel order, dims, premature EOF) breaks the hash match.
       import s.implicits._
-      val ids = s.read.parquet(s"$dir/documents.parquet")
+      val ids = Parquet.read(s, s"$dir/documents.parquet")
         .select(col("doc_id").cast("long")).as[Long]
       val bin = ids.mapPartitions(_.map { id =>
         (id, Multimodal.solidPng(
@@ -4033,7 +4033,7 @@ object SparkEntry {
     // The oracle re-derives the sampled-frame features analytically.
     "mm_frames" -> { (s, dir) =>
       import s.implicits._
-      val ids = s.read.parquet(s"$dir/documents.parquet")
+      val ids = Parquet.read(s, s"$dir/documents.parquet")
         .select(col("doc_id").cast("long")).as[Long]
       val bin = ids.mapPartitions(_.map { id =>
         val n = (id % 6 + 1).toInt
@@ -4052,7 +4052,7 @@ object SparkEntry {
     // oracle re-derives every feature analytically.
     "mm_audio" -> { (s, dir) =>
       import s.implicits._
-      val ids = s.read.parquet(s"$dir/documents.parquet")
+      val ids = Parquet.read(s, s"$dir/documents.parquet")
         .select(col("doc_id").cast("long")).as[Long]
       val bin = ids.mapPartitions(_.map { id =>
         val n = (id % 50 + 10).toInt
@@ -4100,7 +4100,7 @@ object SparkEntry {
     // metadata-sized argmax+splice rounds; graded on the learned merge
     // table, with DuckDB replaying every round as unrolled CTEs.
     "text_bpe_train" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
         .select(lower(col("text")).as("text"))
       TextAnalysis.trainBpeMerges(docs, "text", BpeTrainRounds)
         .select(col("rank"), col("left").as("merge_left"),
@@ -4114,7 +4114,7 @@ object SparkEntry {
     // fingerprint, with DuckDB replaying the greedy rule as bounded
     // unrolled iteration over distinct words.
     "text_tokens_bpe" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       val ids = TextAnalysis.subwordIds(lower(col("text")), BpeVocab)
       docs.select(col("doc_id"),
           size(ids).cast("long").as("n_bpe"),
@@ -4128,7 +4128,7 @@ object SparkEntry {
     // Sennrich apply loop — not greedy longest-match); the oracle
     // re-derives the merges AND the rank-order application in SQL.
     "text_tokens_ranked" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
         .select(col("doc_id"), lower(col("text")).as("text"))
       val merges = TextAnalysis.trainBpeMerges(
           docs.select("text"), "text", BpeTrainRounds)
@@ -4143,7 +4143,7 @@ object SparkEntry {
 
     // -- LLM: text analysis (rows 35-38) --
     "text_tokens" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       docs.select(col("doc_id"),
           TextAnalysis.tokenCount(col("text")).as("n_tokens"),
           TextAnalysis.bpeTokenCount(col("text")).as("n_tokens_bpe"),
@@ -4152,7 +4152,7 @@ object SparkEntry {
     },
 
     "text_quality" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       docs.select(col("doc_id") +:
           TextAnalysis.qualityCols(col("text")).map { case (n, c) => c.as(n) }: _*)
         .orderBy("doc_id")
@@ -4169,7 +4169,7 @@ object SparkEntry {
     // Training is bounded by the exact-k per-label budget (ClsTrainCap)
     // so the fit's cost never scales with the corpus.
     "text_classifier" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       val quality = TextAnalysis.qualityCols(col("text"))
         .find(_._1 == "quality").get._2
       val model = graft.llm.Classifier.fit(docs, "doc_id", "text",
@@ -4191,7 +4191,7 @@ object SparkEntry {
       // orderBy ABOVE the scan projection evaluates it twice (range-
       // sampler pass + shuffle write — the round-15 rule); sorting thin
       // rows then projecting runs the scan once, order preserved
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       val langs = TextAnalysis.LangStopwords.map(_._1)
       docs.orderBy("doc_id")
         .select(col("doc_id"), lower(col("text")).as("_lt"))
@@ -4203,7 +4203,7 @@ object SparkEntry {
     },
 
     "text_fingerprint" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       docs.select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
         .orderBy("doc_id")
     },
@@ -4215,7 +4215,7 @@ object SparkEntry {
     // division per component of exact ints), arrays stringified per the
     // no-array-output convention. One native scan, zero shuffle.
     "text_embed" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       val normSq = aggregate(col("emb"), lit(0L),
         (acc, c) => acc + c.cast("long") * c.cast("long"))
       docs.select(col("doc_id"),
@@ -4235,13 +4235,13 @@ object SparkEntry {
 
     // -- LLM: within-document repetition stats (row 45) --
     "text_repetition" -> { (s, dir) =>
-      TextAnalysis.repetition(s.read.parquet(s"$dir/documents.parquet"))
+      TextAnalysis.repetition(Parquet.read(s, s"$dir/documents.parquet"))
         .orderBy("doc_id")
     },
 
     // -- LLM: corpus assembly (rows 42-43) --
     "pipe_sample" -> { (s, dir) =>
-      Pipeline.sampleStratified(s.read.parquet(s"$dir/documents.parquet"),
+      Pipeline.sampleStratified(Parquet.read(s, s"$dir/documents.parquet"),
           "doc_id", "lang", PipeFractions, PipeDefaultFrac, PipeSeed)
         .select("doc_id", "lang", "source")
         .orderBy("doc_id")
@@ -4250,7 +4250,7 @@ object SparkEntry {
     // Exact-k twin (row 42): exactly 25 docs per language in hash order —
     // the count-contract sample (holdouts/probe sets/labeling budgets).
     "pipe_sample_k" -> { (s, dir) =>
-      Pipeline.sampleExactK(s.read.parquet(s"$dir/documents.parquet"),
+      Pipeline.sampleExactK(Parquet.read(s, s"$dir/documents.parquet"),
           "doc_id", "lang", 25, PipeSeed)
         .select("doc_id", "lang", "source", "sample_rank")
         .orderBy("lang", "sample_rank")
@@ -4275,14 +4275,14 @@ object SparkEntry {
 
     // -- LLM: mixture/quota sampling by source (row 53) --
     "pipe_mixture" -> { (s, dir) =>
-      Pipeline.sampleToMixture(s.read.parquet(s"$dir/documents.parquet"),
+      Pipeline.sampleToMixture(Parquet.read(s, s"$dir/documents.parquet"),
           "doc_id", "source", MixShares.toMap, MixTotal, MixSeed)
         .orderBy("doc_id")
     },
 
     // -- LLM: URL canonicalization + per-domain caps (row 55) --
     "url_normalize" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
         .select(col("doc_id"), urlInjected.as("_u"))
       docs.withColumn("url_norm", Web.urlNormalize(col("_u")))
         .select(col("doc_id"), col("url_norm"),
@@ -4290,7 +4290,7 @@ object SparkEntry {
         .orderBy("doc_id")
     },
     "url_domcap" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
         .select(col("doc_id"), urlInjected.as("_u"))
         .withColumn("domain", Web.urlDomain(Web.urlNormalize(col("_u"))))
       Web.capPerDomain(docs, "doc_id", "domain", DomCapK, DomCapSeed)
@@ -4300,7 +4300,7 @@ object SparkEntry {
 
     // -- LLM: end-to-end corpus cleaning (row 54) --
     "pipe_clean" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       Pipeline.cleanCorpus(docs,
           docs.filter(col("doc_id") % DecBenchMod === 0),
           "doc_id", "text", CleanLang, CleanMinQuality, CleanMaxTwf,
@@ -4314,7 +4314,7 @@ object SparkEntry {
     // decon/redact funnel over the EXTRACTED text. The bench side is
     // extracted too (decontamination grams live in text space).
     "pipe_clean_html" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       // Extract ONCE and cache: the funnel body and the decon bench
       // census both consume the extracted text, and previously each ran
       // its own extraction pass (the bench side standalone, the corpus
@@ -4337,7 +4337,7 @@ object SparkEntry {
     // text rewrites to surviving lines), then the standard
     // lang/quality/dedup/decon funnel runs over the cleaned text.
     "pipe_clean_c4" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       val pages = docs.select(col("doc_id"), c4Injected.as("text"))
       val c4 = TextAnalysis.c4LineCols(col("text")).toMap
       // Line-clean ONCE and cache (the pipe_clean_html restructure, same
@@ -4362,7 +4362,7 @@ object SparkEntry {
     // plan composes without a collect or an extra corpus shuffle beyond
     // the stages' own documented exchanges.
     "pipe_funnel" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       // fanOut ONCE at the extraction: every funnel consumer (the fit's
       // label evaluation, the decon bench census, cleanCorpus, packing)
       // re-executes this projection, and each would otherwise run the
@@ -4407,7 +4407,7 @@ object SparkEntry {
     },
 
     "pipe_pack" -> { (s, dir) =>
-      Pipeline.packSequences(s.read.parquet(s"$dir/documents.parquet"),
+      Pipeline.packSequences(Parquet.read(s, s"$dir/documents.parquet"),
           "doc_id", "text", "source", PipeBudget)
         .orderBy("doc_id")
     },
@@ -4416,35 +4416,35 @@ object SparkEntry {
     // VocabK = 20 keeps part of the ~30-word test vocabulary OOV, so
     // in_vocab_frac discriminates at every SF.
     "text_commonness" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       TextAnalysis.commonness(docs, TextAnalysis.vocabulary(docs, "text", VocabK))
         .orderBy("doc_id")
     },
 
     // -- LLM: hashed bigram-LM perplexity scoring (row 60) --
     "text_perplexity" -> { (s, dir) =>
-      TextAnalysis.bigramNll(s.read.parquet(s"$dir/documents.parquet"),
+      TextAnalysis.bigramNll(Parquet.read(s, s"$dir/documents.parquet"),
           "doc_id", "text", None, PplUniBuckets, PplBigBuckets)
         .orderBy("doc_id")
     },
 
     // -- LLM: PMI collocations (row 63) --
     "text_collocations" -> { (s, dir) =>
-      TextAnalysis.collocations(s.read.parquet(s"$dir/documents.parquet"),
+      TextAnalysis.collocations(Parquet.read(s, s"$dir/documents.parquet"),
           "text", CollMinCount, CollK)
         .orderBy(desc("pmi"), col("w1"), col("w2"))
     },
 
     // -- LLM: BM25 lexical retrieval (row 57) --
     "text_bm25" -> { (s, dir) =>
-      Retrieval.bm25TopK(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+      Retrieval.bm25TopK(Parquet.read(s, s"$dir/documents.parquet"), "doc_id", "text",
           Bm25Queries, Bm25K, Bm25K1, Bm25B)
         .orderBy("query_id", "rank")
     },
 
     // -- LLM: corpus-duplicated passages (row 48) --
     "text_passages" -> { (s, dir) =>
-      Dedup.dupPassageStats(s.read.parquet(s"$dir/documents.parquet"),
+      Dedup.dupPassageStats(Parquet.read(s, s"$dir/documents.parquet"),
           "doc_id", "text", PassN, PassMinDocs)
         .orderBy("doc_id")
     },
@@ -4454,7 +4454,7 @@ object SparkEntry {
     // 2022): maximal runs of tokens covered by grams in >= SpanMinDocs
     // documents, as 0-based (start, len) per doc.
     "dedup_spans" -> { (s, dir) =>
-      Dedup.dupSpans(s.read.parquet(s"$dir/documents.parquet"),
+      Dedup.dupSpans(Parquet.read(s, s"$dir/documents.parquet"),
           "doc_id", "text", SpanN, SpanMinDocs)
         .orderBy("doc_id", "span_start")
     },
@@ -4463,7 +4463,7 @@ object SparkEntry {
     // drop, survivors re-join; the cleaned stream is graded by
     // fingerprint (a wrong excision anywhere moves the md5-32).
     "dedup_spans_clean" -> { (s, dir) =>
-      Dedup.removeDupSpans(s.read.parquet(s"$dir/documents.parquet"),
+      Dedup.removeDupSpans(Parquet.read(s, s"$dir/documents.parquet"),
           "doc_id", "text", SpanN, SpanMinDocs)
         .select(col("doc_id"), col("n_tokens"), col("n_kept"),
           Dedup.md5Hash32(col("clean_text")).as("clean_fp"))
@@ -4474,7 +4474,7 @@ object SparkEntry {
     // Lines survive on terminal punctuation + word floor + no
     // "javascript"; lorem-ipsum / brace docs are flagged for dropping.
     "pipe_clean_lines" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
         .select(col("doc_id"), c4Injected.as("_pg"))
       val c = TextAnalysis.c4LineCols(col("_pg")).toMap
       docs.select(col("doc_id"), c("n_lines").as("n_lines"),
@@ -4487,7 +4487,7 @@ object SparkEntry {
     // survives in exactly one place (smallest (doc_id, start)); all
     // other occurrences are excised. Same graded surface.
     "dedup_spans_keep1" -> { (s, dir) =>
-      Dedup.removeDupSpansKeepOne(s.read.parquet(s"$dir/documents.parquet"),
+      Dedup.removeDupSpansKeepOne(Parquet.read(s, s"$dir/documents.parquet"),
           "doc_id", "text", SpanN, SpanMinDocs)
         .select(col("doc_id"), col("n_tokens"), col("n_kept"),
           Dedup.md5Hash32(col("clean_text")).as("clean_fp"))
@@ -4504,7 +4504,7 @@ object SparkEntry {
     // (htmlInjected), extracted by the pinned pipeline; the oracle is the
     // template's closed-form ground truth.
     "text_extract" -> { (s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      Parquet.read(s, s"$dir/documents.parquet")
         .select(col("doc_id"), htmlInjected.as("_h"))
         .select(col("doc_id"), Html.extractText(col("_h")).as("extracted"))
         .orderBy("doc_id")
@@ -4515,7 +4515,7 @@ object SparkEntry {
     // (2) — recovered as an exploded (href, anchor text) edge list in
     // page order; the oracle states the closed-form edge table.
     "text_links" -> { (s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      Parquet.read(s, s"$dir/documents.parquet")
         .select(col("doc_id"), posexplode(Html.links(htmlInjected)))
         .select(col("doc_id"), col("pos").cast("long").as("pos"),
           col("col.href").as("href"), col("col.text").as("anchor_text"))
@@ -4523,14 +4523,14 @@ object SparkEntry {
     },
 
     "text_pii" -> { (s, dir) =>
-      val base = s.read.parquet(s"$dir/documents.parquet")
+      val base = Parquet.read(s, s"$dir/documents.parquet")
         .select(col("doc_id"), piiInjected.as("_t"))
       TextAnalysis.piiAnalysis(base, "doc_id", "_t").orderBy("doc_id")
     },
 
     // -- LLM: document chunking (row 50) --
     "pipe_chunks" -> { (s, dir) =>
-      Pipeline.chunk(s.read.parquet(s"$dir/documents.parquet"),
+      Pipeline.chunk(Parquet.read(s, s"$dir/documents.parquet"),
           "doc_id", "text", ChunkSize, ChunkStride)
         .orderBy("doc_id", "chunk_id")
     },
@@ -4540,7 +4540,7 @@ object SparkEntry {
     // subword ids against the shared BpeVocab, windows of ChunkSize ids
     // with ChunkStride overlap, chunk identity = hash of the id slice.
     "pipe_chunks_bpe" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
         .select(col("doc_id"), lower(col("text")).as("text"))
       Pipeline.chunkSubwords(docs, "doc_id", "text", BpeVocab, ChunkSize, ChunkStride)
         .orderBy("doc_id", "chunk_id")
@@ -4548,7 +4548,7 @@ object SparkEntry {
 
     // -- LLM: SemDeDup semantic near-dup (row 51) --
     "dedup_semantic" -> { (s, dir) =>
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Parquet.read(s, s"$dir/embeddings.parquet")
       val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", SemK, SemIters)
       semCentsExport = Some(cents)
       Similarity.semanticDup(emb, "vec_id", "embedding", SemThreshold, cents)
@@ -4557,7 +4557,7 @@ object SparkEntry {
 
     // -- LLM: SemDeDup, auto-scaled cluster count (row 51, scale path) --
     "dedup_semantic_auto" -> { (s, dir) =>
-      Similarity.semanticDupAuto(s.read.parquet(s"$dir/embeddings.parquet"),
+      Similarity.semanticDupAuto(Parquet.read(s, s"$dir/embeddings.parquet"),
           "vec_id", "embedding", SemThreshold, SemAutoOcc)
         .orderBy("id_a", "id_b")
     },
@@ -4567,7 +4567,7 @@ object SparkEntry {
     // the same cluster-blocked near-dup operator; oracle re-derives the
     // vectors closed-form and replays the frozen-quantizer chain.
     "dedup_text" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       val emb = graft.llm.Embeddings
         .hashedEmbeddings(docs, "doc_id", "text", TxtEmbDim, TxtEmbNs)
         .select(col("doc_id").as("vec_id"),
@@ -4580,7 +4580,7 @@ object SparkEntry {
 
     // -- LLM: IVF search over the auto-scaled quantizer (row 33, scale path) --
     "ann_ivf_auto" -> { (s, dir) =>
-      Similarity.ivfTopKAuto(s.read.parquet(s"$dir/embeddings.parquet"),
+      Similarity.ivfTopKAuto(Parquet.read(s, s"$dir/embeddings.parquet"),
           "vec_id", "embedding", AnnQueryIds, AnnK, SemAutoOcc,
           AnnAutoProbe1, AnnAutoProbe2)
         .orderBy("q_id", "rank")
@@ -4592,7 +4592,7 @@ object SparkEntry {
     // sample reaches ProbeAutoTarget; the search at the chosen config is
     // what ships — and what the oracle replays from the exported widths.
     "ann_probe_auto" -> { (s, dir) =>
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Parquet.read(s, s"$dir/embeddings.parquet")
       val cfg = Similarity.ivfAutoProbe(emb, "vec_id", "embedding", AnnK,
         ProbeAutoTarget, nCalib = 12, targetOccupancy = SemAutoOcc)
       probeAutoExport = Some((cfg.nProbeCoarse, cfg.nProbeFine))
@@ -4603,7 +4603,7 @@ object SparkEntry {
 
     // -- LLM: deterministic corpus shuffle (row 46) --
     "pipe_shuffle" -> { (s, dir) =>
-      Pipeline.shuffleDeterministic(s.read.parquet(s"$dir/documents.parquet"),
+      Pipeline.shuffleDeterministic(Parquet.read(s, s"$dir/documents.parquet"),
           "doc_id", PipeSeed, PipeShards)
         .orderBy("doc_id")
     },
@@ -4612,7 +4612,7 @@ object SparkEntry {
     // Eval set = every DecBenchMod-th document, train = the rest; flag
     // train docs sharing any word DecN-gram with the eval set.
     "decon_flags" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       Pipeline.decontaminate(
           docs.filter(col("doc_id") % DecBenchMod =!= 0),
           docs.filter(col("doc_id") % DecBenchMod === 0),
@@ -4621,7 +4621,7 @@ object SparkEntry {
     },
 
     "decon_clean" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       Pipeline.decontaminated(
           docs.filter(col("doc_id") % DecBenchMod =!= 0),
           docs.filter(col("doc_id") % DecBenchMod === 0),
@@ -4632,7 +4632,7 @@ object SparkEntry {
 
     // -- LLM: fuzzy (MinHash) decontamination (row 44, near-dup guard) --
     "decon_fuzzy" -> { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Parquet.read(s, s"$dir/documents.parquet")
       Pipeline.decontaminateFuzzy(
           docs.filter(col("doc_id") % DecBenchMod =!= 0),
           docs.filter(col("doc_id") % DecBenchMod === 0),

@@ -190,7 +190,7 @@ object Opset {
   /** Load a store previously written by [[Opset.save]]. */
   def load(spark: SparkSession, path: String,
            recordCol: String = "record", tCol: String = "t"): Opset =
-    Opset(spark.read.parquet(path), recordCol, tCol)
+    Opset(Parquet.read(spark, path), recordCol, tCol)
 
   /** Sample-data helper (tabata opset.py:465 `datafile`): the canonical
     * test Opset at a given scale factor directory.
@@ -218,9 +218,11 @@ object Opset {
     // don't copy this pattern into a general-purpose library. Callers
     // that aggregate ON event time (not just order by it) must branch on
     // the read schema — see the stream_counts builder in SparkEntry for
-    // the long-vs-timestamp template.
+    // the long-vs-timestamp template. The flag is set BEFORE the read:
+    // Parquet.read converts the footer to a schema on the driver while
+    // the DataFrame is built, so the conversion sees the flag.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val ev = Parquet.read(spark, s"$dir/events.parquet")
     // Materialize `record` BEFORE the window and partition the window on it:
     // predicate pushdown through Window is attribute-based, so a filter on
     // `record` only slides below the shuffle if `record` itself is the

@@ -36,7 +36,11 @@ object SignalOps {
     * Implementation note: row number and record length are materialized as
     * temporary columns first — Spark (correctly) refuses window expressions
     * nested inside another window's aggregate, so `max(when(rn = n - j, x))
-    * over full-frame` must reference plain columns.
+    * over full-frame` must reference plain columns. Each group of mutually
+    * independent columns (row number and length; the two edge arrays) is
+    * added in one ordered `select`, so the plan is analysed once per
+    * dependency level rather than once per column, and both edge arrays
+    * come from one WindowExec.
     *
     * @param x     signal column name
     * @param rec   record column name
@@ -52,13 +56,13 @@ object SignalOps {
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
     val base = df
-      .withColumn("_sg_rn", row_number().over(wOrd).cast("long"))
-      .withColumn("_sg_n", count(lit(1)).over(wFull))
+      .select(col("*"), row_number().over(wOrd).cast("long").as("_sg_rn"),
+        count(lit(1)).over(wFull).as("_sg_n"))
       .filter(col("_sg_n") >= w)
 
     val (fw, lw) = sgEdgeArrays(col(x), rec, t, col("_sg_rn"), col("_sg_n"), w)
     base
-      .withColumn("_sg_fw", fw).withColumn("_sg_lw", lw)
+      .select(col("*"), fw.as("_sg_fw"), lw.as("_sg_lw"))
       .withColumn(out, sgExpr(col(x), rec, t, col("_sg_rn"), col("_sg_n"), w, deg, deriv,
         col("_sg_fw"), col("_sg_lw")))
       .drop("_sg_rn", "_sg_n", "_sg_fw", "_sg_lw")
@@ -66,12 +70,12 @@ object SignalOps {
 
   /** The edge-sample arrays of one (signal, window) pair: the record's
     * FIRST w samples and its REVERSED last w samples, each as one
-    * full-frame window column. Materialize both ONCE (one `withColumn`
-    * each) and pass the resulting attribute to [[sgExpr]] — window
-    * extraction hoists every syntactic occurrence of a window expression
-    * separately, so inlining these in the per-edge-row CASE branches
-    * would plant w window frames per edge row (440 at w=21) instead
-    * of 2 per (signal, window).
+    * full-frame window column. Materialize both ONCE (one column each,
+    * added together in one `select`) and pass the resulting attributes
+    * to [[sgExpr]] — window extraction hoists every syntactic occurrence
+    * of a window expression separately, so inlining these in the
+    * per-edge-row CASE branches would plant w window frames per edge
+    * row (440 at w=21) instead of 2 per (signal, window).
     *
     * `collect_list` skips nulls: a null sample inside an edge window would
     * silently SHIFT the collected array and yield wrong (not null) SG

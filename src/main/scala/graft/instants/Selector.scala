@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.classification.{DecisionTreeClassificationModel, DecisionTreeClassifier, RandomForestClassifier}
 import org.apache.spark.ml.tree.{ContinuousSplit, InternalNode, LeafNode, Node}
+import graft.core.Parquet
 import graft.dsp.SignalOps
 
 /** Instant detection learner — the reference's flagship (tabata
@@ -51,7 +52,7 @@ object Selector {
 
   /** Reload a detector written by [[save]]. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): SelectorModel = {
-    val feats = spark.read.parquet(s"$path/features")
+    val feats = Parquet.read(spark, s"$path/features")
       .orderBy("idx").collect().map(_.getAs[String]("feature")).toSeq
     SelectorModel(feats, DecisionTreeClassificationModel.load(s"$path/tree"))
   }

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.CacheScope
+import graft.core.{CacheScope, Parquet}
 
 /** Persistent MinHash-LSH dedup index — the INCREMENTAL near-dedup path.
   *
@@ -153,7 +153,7 @@ object MinhashIndex {
     val cfg = readConfig(spark, path)
     val (bandsNewRaw, setsNew) = derive(docs, idCol, textCol, cfg, scope)
     val bandsNew = scope.cache(bandsNewRaw)
-    val bandsOld = spark.read.parquet(s"$path/bands")
+    val bandsOld = Parquet.read(spark, s"$path/bands")
     // Mega-bucket cap on the UNION census: the whole-corpus run counts
     // stored + batch rows per bucket before dropping, so the incremental
     // path must too — capping either side alone would keep buckets the
@@ -190,7 +190,7 @@ object MinhashIndex {
       .distinct()
     // Exact re-rank: shingle sets come from the stored table for corpus
     // docs and the batch derivation for batch docs — never recomputed.
-    val setsAll = spark.read.parquet(s"$path/sets").unionByName(setsNew)
+    val setsAll = Parquet.read(spark, s"$path/sets").unionByName(setsNew)
     val (inter, uni) = Dedup.overlapCols(col("sh_a"), col("sh_b"))
     // Pin the re-rank's parallelism: a candidate pair is 16 BYTES on the
     // wire but costs a whole set_overlap over two document-sized arrays
@@ -212,7 +212,7 @@ object MinhashIndex {
     * one row `(n_docs, n_buckets, mean_occupancy, max_occupancy)`.
     */
   def indexStats(spark: SparkSession, path: String): DataFrame = {
-    val bands = spark.read.parquet(s"$path/bands")
+    val bands = Parquet.read(spark, s"$path/bands")
     bands.groupBy("bucket").agg(count(lit(1)).as("_sz"))
       .agg(count(lit(1)).as("n_buckets"), round(avg("_sz"), 6).as("mean_occupancy"),
         max("_sz").as("max_occupancy"))

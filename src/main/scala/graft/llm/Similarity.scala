@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graft.Catalyst.{column, expression}
+import graft.core.Parquet
 import graft.functions.{ArrayDotProduct, PqSubCode}
 
 /** Embedding similarity search and near-duplicate detection.
@@ -538,7 +539,7 @@ object Similarity {
     val nProbe = readIvfProbeConfig(spark, path)
       .map(c => math.min(c.nProbeCoarse * c.nProbeFine, cents.length))
       .getOrElse(defaultNProbe)
-    ivfIndexTopK(spark.read.parquet(path), queries, idCol, vecCol, k, cents,
+    ivfIndexTopK(Parquet.read(spark, path), queries, idCol, vecCol, k, cents,
       nProbe, maxPlanCells)
   }
   def ivfIndexTopK(spark: org.apache.spark.sql.SparkSession, path: String,

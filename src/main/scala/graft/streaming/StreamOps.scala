@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.core.Parquet
 
 /** Structured-Streaming operators over the engine's data model: the same
   * transformations the batch operators declare, re-expressed for
@@ -404,7 +405,7 @@ object StreamOps {
     * fold back into the global answer.
     */
   def readSlices(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("batch")
+    Parquet.read(spark, path).drop("batch")
 
   def writeOpsetStore(df: DataFrame, path: String, checkpoint: String,
                       trigger: org.apache.spark.sql.streaming.Trigger =

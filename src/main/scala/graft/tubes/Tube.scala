@@ -3,7 +3,7 @@ package graft.tubes
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Opset
+import graft.core.{Opset, Parquet}
 
 /** Confidence tubes — the reference's second flagship (tabata tubes.py).
   *
@@ -103,6 +103,12 @@ object Tube {
     * once. Distinct factors share their `sum(x)`/`sum(x*x)` columns
     * across targets. Temp columns are prefixed `_tb_` for the caller to
     * drop.
+    *
+    * The sums are mutually independent, so they are added in ONE ordered
+    * `select`: the plan is analysed once, not once per `withColumn`, and
+    * all sums land in one WindowExec (chained, the projections of `x*x`
+    * and `x*y` between the steps kept Spark from merging them: 7 windows
+    * for one target). Not `withColumns(Map)`: a map reorders the columns.
     */
   private def withOlsPreds(df: DataFrame, rec: String,
                            targets: Seq[(String, Seq[String])])
@@ -110,19 +116,17 @@ object Tube {
     val w = Window.partitionBy(rec)
     val allFactors = targets.flatMap(_._2).distinct
     val fIdx = allFactors.zipWithIndex.toMap
-    var d = df.withColumn("_tb_n", count(lit(1)).over(w).cast("double"))
-    allFactors.foreach { f =>
+    val factorSums = allFactors.flatMap { f =>
       val x = col(f); val i = fIdx(f)
-      d = d.withColumn(s"_tb_sx_$i", sum(x).over(w))
-        .withColumn(s"_tb_sxx_$i", sum(x * x).over(w))
+      Seq(sum(x).over(w).as(s"_tb_sx_$i"), sum(x * x).over(w).as(s"_tb_sxx_$i"))
     }
-    targets.zipWithIndex.foreach { case ((target, factors), k) =>
+    val targetSums = targets.zipWithIndex.flatMap { case ((target, factors), k) =>
       val y = col(target)
-      d = d.withColumn(s"_tb_sy_$k", sum(y).over(w))
-      factors.foreach { f =>
-        d = d.withColumn(s"_tb_sxy_${k}_${fIdx(f)}", sum(col(f) * y).over(w))
-      }
+      sum(y).over(w).as(s"_tb_sy_$k") +:
+        factors.map(f => sum(col(f) * y).over(w).as(s"_tb_sxy_${k}_${fIdx(f)}"))
     }
+    val d = df.select(col("*") +: count(lit(1)).over(w).cast("double").as("_tb_n") +:
+      (factorSums ++ targetSums): _*)
     val n = col("_tb_n")
     val preds = targets.zipWithIndex.map { case ((_, factors), k) =>
       val sy = col(s"_tb_sy_$k")
@@ -155,10 +159,11 @@ object Tube {
     val z = preds.reduce(_ + _) / preds.size
     val pMin = preds.reduce(least(_, _))
     val pMax = preds.reduce(greatest(_, _))
+    // z first, then both bounds over it: one projection per dependency level
     d.withColumn("z", z)
-      .withColumn("zmin", col("z") - lit(q) * (col("z") - pMin))
-      .withColumn("zmax", col("z") + lit(q) * (pMax - col("z")))
-      .select(col(rec), col(t), col(target).as("y"), col("z"), col("zmin"), col("zmax"))
+      .select(col(rec), col(t), col(target).as("y"), col("z"),
+        (col("z") - lit(q) * (col("z") - pMin)).as("zmin"),
+        (col("z") + lit(q) * (pMax - col("z"))).as("zmax"))
   }
 
   /** Out-of-tube scores per record (tubes.py:376/392): N samples and the
@@ -254,7 +259,7 @@ object Tube {
     */
   def loadFitted(spark: org.apache.spark.sql.SparkSession,
                  path: String): Seq[(String, Seq[TubeModel])] =
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
       .orderBy("target", "idx").collect()
       .map { r =>
         (r.getAs[String]("target"),

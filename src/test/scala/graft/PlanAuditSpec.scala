@@ -551,4 +551,12 @@ class PlanAuditSpec extends SparkSpec {
       case b: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => b
     }.nonEmpty, s"boundary table must broadcast:\n$p")
   }
+
+  test("building a plan runs no Spark job: parquet schemas come from footers") {
+    for (q <- Seq("sg_smooth", "events_funnel", "plot_byunit", "text_pii", "dedup_exact_salted"))
+      assert(jobsStarted(SparkEntry.queries(q)(spark, dir)) === 0, s"jobs while building $q")
+    val store = java.nio.file.Files.createTempDirectory("graft-audit-store").toString
+    Opset.fromEvents(spark, dir).save(store)
+    assert(jobsStarted(Opset.load(spark, store)) === 0, "jobs while loading an Opset store")
+  }
 }

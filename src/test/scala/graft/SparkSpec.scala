@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerProbe
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,5 +41,21 @@ trait SparkSpec extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
+  }
+
+  /** The number of Spark jobs `body` starts. The listener bus is drained
+    * before the count starts and after `body` returns, so earlier jobs'
+    * events are not counted and this body's are not missed.
+    */
+  def jobsStarted(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val started = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    ListenerProbe.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerProbe.drain(sc); started.get }
+    finally sc.removeSparkListener(listener)
   }
 }

@@ -2,13 +2,14 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Fixpoint
 
-/** Graph analytics over edge lists — the iterative-join frontier that
-  * [[graft.llm.Dedup.components]] pioneered for connected components,
-  * generalized: per round, state joins the edge list, aggregates at the
-  * receiving end, and materializes (checkpoint) so lineage stays flat.
-  * On a 1000-executor cluster each round is one co-partitioned join +
-  * one aggregation; nothing data-sized ever reaches the driver.
+/** Graph analytics over edge lists. The iterative operators run on
+  * [[graft.core.Fixpoint]]: per round, state joins the edge list,
+  * aggregates at the receiving end, and is materialized (checkpoint) so
+  * lineage stays flat. On a 1000-executor cluster each round is one
+  * co-partitioned join + one aggregation; nothing data-sized ever reaches
+  * the driver.
   */
 object Graph {
 
@@ -25,25 +26,13 @@ object Graph {
     * `(node, rank)` with rank in units (ticks / 1e9).
     *
     * Fixed `iters` rounds — rank is a fixpoint quantity and the graded
-    * contract is the k-round value, not a convergence race; each round
-    * materializes via local (or reliable, when `checkpointDir` is set)
-    * checkpoint and frees the superseded round, the components-loop
-    * hygiene.
+    * contract is the k-round value, not a convergence race; the rounds
+    * run on [[graft.core.Fixpoint]] (local, or reliable when
+    * `checkpointDir` is set).
     */
   def pagerank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int = 5, checkpointDir: Option[String] = None,
-               broadcastNodeLimit: Long = 5000000L): DataFrame = {
+               iters: Int = 5, checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1 && iters <= 100, "pagerank: iters must be in [1,100]")
-    val spark = edges.sparkSession
-    val prevCkptDir = spark.sparkContext.getCheckpointDir
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def materialize(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-    def release(df: DataFrame): Unit =
-      if (checkpointDir.isEmpty)
-        df.queryExecution.analyzed.collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-        }.foreach(_.unpersist(false))
     val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst")).cache()
     val deg = e.groupBy("_src").agg(count(lit(1)).as("_deg")).cache()
     val nodes = e.select(col("_src").as("node"))
@@ -56,28 +45,27 @@ object Graph {
     // web-graph regime where node tables outgrow executor memory — the
     // rounds fall back to ordinary co-shuffled joins, which is the shape
     // that scales arbitrarily.
-    val broadcastable = nodes.count() <= broadcastNodeLimit
+    val broadcastable = nodes.count() <= BroadcastNodeLimit
     def side(df: DataFrame): DataFrame = if (broadcastable) broadcast(df) else df
     try {
-      var ranks = materialize(nodes.withColumn("_r", lit(1000000000L)))
-      for (_ <- 1 to iters) {
+      val init = nodes.withColumn("_r", lit(1000000000L))
+      val (last, _) = Fixpoint(init, iters, checkpointDir) { ranks =>
         val recv = e.join(side(deg), "_src")
           .join(side(ranks.select(col("node").as("_src"), col("_r"))), "_src")
           .select(col("_dst").as("node"), expr("_r div _deg").as("_c"))
           .groupBy("node").agg(sum(col("_c")).as("_m"))
-        val next = materialize(
-          nodes.join(recv, Seq("node"), "left")
-            .select(col("node"), (lit(150000000L) +
-              expr("(85 * coalesce(_m, CAST(0 AS BIGINT))) div 100")).as("_r")))
-        release(ranks)
-        ranks = next
+        nodes.join(recv, Seq("node"), "left")
+          .select(col("node"), (lit(150000000L) +
+            expr("(85 * coalesce(_m, CAST(0 AS BIGINT))) div 100")).as("_r"))
       }
-      ranks.select(col("node"), (col("_r") / 1e9).as("rank"))
+      last.select(col("node"), (col("_r") / 1e9).as("rank"))
     } finally {
       e.unpersist(false); deg.unpersist(false); nodes.unpersist(false)
-      prevCkptDir.foreach(spark.sparkContext.setCheckpointDir)
     }
   }
+
+  /** Node count up to which [[pagerank]] broadcasts its rank and degree tables. */
+  private val BroadcastNodeLimit = 5000000L
 
   /** Canonical undirected simple-graph edge set: (min, max) id order,
     * self-loops dropped, parallel edges collapsed.
@@ -211,52 +199,32 @@ object Graph {
     * joins against the round's DROP set — the set of vertices peeled
     * this round, which (after the first round) is far smaller than the
     * keep-set the first formulation joined on, so AQE broadcasts it
-    * almost immediately and the edge table stops shuffling at all. Each
-    * round materializes (localCheckpoint) and frees its predecessor, the
-    * components/pagerank loop hygiene that keeps lineage flat at any
-    * round count. Edges only ever SHRINK, so the round cost is
+    * almost immediately and the edge table stops shuffling at all. The
+    * rounds run on [[graft.core.Fixpoint]], which keeps lineage flat at
+    * any round count. Edges only ever SHRINK, so the round cost is
     * non-increasing — the opposite of the frontier-expansion loops.
     */
   def kcore(edges: DataFrame, srcCol: String, dstCol: String,
             k: Int, rounds: Int): DataFrame = {
     require(k >= 1, "kcore: k must be >= 1")
     require(rounds >= 1 && rounds <= 100, "kcore: rounds must be in [1,100]")
-    def materialize(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(false))
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("degree"))
-    var e = materialize(canonical(edges, srcCol, dstCol))
-    var eCount = e.count()
-    var round = 0
-    var converged = false
-    while (round < rounds && !converged) {
-      round += 1
-      // ONE materialization job per round: the drop set computes inline
-      // as the anti-join's build side (AQE sees its runtime size and
-      // broadcasts it as the peel converges); the early-exit signal is
-      // the free count of the just-materialized edge RDD — edges only
-      // shrink, so an unchanged count proves the drop set was empty and
-      // every later round is an identity
+    // ONE materialization job per round: the drop set computes inline as
+    // the anti-join's build side (AQE sees its runtime size and broadcasts
+    // it as the peel converges); the early-exit signal is the edge count,
+    // observed free on that same job — edges only shrink, so an unchanged
+    // count proves the drop set was empty and every later round is an
+    // identity
+    val (core, _) = Fixpoint(canonical(edges, srcCol, dstCol), rounds,
+        stopWhenStable = Some(count(lit(1)))) { e =>
       val drop = degrees(e).filter(col("degree") < k).select(col("node"))
-      val next = materialize(
-        e.join(drop.select(col("node").as("u")), Seq("u"), "left_anti")
-          .join(drop.select(col("node").as("v")), Seq("v"), "left_anti")
-          .select("u", "v"))
-      val nextCount = next.count()
-      if (nextCount == eCount) {
-        converged = true
-        release(next)
-      } else {
-        release(e)
-        e = next
-        eCount = nextCount
-      }
+      e.join(drop.select(col("node").as("u")), Seq("u"), "left_anti")
+        .join(drop.select(col("node").as("v")), Seq("v"), "left_anti")
+        .select("u", "v")
     }
-    degrees(e)
+    degrees(core)
   }
 
   /** Local clustering coefficient per vertex, in EXACT 1e-6 integer

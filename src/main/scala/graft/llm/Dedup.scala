@@ -475,111 +475,56 @@ object Dedup {
     * driver only ever sees the converged/not bit per round, never data
     * rows.
     *
-    * Each round's result is checkpointed (eager): without lineage
-    * truncation the logical plan DOUBLES per round (round k's plan embeds
-    * round k-1's twice — once in the label join, once in the neighbor
-    * aggregate) and Catalyst analysis alone goes exponential by ~10
-    * rounds. `checkpointDir = None` uses `localCheckpoint` (executor
-    * block store — fast, but a lost executor loses blocks with no lineage
-    * to rebuild them); pass a reliable directory (HDFS/S3) for a cluster
-    * run that must survive executor loss mid-loop — the algorithm is
-    * unchanged, each round then lands on checkpoint storage. The
-    * SparkContext checkpoint dir is saved and restored around the loop,
-    * and on the local path each superseded round's blocks are freed as
-    * soon as the next round is materialized, so storage stays bounded by
-    * one round regardless of graph diameter.
+    * Each round is materialised by [[graft.core.Fixpoint]] (lineage cut,
+    * local or reliable checkpoint, superseded rounds freed); the exact
+    * label sum, observed on the round's own job, is its stop signal.
     */
   def components(pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
                  maxIters: Int = 50, checkpointDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
-    // setCheckpointDir is a SparkContext-wide mutation: save and restore
-    // the previous dir so the loop does not silently redirect unrelated
-    // code's reliable checkpoints for the rest of the session
-    val prevCkptDir = spark.sparkContext.getCheckpointDir
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def materialize(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-    // A localCheckpoint's blocks live until the wrapping Dataset is GC'd;
-    // across a deep (high-diameter) loop the superseded rounds would pile
-    // up bounded-but-wasteful block storage, so each round explicitly
-    // frees the round k-1 result and the intermediate once round k is
-    // materialized. The reliable-checkpoint path is left untouched (its
-    // files are the executor-loss recovery story; cleanup there is the
-    // checkpoint dir's retention policy).
-    def release(df: DataFrame): Unit =
-      if (checkpointDir.isEmpty)
-        df.queryExecution.analyzed.collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-        }.foreach(_.unpersist(false))
     // `edges` is loop-internal (nothing lazy escapes with it), so unlike
     // the operator-local caches above it is released before returning.
     val edges = pairs.select(col(aCol).as("_src"), col(bCol).as("_dst"))
       .union(pairs.select(col(bCol).as("_src"), col(aCol).as("_dst")))
       .distinct().cache()
     try {
-      var labels = edges.select(col("_src").as("id")).distinct()
+      val init = edges.select(col("_src").as("id")).distinct()
         .withColumn("label", col("id"))
-      labels = materialize(labels)
       // convergence is detected by the exact sum of labels: every label
       // move is a strict DECREASE (least of current and candidates), so
-      // the sum is unchanged iff no node changed — a one-row aggregate
-      // over the already-checkpointed round result, instead of a
-      // join-against-previous + count job per round. decimal(38,0) keeps
-      // the sum exact (1e9 ids × 2^63 still fits in 38 digits).
-      def labelSum(df: DataFrame): java.math.BigDecimal = {
-        val s = df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
-        if (s == null) java.math.BigDecimal.ZERO else s // empty graph
-      }
-      var prevSum = labelSum(labels)
-      var round = 0
-      var converged = false
-      while (!converged && round < maxIters) {
-        val nbrMin = edges.join(labels.withColumnRenamed("id", "_dst"), "_dst")
-          .groupBy(col("_src").as("id")).agg(min("label").as("_nl"))
-        // propagation and pointer jump FUSED into one materialization:
-        // the jump reads label(·) from the PREVIOUS round's materialized
-        // labels (not from this round's propagation result, which would
-        // need its own checkpoint to avoid recomputing the edge join on
-        // both sides of the self-join — the cost of a whole extra
-        // materialization job per round). Jumping through a one-step-
-        // stale table is still a monotone min of component-member labels,
-        // so the fixpoint — labels constant per component at the
-        // component MINIMUM, which is what propagation alone already
-        // guarantees — is unchanged; only the per-round compression depth
-        // differs, and convergence is still detected by the exact label
-        // sum. Labels are ids of component members (invariant:
-        // initialized to own id, min-ed with other members' ids), so
-        // every jumped-to label has a row in `labels`.
-        val prop = least(col("label"), coalesce(col("_nl"), col("label")))
-        val relabel = labels.select(col("id").as("_lid"), col("label").as("_jl"))
-        val updated = materialize(labels.join(nbrMin, Seq("id"), "left")
-          .select(col("id"), prop.as("_m"))
-          .join(relabel, col("_m") === col("_lid"), "left")
-          .select(col("id"),
-            least(col("_m"), coalesce(col("_jl"), col("_m"))).as("label")))
-        val s = labelSum(updated)
-        // round k is materialized and summed: the superseded round k-1
-        // blocks are dead weight now
-        release(labels)
-        labels = updated
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
-        round += 1
-      }
+      // the sum is unchanged iff no node changed. decimal(38,0) keeps the
+      // sum exact (1e9 ids × 2^63 still fits in 38 digits).
+      val labelSum = sum(col("label").cast("decimal(38,0)"))
+      val (comp, converged) =
+        graft.core.Fixpoint(init, maxIters, checkpointDir, Some(labelSum)) { labels =>
+          val nbrMin = edges.join(labels.withColumnRenamed("id", "_dst"), "_dst")
+            .groupBy(col("_src").as("id")).agg(min("label").as("_nl"))
+          // propagation and pointer jump FUSED into one materialization:
+          // the jump reads label(·) from the PREVIOUS round's materialized
+          // labels (not from this round's propagation result, which would
+          // need its own checkpoint to avoid recomputing the edge join on
+          // both sides of the self-join — the cost of a whole extra
+          // materialization job per round). Jumping through a one-step-
+          // stale table is still a monotone min of component-member labels,
+          // so the fixpoint — labels constant per component at the
+          // component MINIMUM, which is what propagation alone already
+          // guarantees — is unchanged; only the per-round compression depth
+          // differs, and convergence is still detected by the exact label
+          // sum. Labels are ids of component members (invariant:
+          // initialized to own id, min-ed with other members' ids), so
+          // every jumped-to label has a row in `labels`.
+          val prop = least(col("label"), coalesce(col("_nl"), col("label")))
+          val relabel = labels.select(col("id").as("_lid"), col("label").as("_jl"))
+          labels.join(nbrMin, Seq("id"), "left")
+            .select(col("id"), prop.as("_m"))
+            .join(relabel, col("_m") === col("_lid"), "left")
+            .select(col("id"),
+              least(col("_m"), coalesce(col("_jl"), col("_m"))).as("label"))
+        }
       require(converged,
         s"Dedup.components: not converged after $maxIters rounds — the pair " +
           "graph has a component of diameter > ~2^maxIters; raise maxIters")
-      labels
-    } finally {
-      edges.unpersist(false)
-      prevCkptDir match {
-        case Some(d) => spark.sparkContext.setCheckpointDir(d)
-        case None if checkpointDir.isDefined =>
-          // Option(null) → None inside setCheckpointDir: restores "unset"
-          spark.sparkContext.setCheckpointDir(null)
-        case None => ()
-      }
-    }
+      comp
+    } finally edges.unpersist(false)
   }
 
   /** Cluster assignment for EVERY document: `cluster_id` = the component

@@ -60,4 +60,19 @@ class SparkEntrySpec extends SparkSpec {
       assert(consumerFirst == producerFirst)
     }
   }
+
+  // The driver's smoke check runs `entry` in a plain session. events.parquet
+  // is the only table that needs `nanosAsLong`, so `entry` and the queries
+  // over documents and embeddings must run without it.
+  test("entry and the document/embedding queries run with nanosAsLong unset") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    try {
+      assert(SparkEntry.entry(spark).count() > 0)
+      for (q <- Seq("ann_topk", "text_fingerprint", "dedup_minhash_sig", "dedup_jaccard",
+          "text_collocations", "text_perplexity", "text_repetition"))
+        assert(SparkEntry.queries(q)(spark, Dir).count() > 0, q)
+    } finally prev.foreach(spark.conf.set(key, _))
+  }
 }

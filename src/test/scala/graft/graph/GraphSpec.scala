@@ -47,6 +47,19 @@ class GraphSpec extends SparkSpec {
     assert(r("c") === (150000000L + (85L * third) / 100) / 1e9)
   }
 
+  test("pagerank: checkpoint dir is restored after a checkpointDir run") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-restore").toString
+    try {
+      assert(spark.sparkContext.getCheckpointDir === None)
+      val cyc = Seq(("a", "b"), ("b", "a")).toDF("s", "d")
+      Graph.pagerank(cyc, "s", "d", iters = 2, checkpointDir = Some(dir)).collect()
+      assert(spark.sparkContext.getCheckpointDir === None,
+        "pagerank leaked its checkpoint dir into the session")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   // --- triangles ---
 
   test("triangles: K4 has C(4,3)=4 triangles, 3 per vertex; a path has none") {
@@ -232,6 +245,63 @@ class GraphSpec extends SparkSpec {
     val rep = Graph.kcore(g.repartition(7), "s", "d", 2, 6)
       .collect().map(_.getLong(0)).toSet
     assert(rep === r4)
+  }
+
+  test("kcore on generated multigraphs: brute-force peel, fixed rounds, any partitioning") {
+    // seeded multigraphs with parallel and reversed edges, self-loops,
+    // 5-cliques (a dense core) and long pendant chains, which peel one
+    // vertex per round from their free end
+    import org.scalacheck.{Gen, rng}
+    def sampled[A](g: Gen[A], n: Int, seed: Long): Seq[A] =
+      (0 until n).flatMap(i => g.apply(Gen.Parameters.default, rng.Seed(seed + i)))
+    val genV = Gen.choose(1L, 30L)
+    val genPair = Gen.zip(genV, genV)
+    val genEdges: Gen[Seq[(Long, Long)]] = Gen.frequency(
+      6 -> genPair.map(Seq(_)),
+      2 -> genPair.map(p => Seq(p, p)),
+      2 -> genPair.map(p => Seq(p, p.swap)),
+      1 -> genV.map(v => Seq((v, v))),
+      1 -> Gen.choose(40L, 60L).map(b => // a 5-clique
+        for (i <- 0L to 4L; j <- i + 1 to 4L) yield (b * 5 + i, b * 5 + j)),
+      1 -> Gen.zip(genV, Gen.choose(100L, 120L), Gen.choose(3, 20)).map { case (v, b, len) =>
+        val ids = v +: (0L until len.toLong).map(b * 100 + _)
+        ids.zip(ids.tail)
+      },
+    )
+    // the peel itself: drop every vertex of degree < k with its edges,
+    // until a round drops nothing or `rounds` rounds have run
+    def peel(raw: Seq[(Long, Long)], k: Int, rounds: Int): Map[Long, Long] = {
+      def degrees(es: Set[(Long, Long)]): Map[Long, Long] =
+        es.toSeq.flatMap(p => Seq(p._1, p._2)).groupBy(identity)
+          .map { case (n, xs) => n -> xs.size.toLong }
+      var es = raw.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+        .filter(p => p._1 != p._2).toSet
+      var (round, dropped) = (0, true)
+      while (round < rounds && dropped) {
+        val drop = degrees(es).filter(_._2 < k).keySet
+        dropped = drop.nonEmpty
+        es = es.filterNot(p => drop(p._1) || drop(p._2))
+        round += 1
+      }
+      degrees(es)
+    }
+    def asMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    for (seed <- Seq(5L, 23L, 211L)) {
+      val raw = sampled(genEdges, 80, seed).flatten
+      val edges = raw.toDF("s", "d")
+      val core2 = peel(raw, 2, 100)
+      assert(core2.nonEmpty && peel(raw, 2, 2) != core2,
+        s"seed=$seed: fixture must have a 2-core and chains longer than 2 rounds")
+      for (parts <- Seq(1, 7)) {
+        val e = edges.repartition(parts)
+        assert(asMap(Graph.kcore(e, "s", "d", 2, 100)) === core2, s"seed=$seed parts=$parts k=2")
+        assert(asMap(Graph.kcore(e, "s", "d", 3, 100)) === peel(raw, 3, 100),
+          s"seed=$seed parts=$parts k=3")
+        assert(asMap(Graph.kcore(e, "s", "d", 2, 2)) === peel(raw, 2, 2),
+          s"seed=$seed parts=$parts k=2 rounds=2")
+      }
+    }
   }
 
   test("clustering: K4 is 1.0 everywhere; paths are 0; hub-star ticks hand-checked") {

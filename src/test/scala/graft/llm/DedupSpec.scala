@@ -234,6 +234,68 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("components: the 200-edge chain reads convergence off its own rounds") {
+    import spark.implicits._
+    // the loop's stop metric is observed on each round's materialisation
+    // job; a separate convergence job per round took this chain to 86 jobs
+    val pairs = (1L to 200L).map(i => (i + 1, i)).toDF("id_a", "id_b")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-jobs").toString
+    try {
+      for (ckpt <- Seq(None, Some(dir))) {
+        val jobs = jobsStarted(Dedup.components(pairs, checkpointDir = ckpt))
+        assert(jobs <= 66, s"checkpointDir=$ckpt: $jobs jobs")
+      }
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("components on generated pair graphs: union-find, any partitioning") {
+    import spark.implicits._
+    // seeded pair tables with parallel and reversed pairs, self-loops and
+    // long chains whose minimum id sits at the far end (the case pointer
+    // jumping exists for)
+    import org.scalacheck.{Gen, rng}
+    def sampled[A](g: Gen[A], n: Int, seed: Long): Seq[A] =
+      (0 until n).flatMap(i => g.apply(Gen.Parameters.default, rng.Seed(seed + i)))
+    val genV = Gen.choose(1L, 60L)
+    val genPair = Gen.zip(genV, genV)
+    val genPairs: Gen[Seq[(Long, Long)]] = Gen.frequency(
+      6 -> genPair.map(Seq(_)),
+      2 -> genPair.map(p => Seq(p, p)),
+      2 -> genPair.map(p => Seq(p, p.swap)),
+      1 -> genV.map(v => Seq((v, v))),
+      1 -> Gen.zip(Gen.choose(10L, 19L), Gen.choose(5, 40)).map { case (b, len) =>
+        (0 until len).map(i => (b * 100 + i + 1, b * 100 + i))
+      },
+    )
+    // union-find with the smaller root always kept, so a root is its
+    // component's minimum id
+    def reference(raw: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      raw.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.toSeq.map(x => x -> find(x)).toMap
+    }
+    for (seed <- Seq(7L, 41L, 303L)) {
+      val raw = sampled(genPairs, 60, seed).flatten
+      val want = reference(raw)
+      assert(want.values.groupBy(identity).values.exists(_.size >= 10),
+        s"seed=$seed: fixture must hold a long component")
+      for (parts <- Seq(1, 7)) {
+        val got = Dedup.components(raw.toDF("id_a", "id_b").repartition(parts))
+          .as[(Long, Long)].collect().toMap
+        assert(got === want, s"seed=$seed repartition($parts)")
+      }
+    }
+  }
+
   test("clusters: every doc labeled, singletons self-clustered, sizes agg-shaped") {
     import spark.implicits._
     val docs = (1L to 8L).toDF("doc_id")

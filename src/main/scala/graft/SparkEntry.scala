@@ -2645,11 +2645,12 @@ object SparkEntry {
       // eigenVECTORS export only: the oracle recovers each eigenvalue as
       // the Rayleigh quotient v'Cv over DuckDB's OWN correlation matrix,
       // then re-derives loadings and EVR — the eigensystem property is
-      // checked, not echoed.
+      // checked, not echoed. The local table arrives in (component,
+      // variable) order, so it needs no sort.
       val li = Parquet.read(s, s"$dir/lineitem.parquet")
       val (df, vecs, n) = Pca.circleWithEigen(li, PcaCols, s)
       pcaEigenExport = Some((vecs, n))
-      df.orderBy("component", "variable")
+      df
     },
 
     // -- instants pipeline (rows 18-20, 22) --

@@ -1,6 +1,7 @@
 package graft.analysis
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** PCA correlation circle (tabata plots.py:531 `pcacircle`).
@@ -10,37 +11,109 @@ import org.apache.spark.sql.functions._
   * draws each variable at `(v₁ᵢ·√λ₁, v₂ᵢ·√λ₂)`, the loadings on a chosen
   * component pair.
   *
-  * Spark mapping: the correlation matrix is a single distributed
-  * aggregation (`corr` per column pair — p(p+1)/2 scalars for p columns,
-  * one pass, map-side partials); only that p×p matrix reaches the driver,
-  * where a cyclic Jacobi sweep (p ≤ tens) produces the eigen-system. No
-  * data rows are ever collected, so the operator scales with the scan,
-  * not the row count.
+  * Spark mapping: the correlation matrix comes from one co-moment pass, a
+  * single `treeAggregate` job over the rows cast to double. Each column
+  * pair keeps the six-slot buffer of Spark's `corr` (n, x̄, ȳ, Cxy, Mx, My)
+  * in plain arrays, so no aggregate class is generated and compiled per
+  * query. Only the p(p+1)/2 buffers reach the driver, where a cyclic
+  * Jacobi sweep (p ≤ tens) produces the eigen-system. No data rows are
+  * ever collected, so the operator scales with the scan, not the row
+  * count.
   */
 object Pca {
 
   /** Distributed correlation matrix of `cols` plus the row count — ONE
-    * aggregation pass. Fails fast on a null correlation (zero-variance or
-    * all-null column): `Row.getAs[Double]` would otherwise unbox null to
-    * 0.0 and the eigen-system would be silently wrong.
+    * job. Each pair skips the rows where either of its two values is null
+    * (what `corr` does per pair); the count is every row, as `count(1)`.
+    * Fails fast on a null correlation (fewer than 2 rows, a zero-variance
+    * or an all-null column): the eigen-system would otherwise be silently
+    * wrong. A zero-variance column fails here whatever the ANSI setting;
+    * Spark's `corr` raises DIVIDE_BY_ZERO for it under ANSI and yields null
+    * without.
     */
   def corrMatrixAndCount(df: DataFrame, cols: Seq[String]): (Array[Array[Double]], Long) = {
     val p = cols.size
-    val exprs = (for (i <- 0 until p; j <- i until p)
-      yield corr(col(cols(i)), col(cols(j))).as(s"c_${i}_$j")) :+
-      count(lit(1)).as("_n")
-    val row = df.agg(exprs.head, exprs.tail: _*).head()
-    val m = Array.tabulate(p, p) { (i, j) =>
-      val (a, b) = (math.min(i, j), math.max(i, j))
-      val idx = row.fieldIndex(s"c_${a}_$b")
-      require(!row.isNullAt(idx),
+    val rows = df.select(cols.map(col(_).cast("double")): _*).queryExecution.toRdd
+    val mom = rows.treeAggregate(new CoMoments(p))(_ add _, _ merge _)
+    val m = Array.ofDim[Double](p, p)
+    for (((a, b), k) <- mom.pairs.zipWithIndex) {
+      val r = mom.corr(k)
+      require(r.isDefined,
         s"corr(${cols(a)}, ${cols(b)}) is null (zero-variance or all-null column)")
-      row.getDouble(idx)
+      m(a)(b) = r.get
+      m(b)(a) = r.get
     }
-    (m, row.getAs[Long]("_n"))
+    (m, mom.rows)
   }
 
-  /** Distributed correlation matrix of `cols` (one aggregation pass). */
+  /** The co-moments of every column pair (i ≤ j) of a p-column double row,
+    * plus the row count: the buffer, update and merge formulas of Spark's
+    * `corr` (`PearsonCorrelation`), one buffer per pair. The result matches
+    * `corr` per pair up to the order in which partition buffers merge.
+    */
+  private final class CoMoments(p: Int) extends Serializable {
+    val pairs: Array[(Int, Int)] = (for (i <- 0 until p; j <- i until p) yield (i, j)).toArray
+    private val n, xAvg, yAvg, ck, xMk, yMk = new Array[Double](pairs.length)
+    var rows = 0L
+
+    def add(r: InternalRow): CoMoments = {
+      rows += 1
+      var k = 0
+      while (k < pairs.length) {
+        val i = pairs(k)._1
+        val j = pairs(k)._2
+        if (!r.isNullAt(i) && !r.isNullAt(j)) {
+          val x = r.getDouble(i)
+          val y = r.getDouble(j)
+          val newN = n(k) + 1.0
+          val dx = x - xAvg(k)
+          val dy = y - yAvg(k)
+          val newXAvg = xAvg(k) + dx / newN
+          val newYAvg = yAvg(k) + dy / newN
+          ck(k) += dx * (y - newYAvg)
+          xMk(k) += dx * (x - newXAvg)
+          yMk(k) += dy * (y - newYAvg)
+          n(k) = newN
+          xAvg(k) = newXAvg
+          yAvg(k) = newYAvg
+        }
+        k += 1
+      }
+      this
+    }
+
+    def merge(o: CoMoments): CoMoments = {
+      rows += o.rows
+      var k = 0
+      while (k < pairs.length) {
+        val n1 = n(k)
+        val n2 = o.n(k)
+        val newN = n1 + n2
+        val dx = o.xAvg(k) - xAvg(k)
+        val dxN = if (newN == 0.0) 0.0 else dx / newN
+        val dy = o.yAvg(k) - yAvg(k)
+        val dyN = if (newN == 0.0) 0.0 else dy / newN
+        xAvg(k) += dxN * n2
+        yAvg(k) += dyN * n2
+        ck(k) = ck(k) + o.ck(k) + dx * dyN * n1 * n2
+        xMk(k) = xMk(k) + o.xMk(k) + dx * dxN * n1 * n2
+        yMk(k) = yMk(k) + o.yMk(k) + dy * dyN * n1 * n2
+        n(k) = newN
+        k += 1
+      }
+      this
+    }
+
+    /** Pair k's correlation, or None where `corr` is null: fewer than 2
+      * rows, or a zero divisor (a zero-variance column).
+      */
+    def corr(k: Int): Option[Double] = {
+      val d = math.sqrt(xMk(k) * yMk(k))
+      if (n(k) < 2.0 || d == 0.0) None else Some(ck(k) / d)
+    }
+  }
+
+  /** Distributed correlation matrix of `cols` (one job). */
   def corrMatrix(df: DataFrame, cols: Seq[String]): Array[Array[Double]] =
     corrMatrixAndCount(df, cols)._1
 
@@ -105,6 +178,7 @@ object Pca {
   /** The correlation-circle table: one row per (variable, component) with
     * the loading `x = vᵢ·√λ'` (λ' carries the reference's sklearn n/(n−1)
     * sample-variance factor) and the component's explained-variance ratio.
+    * A local table, its rows already in (component, variable) order.
     */
   def circle(df: DataFrame, cols: Seq[String], spark: SparkSession): DataFrame =
     circleWithEigen(df, cols, spark)._1
@@ -124,7 +198,7 @@ object Pca {
     val total = vals.sum
     val rows = for {
       k <- vals.indices
-      i <- cols.indices
+      i <- cols.indices.sortBy(cols(_))
     } yield {
       val lambdaSample = vals(k) * n / (n - 1.0)
       // HALF_UP to match Spark/DuckDB `round` (repo convention; math.rint

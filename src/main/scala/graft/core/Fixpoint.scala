@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.graft.CheckpointDir
+import org.apache.spark.sql.graft.{CheckpointDir, CheckpointStats}
 
 /** The driver loop of graft's iterative operators
   * ([[graft.llm.Dedup.components]], [[graft.graph.Graph.pagerank]],
@@ -14,7 +14,11 @@ import org.apache.spark.sql.graft.CheckpointDir
   * k−1 as a scan of stored rows. Without the cut, a step that reads its
   * input twice (components joins the labels and aggregates over them)
   * doubles the logical plan every round, and Catalyst analysis alone goes
-  * exponential within about ten rounds.
+  * exponential within about ten rounds. The checkpoint's size estimate,
+  * which it inherits from the plan it came from, is capped at
+  * `Long.MaxValue`: a self-joining step squares that estimate every round
+  * (its digit count doubles), and near twenty rounds every plan build
+  * would multiply million-digit integers.
   *
   * `checkpointDir = None` uses `localCheckpoint`: rows go to the executor
   * block store, which is fast, but a lost executor loses blocks that have
@@ -46,8 +50,8 @@ object Fixpoint {
     // one round's rows, and its observed aggregate when there is one
     def materialize(df: DataFrame): (DataFrame, Option[Any]) = {
       val observed = stopWhenStable.fold(df)(df.observe("graft_fixpoint", _))
-      val rows =
-        if (checkpointDir.isDefined) observed.checkpoint(true) else observed.localCheckpoint(true)
+      val rows = CheckpointStats.capped(
+        if (checkpointDir.isDefined) observed.checkpoint(true) else observed.localCheckpoint(true))
       (rows, stopWhenStable.map(_ => observed.queryExecution.observedMetrics("graft_fixpoint")(0)))
     }
     def release(df: DataFrame): Unit =

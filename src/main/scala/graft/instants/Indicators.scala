@@ -1,6 +1,7 @@
 package graft.instants
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graft.Catalyst.{column, expression}
@@ -65,13 +66,15 @@ object Indicators {
     * [[graft.functions.SgResidualStddev]] expression — bit-identical
     * arithmetic to the window formulation (same tap fold order, same
     * CentralMomentAgg Welford updates in t order; pinned by SelectorSpec),
-    * one shuffle (`groupBy(record)`, map-side partial collect), and a
-    * two-level aggregation so only one scalar per combo reaches the
-    * driver: `max(graft_sg_eps(arr, w, deg, d))` per combo.
+    * one shuffle (`groupBy(record)`, map-side partial collect). The max
+    * over records of `graft_sg_eps(arr, w, deg, d)` per combo is a
+    * `treeAggregate` over those per-record scalars: one scalar per combo
+    * reaches the driver, and no second aggregate stage (with a job of its
+    * own) is planned.
     *
     * Per-combo record eligibility: a record participates in combo i's
     * stddev iff it has at least 2w_i+1 samples — the native expression
-    * returns null for shorter records, and stddev_pop/max ignore nulls.
+    * returns null for shorter records, and the max skips nulls.
     *
     * At 100 TB the per-record arrays are the same memory class WindowExec
     * already buffers per partition; the collect_list aggregation is
@@ -88,17 +91,33 @@ object Indicators {
         s => s.getField("v")).as(s"_eps_arr_$x")
     }
     val perRec = df.groupBy(col(rec)).agg(collects.head, collects.tail: _*)
-    val tops = combos.zipWithIndex.map { case ((x, w, o), i) =>
-      max(column(SgResidualStddev(expression(col(s"_eps_arr_$x")), w, deg, o)))
-        .as(s"_eps_e_$i")
-    }
-    val row = perRec.agg(tops.head, tops.tail: _*).head()
-    combos.zipWithIndex.map { case (cmb, i) =>
-      require(!row.isNullAt(i),
+      .select(combos.map { case (x, w, o) =>
+        column(SgResidualStddev(expression(col(s"_eps_arr_$x")), w, deg, o))
+      }: _*)
+    val k = combos.size
+    val tops = perRec.queryExecution.toRdd.treeAggregate(Array.fill[Option[Double]](k)(None))(
+      (acc, r) => {
+        for (i <- 0 until k if !r.isNullAt(i)) acc(i) = Some(maxOf(acc(i), r.getDouble(i)))
+        acc
+      },
+      (a, b) => {
+        for (i <- 0 until k; v <- b(i)) a(i) = Some(maxOf(a(i), v))
+        a
+      })
+    combos.zip(tops).map { case (cmb, top) =>
+      require(top.isDefined,
         s"epsilon: no record has the >= ${2 * cmb._2 + 1} samples required for " +
           s"(col=${cmb._1}, w=${cmb._2}, order=${cmb._3}) — shorten the window or supply longer records")
-      cmb -> row.getDouble(i)
+      cmb -> top.get
     }.toMap
+  }
+
+  /** Spark's `max` step over doubles: NaN above every number, and on a tie
+    * the value already held stays.
+    */
+  private def maxOf(acc: Option[Double], v: Double): Double = acc match {
+    case Some(m) if SQLOrderingUtil.compareDoubles(v, m) <= 0 => m
+    case _ => v
   }
 
   /** (rn, n) pair + stage-1 SG column `<prefix>_b_i = SG_w(x, d)` per

@@ -466,14 +466,16 @@ object Dedup {
     * component member, so it has its own label row to jump through. Plain
     * propagation needs O(component diameter) rounds, which on a chained
     * near-dup path (doc A ~ B ~ C ~ …, each pair over threshold but the
-    * ends unrelated) grows with corpus size; the jump halves every
-    * label-forest depth per round, so convergence is O(log diameter) and a
-    * million-document chain clears in ~20 rounds. Near-dup graphs are
-    * usually banded-LSH quasi-cliques (diameter 2-3), where the loop is
-    * 2-3 rounds as before; `maxIters` still bounds the pathological case,
-    * failing loudly rather than returning half-merged components. The
-    * driver only ever sees the converged/not bit per round, never data
-    * rows.
+    * ends unrelated) grows with corpus size. The jump shortcuts a chain
+    * whose ids fall along it: with ids increasing along the chain, 1,024,
+    * 16,384, 131,072 and 1,048,576 documents took 11, 15, 18 and 21 rounds
+    * (local[4]). It does not bound rounds in general: with ids in random
+    * order along the chain, 64 documents took 42 rounds, 256 took 129, and
+    * 1,024 had not converged after 200. Near-dup graphs are usually
+    * banded-LSH quasi-cliques (diameter 2-3), where the loop is 2-3 rounds
+    * as before; `maxIters` still bounds the pathological case, failing
+    * loudly rather than returning half-merged components. The driver only
+    * ever sees the converged/not bit per round, never data rows.
     *
     * Each round is materialised by [[graft.core.Fixpoint]] (lineage cut,
     * local or reliable checkpoint, superseded rounds freed); the exact

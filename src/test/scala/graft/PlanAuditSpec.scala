@@ -559,4 +559,22 @@ class PlanAuditSpec extends SparkSpec {
     Opset.fromEvents(spark, dir).save(store)
     assert(jobsStarted(Opset.load(spark, store)) === 0, "jobs while loading an Opset store")
   }
+
+  test("pca_circle: the fit is one job and compiles less than corr per pair; the table needs no sort") {
+    val li = graft.core.Parquet.read(spark, s"$dir/lineitem.parquet")
+    val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+    assert(jobsStarted(graft.analysis.Pca.corrMatrixAndCount(li, cols)) === 1)
+    // the built query is a local table: one job to fit, one to read it;
+    // a sort over it would add range-sampling jobs
+    assert(jobsStarted(SparkEntry.queries("pca_circle")(spark, dir).queryExecution.toRdd.count()) <= 2)
+    // a column set no other query uses, so neither form finds its classes
+    // in the codegen cache: the fit generates only the scan's projection,
+    // corr per pair a partial and a final hash aggregate as well
+    val fresh = Seq("l_tax", "l_linenumber", "l_discount")
+    val fit = compiledClasses(graft.analysis.Pca.corrMatrixAndCount(li, fresh))
+    val agg = compiledClasses(li.agg(corr("l_tax", "l_linenumber"), corr("l_tax", "l_discount"),
+      corr("l_linenumber", "l_discount"), corr("l_tax", "l_tax"), corr("l_linenumber", "l_linenumber"),
+      corr("l_discount", "l_discount"), count(lit(1))).head())
+    assert(fit < agg, s"the fit compiled $fit classes, corr per pair $agg")
+  }
 }

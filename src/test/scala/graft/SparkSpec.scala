@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ListenerProbe
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -57,5 +58,17 @@ trait SparkSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     try { body; ListenerProbe.drain(sc); started.get }
     finally sc.removeSparkListener(listener)
+  }
+
+  /** The number of classes Spark's code generator compiles while `body`
+    * runs: the `CodegenMetrics` compilation count, which covers the driver
+    * and the local executors. A class found in the codegen cache is not
+    * compiled and does not count.
+    */
+  def compiledClasses(body: => Any): Long = {
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    body
+    compiles.getCount - before
   }
 }

@@ -83,4 +83,25 @@ class FixpointSpec extends SparkSpec {
       }
     }
   }
+
+  test("a self-joining step keeps its size estimate within a Long over 30 rounds") {
+    // a checkpoint that kept the estimate of the plan it came from would
+    // have it squared by the self-join every round: its digit count
+    // doubles, and near twenty rounds plan building stalls on million-digit
+    // products. The step checks its input's estimate, so a regression
+    // fails fast instead of hanging
+    def size(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val seen = scala.collection.mutable.ArrayBuffer.empty[BigInt]
+    val (state, converged) = Fixpoint(init, 30) { s =>
+      seen += size(s)
+      assert(seen.last <= Long.MaxValue, s"round ${seen.size} reads a ${seen.last.toString.length}-digit estimate")
+      s.join(s.withColumnRenamed("x", "y"), col("x") === col("y")).select("x")
+    }
+    assert(!converged && seen.size === 30)
+    // the estimates of the first rounds, small enough to decide a
+    // broadcast, are kept as they were
+    assert(seen.head < 1000 && seen(1) > seen.head, s"estimates per round: ${seen.mkString(", ")}")
+    assert(size(state) === BigInt(Long.MaxValue))
+    assert(xs(state) === (0L until 10L))
+  }
 }

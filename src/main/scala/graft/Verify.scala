@@ -63,7 +63,13 @@ object Verify {
         failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
       }
     }
-    val json = SparkEntry.oracleSql
+    // a model whose query failed fails again here; record it and dump
+    // no oracle rather than die before failures.json is written
+    val oracles = try SparkEntry.oracleSql(spark, sfDir) catch { case e: Throwable =>
+      failures("oracle_sql") = Option(e.getMessage).getOrElse(e.getClass.getName)
+      Map.empty[String, String]
+    }
+    val json = oracles
       .map { case (k, v) => s"${Json.q(k)}: ${Json.q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val failJson = failures

@@ -47,6 +47,12 @@ object SessionArtifacts {
     entries.getOrElseUpdate((s, dir, key), build).asInstanceOf[V]
   }
 
+  /** Every built value of artifact `key`, one per (session, dir) that
+    * holds it. Builds nothing.
+    */
+  def built(key: String): Seq[Any] =
+    entries.iterator.collect { case ((_, _, k), v) if k == key => v }.toSeq
+
   /** Drop every artifact bound to `s` and unpersist its cached data. */
   def clear(s: SparkSession): Unit =
     entries.keys.filter(_._1 eq s).foreach(k =>

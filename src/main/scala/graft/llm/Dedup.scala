@@ -523,8 +523,9 @@ object Dedup {
               least(col("_m"), coalesce(col("_jl"), col("_m"))).as("label"))
         }
       require(converged,
-        s"Dedup.components: not converged after $maxIters rounds — the pair " +
-          "graph has a component of diameter > ~2^maxIters; raise maxIters")
+        s"Dedup.components: not converged after $maxIters rounds — a long " +
+          "chain of pairs whose ids are out of order along it can need more; " +
+          "raise maxIters")
       comp
     } finally edges.unpersist(false)
   }

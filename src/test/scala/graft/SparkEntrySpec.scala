@@ -1,48 +1,114 @@
 package graft
 
-/** Guards the driver contract: every oracle key must have a query (a
-  * dangling oracle silently weakens the correctness gate), rows-only
-  * queries are a known closed set, and the inventory only grows.
+import java.nio.file.Files
+
+import org.apache.spark.sql.functions.col
+
+/** Guards the query/oracle contract: every query has exactly one oracle
+  * at any directory, a fitted model's oracle describes the fit of the
+  * directory it is asked about whatever ran before, and the inventory
+  * only grows.
   */
 class SparkEntrySpec extends SparkSpec {
 
-  // oracled dynamically once the corresponding query has run in the session
-  // (the oracle SQL embeds the fitted tree / trained centroids / kept tube
-  // models / eigenvectors as literals) — so depending on what already ran
-  // in this JVM, each of these may or may not carry an oracle here
-  private val RowsOnlyUntilRun = Set(
-    "instants_fit", "instants_predict", "instants_scores", "ann_ivf",
-    "ann_indexed", "ann_indexed_append", "ann_pq", "tube_fit", "pca_circle",
-    "dedup_semantic", "stream_ivf_assign", "text_classifier", "ann_recall",
-    "dedup_text", "ann_probe_auto", "pipe_funnel")
+  // Input: the sf0.001 tables committed with the benchmark.
+  private val Dir = "perfbench/fixture"
 
-  test("every oracleSql key has a matching queries entry") {
-    val dangling = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(dangling.isEmpty, s"oracles without queries: $dangling")
+  /** The queries whose oracles freeze a fitted model as SQL literals. */
+  private val ModelQueries = Seq(
+    "pca_circle", "instants_fit", "instants_predict", "instants_scores", "tube_fit",
+    "ann_ivf", "ann_recall", "ann_indexed", "ann_indexed_append", "stream_ivf_assign",
+    "ann_pq", "text_classifier", "pipe_funnel", "dedup_semantic", "dedup_text",
+    "ann_probe_auto")
+
+  /** The model tables of [[Dir]] with about a fifth of each one's rows
+    * dropped: another directory whose fits differ from the fixture's.
+    */
+  private lazy val OtherDir: String = {
+    val out = Files.createTempDirectory("graft-entry-other").toString
+    for ((table, key) <- Seq("events" -> "event_id", "lineitem" -> "l_orderkey",
+        "embeddings" -> "vec_id", "documents" -> "doc_id"))
+      graft.core.Parquet.read(spark, s"$Dir/$table.parquet").filter(col(key) % 5 =!= 3)
+        .coalesce(1).write.parquet(s"$out/$table.parquet")
+    org.apache.commons.io.FileUtils.forceDeleteOnExit(new java.io.File(out))
+    out
   }
 
-  test("every query without an oracle is a known rows-only query") {
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    val unexpected = rowsOnly -- RowsOnlyUntilRun
-    assert(unexpected.isEmpty, s"unexpected rows-only queries: $unexpected")
+  private def modelOracles(dir: String): Map[String, String] =
+    SparkEntry.oracleSql(spark, dir).filter { case (k, _) => ModelQueries.contains(k) }
+
+  private def runModelQueries(): Unit =
+    ModelQueries.foreach(q => SparkEntry.queries(q)(spark, Dir).queryExecution.toRdd.count())
+
+  test("oracleSql(spark, dir) holds exactly one oracle per query on a cleared session") {
+    SparkEntry.clearSessionCaches(spark)
+    assert(SparkEntry.oracleSql(spark, Dir).keySet === SparkEntry.queries.keySet)
+    assert(ModelQueries.size === 16 && ModelQueries.forall(SparkEntry.queries.contains))
   }
 
   test("the graded inventory does not shrink") {
-    assert(SparkEntry.queries.size >= 52)
-    assert(SparkEntry.oracleSql.size >= 43)
+    assert(SparkEntry.queries.size >= 166)
+    assert(SparkEntry.oracleSql(spark, Dir).size >= 166)
   }
 
   test("oracle SQL is non-empty and references no Spark-only syntax") {
-    SparkEntry.oracleSql.foreach { case (name, sql) =>
+    SparkEntry.oracleSql(spark, Dir).foreach { case (name, sql) =>
       assert(sql.trim.nonEmpty, name)
       assert(!sql.contains("`"), s"$name: backticks are Spark-only quoting")
     }
   }
 
+  /** The model oracles of [[Dir]] with the queries run before `oracleSql`
+    * and with `oracleSql` run first, on a cleared session each time, and
+    * the Spark jobs `oracleSql` started once the queries had run.
+    */
+  private lazy val (queriedFirst, oracleFirst, jobsOnceQueried) = {
+    SparkEntry.clearSessionCaches(spark)
+    runModelQueries()
+    val jobs = jobsStarted(SparkEntry.oracleSql(spark, Dir))
+    val queried = modelOracles(Dir)
+    SparkEntry.clearSessionCaches(spark)
+    val first = modelOracles(Dir)
+    runModelQueries()
+    assert(modelOracles(Dir) === first, "the queries refitted a model the oracles had fitted")
+    (queried, first, jobs)
+  }
+
+  for (q <- ModelQueries)
+    test(s"$q: the same oracle whether the query or oracleSql fits the model") {
+      assert(queriedFirst(q) === oracleFirst(q))
+    }
+
+  test("oracleSql starts no Spark job once the model queries have run") {
+    assert(jobsOnceQueried === 0)
+  }
+
+  test("fitting at another directory leaves the fixture's model oracles unchanged") {
+    val fixture = modelOracles(Dir)
+    val other = SparkEntry.oracleSql(spark, OtherDir)
+    assert(other.keySet === SparkEntry.queries.keySet)
+    assert(modelOracles(Dir) === fixture)
+    // the other directory fits other models, so a mix-up would show
+    for (q <- Seq("pca_circle", "instants_fit", "tube_fit", "ann_ivf", "text_classifier"))
+      assert(other(q) !== fixture(q), q)
+  }
+
+  test("the no-arg oracleSql holds a model's oracle only while one directory has fitted it") {
+    SparkEntry.clearSessionCaches(spark)
+    assert(!SparkEntry.oracleSql.contains("pca_circle"))
+    SparkEntry.queries("pca_circle")(spark, Dir)
+    val one = SparkEntry.oracleSql
+    assert(ModelQueries.filter(one.contains) === Seq("pca_circle"), "it fits nothing")
+    assert(one("pca_circle") === SparkEntry.oracleSql(spark, Dir)("pca_circle"))
+    SparkEntry.queries("pca_circle")(spark, OtherDir)
+    val two = SparkEntry.oracleSql
+    assert(!two.contains("pca_circle"))
+    assert(ModelQueries.filter(two.contains).size === 15, "the models one directory fitted stay")
+    SparkEntry.clearSessionCaches(spark)
+  }
+
   // A consumer of a shared session artifact must return the same rows
   // whether its producer query built the artifact or the consumer did.
-  // Input: the sf0.001 tables committed with the benchmark.
-  private val Dir = "perfbench/fixture"
   for ((producer, consumer) <- Seq(
       "graph_triangles" -> "graph_clustering",
       "dedup_minhash_pairs" -> "dedup_clusters",

@@ -1,6 +1,9 @@
 package graft.core
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerProbe
 import org.apache.spark.scheduler.SparkListenerApplicationEnd
@@ -54,6 +57,36 @@ class SessionArtifactsSpec extends SparkSpec {
     SessionArtifacts.clear(parent)
     SessionArtifacts.clear(child)
     assert(p.storageLevel == StorageLevel.NONE)
+  }
+
+  test("built lists one value per (session, dir) holding the key and builds nothing") {
+    val (a, b) = (spark.newSession(), spark.newSession())
+    assert(SessionArtifacts.built("built-key").isEmpty)
+    SessionArtifacts.getOrBuild(a, "d1", "built-key")("a1")
+    SessionArtifacts.getOrBuild(a, "d1", "other-key")("x")
+    assert(SessionArtifacts.built("built-key") === Seq("a1"))
+    SessionArtifacts.getOrBuild(a, "d2", "built-key")("a2")
+    SessionArtifacts.getOrBuild(b, "d1", "built-key")("b1")
+    assert(SessionArtifacts.built("built-key").toSet === Set("a1", "a2", "b1"))
+    SessionArtifacts.clear(a)
+    assert(SessionArtifacts.built("built-key") === Seq("b1"))
+    SessionArtifacts.clear(b)
+    assert(SessionArtifacts.built("built-key").isEmpty)
+  }
+
+  // Shared state between a query and its oracle lives in this store, keyed
+  // by (session, dir); a global "most recent" slot made an oracle depend on
+  // which directory was queried last.
+  test("no src/main global is @volatile") {
+    val offenders = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("@volatile") => s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    assert(offenders.isEmpty,
+      "keep shared state in SessionArtifacts, keyed by (session, dir):\n" + offenders.mkString("\n"))
   }
 
   test("one end listener per context, however many sessions use the store") {

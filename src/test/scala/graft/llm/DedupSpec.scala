@@ -250,6 +250,45 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  /** Union-find with the smaller root always kept, so a root is its
+    * component's minimum id.
+    */
+  private def unionFind(raw: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    raw.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(x => x -> find(x)).toMap
+  }
+
+  /** A 32-document chain whose ids are shuffled along it: pointer jumping
+    * shortcuts it far less than a chain with increasing ids.
+    */
+  private val shuffledChain: Seq[(Long, Long)] = {
+    val ids = new scala.util.Random(11L).shuffle((1L to 32L).toVector)
+    ids.zip(ids.tail)
+  }
+
+  test("components: a chain with shuffled ids matches union-find") {
+    import spark.implicits._
+    val got = Dedup.components(shuffledChain.toDF("id_a", "id_b"))
+      .as[(Long, Long)].collect().toMap
+    assert(got === unionFind(shuffledChain))
+  }
+
+  test("components: too few rounds for a shuffled chain fail with the round count") {
+    import spark.implicits._
+    val e = intercept[IllegalArgumentException](
+      Dedup.components(shuffledChain.toDF("id_a", "id_b"), maxIters = 3))
+    assert(e.getMessage.contains("not converged after 3 rounds"), e.getMessage)
+    assert(e.getMessage.contains("ids are out of order"), e.getMessage)
+  }
+
   test("components on generated pair graphs: union-find, any partitioning") {
     import spark.implicits._
     // seeded pair tables with parallel and reversed pairs, self-loops and
@@ -269,23 +308,9 @@ class DedupSpec extends SparkSpec {
         (0 until len).map(i => (b * 100 + i + 1, b * 100 + i))
       },
     )
-    // union-find with the smaller root always kept, so a root is its
-    // component's minimum id
-    def reference(raw: Seq[(Long, Long)]): Map[Long, Long] = {
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      raw.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      parent.keys.toSeq.map(x => x -> find(x)).toMap
-    }
     for (seed <- Seq(7L, 41L, 303L)) {
       val raw = sampled(genPairs, 60, seed).flatten
-      val want = reference(raw)
+      val want = unionFind(raw)
       assert(want.values.groupBy(identity).values.exists(_.size >= 10),
         s"seed=$seed: fixture must hold a long component")
       for (parts <- Seq(1, 7)) {

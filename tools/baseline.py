@@ -12,8 +12,7 @@ Pass symmetry contract (BASELINE.md): each engine's published number is
 min over 2 sessions x min-of-2 passes = 4 passes. For DuckDB that means
 running THIS script twice (each invocation is one session, time_one
 repeat=2); for graft, running `graft.Bench` twice with
-SPARK_GRAFT_BENCH_RUNS=2. tools/merge_baseline.py folds the four JSON
-outputs into BASELINE.md.
+SPARK_GRAFT_BENCH_RUNS=2.
 
 Usage: python3 tools/baseline.py <sfdir> <oracle_sql.json> [out.md]
 """

@@ -40,9 +40,18 @@ class SparkEntrySpec extends SparkSpec {
   private def runModelQueries(): Unit =
     ModelQueries.foreach(q => SparkEntry.queries(q)(spark, Dir).queryExecution.toRdd.count())
 
-  test("oracleSql(spark, dir) holds exactly one oracle per query on a cleared session") {
+  test("every oracleSql key has a matching queries entry") {
     SparkEntry.clearSessionCaches(spark)
-    assert(SparkEntry.oracleSql(spark, Dir).keySet === SparkEntry.queries.keySet)
+    val dangling = SparkEntry.oracleSql(spark, Dir).keySet -- SparkEntry.queries.keySet
+    assert(dangling.isEmpty, s"oracles without queries: $dangling")
+  }
+
+  // The known rows-only set is empty: a model query's oracle fits the
+  // model on demand, so every query has one even on a cleared session.
+  test("every query without an oracle is a known rows-only query") {
+    SparkEntry.clearSessionCaches(spark)
+    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql(spark, Dir).keySet
+    assert(rowsOnly.isEmpty, s"unexpected rows-only queries: $rowsOnly")
     assert(ModelQueries.size === 16 && ModelQueries.forall(SparkEntry.queries.contains))
   }
 

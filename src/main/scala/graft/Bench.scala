@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import graft.util.Json
 
@@ -108,6 +109,8 @@ object Bench {
     // attribution lines on stderr (stdout keeps the one-JSON-line
     // contract). wall ≫ run with low gc/fetchWait = host stall; high gc =
     // GC pause; high fetchWait = shuffle fetch; run ≫ cpu = scheduling/IO.
+    // `compiled` counts the classes codegen compiled for the query (codegen
+    // cache hits do not count).
     val wantMetrics = sys.env.get("SPARK_GRAFT_BENCH_METRICS").contains("1")
 
     for (session <- 1 to sessions) {
@@ -128,6 +131,7 @@ object Bench {
           spark.catalog.clearCache()           // unpersist operator-local caches
         }
         names.foreach { name =>
+          val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
           val t0 = System.nanoTime()
           try {
             // Force FULL-COLUMN evaluation, not `count()`: under a bare
@@ -145,7 +149,8 @@ object Bench {
               Thread.sleep(150) // listener bus is async; let the tail drain
               System.err.println(
                 f"[bench-metrics] session=$session pass=$pass query=$name " +
-                  f"wall=$sec%.2fs ${l.snapshotAndReset()}")
+                  f"wall=$sec%.2fs ${l.snapshotAndReset()} " +
+                  s"compiled=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0}")
             }
           } catch {
             case e: Throwable =>

@@ -42,8 +42,9 @@ object SparkEntry {
     */
   private def opset(s: SparkSession, dir: String): Opset = Opset.fromEvents(s, dir)
 
-  /** Width-pinned opset for per-record-EXPENSIVE chains (indicator banks,
-    * tube estimate/score windows): see Opset.fromEvents(wide = true).
+  /** Width-pinned opset for per-record-EXPENSIVE chains (the SG kernels
+    * and crossing windows of indicator banks, the SG kernel and windows of
+    * tube estimates/scores): see Opset.fromEvents(wide = true).
     * Cheap consumers keep the plain form — the pinned exchange costs a
     * sub-second row more in tiny-task churn than the width buys (measured).
     */

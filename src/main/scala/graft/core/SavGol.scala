@@ -6,9 +6,8 @@ package graft.core
   * `deg` estimates the `deriv`-th derivative of a signal at each point by
   * least-squares-fitting a degree-`deg` polynomial to the surrounding window.
   * That makes the filter a fixed-width convolution: the smoothed value is a
-  * dot product of the window samples with precomputed weights — which is what
-  * lets the Spark side run it as a window-frame lag/lead dot product inside
-  * whole-stage codegen (see [[graft.dsp.SignalOps.sgFilter]]).
+  * dot product of the window samples with precomputed weights, evaluated
+  * once per record by [[filter]] (see [[graft.functions.SgFilter]]).
   *
   * Edge handling follows the "interp" convention (the default of the
   * reference's scipy backend, tabata instants.py:76): the first/last `half`
@@ -92,5 +91,60 @@ object SavGol {
     val half = w / 2
     val xs = Array.tabulate(w)(_.toDouble)
     Array.tabulate(half)(i => polyWeights(xs, deg, deriv, i.toDouble))
+  }
+
+  /** One SG pass over a record's t-sorted samples `x`, at least `w` of
+    * them, with null mask `xn`; returns the filtered values and their null mask.
+    * Each output is a left fold over the w taps: interior rows over the
+    * centred stencil (null if a sample under it is null), the first `half`
+    * rows over the first w samples, the last `half` over the last w
+    * reversed with the edge weights sign-flipped for odd `deriv`. A null
+    * among the first or last w samples raises: a shifted edge fit would be
+    * silently wrong. The loop behind [[graft.functions.SgFilter]] and
+    * [[graft.functions.SgResidualStddev]].
+    */
+  def filter(x: Array[Double], xn: Array[Boolean], w: Int, deriv: Int,
+             cw: Array[Double], ew: Array[Array[Double]], name: String)
+      : (Array[Double], Array[Boolean]) = {
+    val n = x.length
+    var j = 0
+    while (j < w) {
+      if (xn(j) || xn(n - 1 - j)) throw new IllegalStateException(
+        s"$name: null sample in an SG edge window — a shifted edge " +
+          "fit would be silently wrong; clean the signal first")
+      j += 1
+    }
+    val sgn = if (deriv % 2 == 0) 1.0 else -1.0
+    val half = w / 2
+    val out = new Array[Double](n)
+    val on = new Array[Boolean](n)
+    var i = 0
+    while (i < n) {
+      if (i < half) {
+        val e = ew(i)
+        var acc = x(0) * e(0)
+        var k = 1
+        while (k < w) { acc += x(k) * e(k); k += 1 }
+        out(i) = acc
+      } else if (i >= n - half) {
+        val e = ew(n - 1 - i)
+        var acc = x(n - 1) * (sgn * e(0))
+        var k = 1
+        while (k < w) { acc += x(n - 1 - k) * (sgn * e(k)); k += 1 }
+        out(i) = acc
+      } else {
+        val base = i - half
+        var isNull = xn(base)
+        var acc = if (isNull) 0.0 else x(base) * cw(0)
+        var k = 1
+        while (k < w && !isNull) {
+          if (xn(base + k)) isNull = true else acc += x(base + k) * cw(k)
+          k += 1
+        }
+        if (isNull) on(i) = true else out(i) = acc
+      }
+      i += 1
+    }
+    (out, on)
   }
 }

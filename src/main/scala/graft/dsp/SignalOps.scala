@@ -3,27 +3,29 @@ package graft.dsp
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Catalyst.{column, expression}
 import graft.core.SavGol
+import graft.functions.SgFilter
 
 /** Distributed signal operators over long-format Opset data
   * (`record, t, <signals>`).
   *
   * The two core operators of the reference's instant-detection pipeline:
   *
-  *  - [[sgCol]]: Savitzky-Golay filtering (tabata instants.py:76,
-  *    `scipy.signal.savgol_filter` with the default `mode='interp'`) as a
-  *    window-frame dot product with driver-precomputed coefficients. The
-  *    interior is `sum_j c_j * lag/lead(x, j)`; the first/last `half` rows
-  *    of each record use edge-polynomial weights over the first/last `w`
-  *    samples (`nth_value` over the full frame). Everything stays inside
-  *    whole-stage codegen — no UDFs, one shuffle on `record`.
+  *  - [[sgDf]]: Savitzky-Golay filtering (tabata instants.py:76,
+  *    `scipy.signal.savgol_filter` with the default `mode='interp'`). Each
+  *    record's rows are collected once, t-sorted, by one `groupBy(record)`;
+  *    the native [[graft.functions.SgFilter]] kernel filters the record in
+  *    one primitive loop with driver-precomputed coefficients; one explode
+  *    restores the rows. [[withSgColumns]] runs several filters over one
+  *    collect.
   *
-  *  - [[indicatorCols]]: the reference's `indicator` (instants.py:45) —
+  *  - [[indicatorDf]]: the reference's `indicator` (instants.py:45) —
   *    count bumps/dips of a smoothed derivative by splitting each record at
   *    zero-threshold crossings and emitting a per-segment linear ramp
   *    `z0+s .. z0+s+1`. Pure window algebra, no UDFs.
   *
-  * Each operator also has a `...Sql` twin that emits the equivalent ANSI
+  * Each operator also has a `...OracleCtes` twin that emits the equivalent
   * SQL (DuckDB dialect) from the SAME coefficient arrays, used by the
   * driver's oracle comparison.
   */
@@ -31,16 +33,9 @@ object SignalOps {
 
   /** Savitzky-Golay filtered column `out` added to `df`. Records shorter
     * than `w` samples are dropped (scipy raises on them; here they are
-    * filtered distributedly so no record silently yields null rows).
-    *
-    * Implementation note: row number and record length are materialized as
-    * temporary columns first — Spark (correctly) refuses window expressions
-    * nested inside another window's aggregate, so `max(when(rn = n - j, x))
-    * over full-frame` must reference plain columns. Each group of mutually
-    * independent columns (row number and length; the two edge arrays) is
-    * added in one ordered `select`, so the plan is analysed once per
-    * dependency level rather than once per column, and both edge arrays
-    * come from one WindowExec.
+    * filtered distributedly so no record silently yields null rows). An
+    * interior sample is null when a null sample lies under its stencil; a
+    * null sample among a record's first or last `w` raises.
     *
     * @param x     signal column name
     * @param rec   record column name
@@ -50,119 +45,57 @@ object SignalOps {
     * @param deriv derivative order (0 = smoothing)
     */
   def sgDf(df: DataFrame, x: String, rec: String, t: String,
-           w: Int, deg: Int, deriv: Int, out: String): DataFrame = {
-    val wOrd  = Window.partitionBy(rec).orderBy(t)
-    val wFull = Window.partitionBy(rec).orderBy(t)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+           w: Int, deg: Int, deriv: Int, out: String): DataFrame =
+    withSgColumns(df, rec, t, deg, Seq((out, x, w, deriv)))
 
-    val base = df
-      .select(col("*"), row_number().over(wOrd).cast("long").as("_sg_rn"),
-        count(lit(1)).over(wFull).as("_sg_n"))
-      .filter(col("_sg_n") >= w)
-
-    val (fw, lw) = sgEdgeArrays(col(x), rec, t, col("_sg_rn"), col("_sg_n"), w)
-    base
-      .select(col("*"), fw.as("_sg_fw"), lw.as("_sg_lw"))
-      .withColumn(out, sgExpr(col(x), rec, t, col("_sg_rn"), col("_sg_n"), w, deg, deriv,
-        col("_sg_fw"), col("_sg_lw")))
-      .drop("_sg_rn", "_sg_n", "_sg_fw", "_sg_lw")
-  }
-
-  /** The edge-sample arrays of one (signal, window) pair: the record's
-    * FIRST w samples and its REVERSED last w samples, each as one
-    * full-frame window column. Materialize both ONCE (one column each,
-    * added together in one `select`) and pass the resulting attributes
-    * to [[sgExpr]] — window extraction hoists every syntactic occurrence
-    * of a window expression separately, so inlining these in the
-    * per-edge-row CASE branches would plant w window frames per edge
-    * row (440 at w=21) instead of 2 per (signal, window).
+  /** `df`'s columns plus one SG column per `(out, x, w, deriv)` of
+    * `filters`, optionally followed by the 1-based row number and the
+    * record length (`positions`, both long).
     *
-    * `collect_list` skips nulls: a null sample inside an edge window would
-    * silently SHIFT the collected array and yield wrong (not null) SG
-    * values on edge rows — so a null edge sample raises instead of
-    * corrupting. (The scipy reference poisons the fit on NaN; interior
-    * rows keep that visible-poisoning behavior via lag/lead null
-    * propagation.)
+    * One `groupBy(rec)` collects each record's rows once as `t`-sorted
+    * structs; records shorter than the narrowest window are dropped before
+    * any kernel runs; each filter is one [[graft.functions.SgFilter]] call
+    * per record, null for a record shorter than its window; one explode
+    * restores the rows. `rec` comes out as the grouping attribute, so the
+    * output stays hash-partitioned on it and a downstream
+    * `partitionBy(rec)` window plans no exchange. Every column of `df`
+    * must be orderable (the rows are sorted as structs, `t` first).
     */
-  def sgEdgeArrays(x: Column, rec: String, t: String, rn: Column, n: Column,
-                   w: Int): (Column, Column) = {
-    val wFull = Window.partitionBy(rec).orderBy(t)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val xd = when(x.isNull, raise_error(lit(
-        "sgEdgeArrays: null sample in an SG edge window — collect_list " +
-          "would silently shift the edge fit; clean the signal first"))
-        .cast("double"))
-      .otherwise(x.cast("double"))
-    (collect_list(when(rn <= lit(w), xd)).over(wFull),
-      reverse(collect_list(when(rn > n - lit(w), xd)).over(wFull)))
-  }
-
-  /** The SG filtered value as one Column, given already-materialized
-    * row-number (`rn`, 1-based, long) and record-length (`n`) columns.
-    * Callers that need several SG columns over the same `(rec, t)` ordering
-    * (e.g. [[graft.instants.Indicators.bank]]) share ONE (rn, n) pair and
-    * put every SG expression in the same projection — all the window terms
-    * land in the same WindowExec batch instead of one chain per call. The
-    * caller must have filtered records shorter than `w` (or guard the
-    * expression with `when(n >= w, ...)`).
-    */
-  def sgExpr(x: Column, rn: Column, n: Column,
-             w: Int, deg: Int, deriv: Int,
-             firstW: Column, lastW: Column,
-             wOrd: org.apache.spark.sql.expressions.WindowSpec): Column = {
-    val half = w / 2
-    val cw   = SavGol.centralWeights(w, deg, deriv)
-    val ew   = SavGol.edgeWeights(w, deg, deriv)
-
-    // Interior: dot product over offsets -half..half via lag/lead.
-    val interior = (0 until w).map { j =>
-      val off = j - half
-      val term = if (off < 0) lag(x, -off).over(wOrd)
-                 else if (off > 0) lead(x, off).over(wOrd)
-                 else x
-      term * lit(cw(j))
-    }.reduce(_ + _)
-
-    // Edges: per-edge-row dot products over the MATERIALIZED
-    // [[sgEdgeArrays]] columns — plain CASE-branch arithmetic, evaluated
-    // lazily only on the half matching rows, zero window frames. Same
-    // left-fold add order as a per-tap reduce chain — bit-identical sums,
-    // so the SQL oracles mirror unchanged.
-    def dotLit(arr: Column, cs: Array[Double]): Column =
-      (0 until w).map(j => element_at(arr, j + 1) * lit(cs(j))).reduce(_ + _)
-    // Left edge row i (0-based): dot of edge row i with the FIRST w
-    // samples. Right edge (mirror): f^(d)(n-1-i) = (-1)^d * edge(i) .
-    // reverse(last w samples) — lastW is already reversed.
-    val sgn = if (deriv % 2 == 0) 1.0 else -1.0
-    def leftEdge(i: Int): Column = dotLit(firstW, ew(i))
-    def rightEdge(i: Int): Column = dotLit(lastW, ew(i).map(sgn * _))
-
-    (0 until half).foldLeft(
-      (0 until half).foldLeft(interior) { (acc, i) =>
-        when(rn === lit(i + 1).cast("long"), leftEdge(i)).otherwise(acc)
-      }
-    ) { (acc, i) =>
-      when(rn === n - lit(i), rightEdge(i)).otherwise(acc)
+  def withSgColumns(df: DataFrame, rec: String, t: String, deg: Int,
+                    filters: Seq[(String, String, Int, Int)],
+                    positions: Option[(String, String)] = None): DataFrame = {
+    val fields = df.columns.toSeq.filter(_ != rec)
+    val rows = df.groupBy(col(rec))
+      .agg(sort_array(collect_list(struct((t +: fields.filter(_ != t)).map(col): _*))).as("_sg_rows"))
+      .filter(size(col("_sg_rows")) >= filters.map(_._3).min)
+    val kernels = filters.zipWithIndex.map { case ((_, x, w, d), i) =>
+      column(SgFilter(expression(col("_sg_rows").getField(x).cast("array<double>")), w, deg, d))
+        .as(s"_sg_k$i")
     }
+    val exploded = rows
+      .select(col(rec) +: col("_sg_rows") +: size(col("_sg_rows")).as("_sg_n") +: kernels: _*)
+      .select(Seq(col(rec), posexplode(col("_sg_rows")).as(Seq("_sg_i", "_sg_row")), col("_sg_n")) ++
+        filters.indices.map(i => col(s"_sg_k$i")): _*)
+    val pos = positions.toSeq.flatMap { case (rn, n) =>
+      Seq((col("_sg_i") + 1).cast("long").as(rn), col("_sg_n").cast("long").as(n))
+    }
+    exploded.select(
+      df.columns.toSeq.map(c => if (c == rec) col(rec) else col("_sg_row").getField(c).as(c)) ++ pos ++
+        filters.zipWithIndex.map { case ((out, _, _, _), i) =>
+          col(s"_sg_k$i").getItem(col("_sg_i")).as(out)
+        }: _*)
   }
-
-  /** [[sgExpr]] with the conventional (rec, t) window spec. */
-  def sgExpr(x: Column, rec: String, t: String, rn: Column, n: Column,
-             w: Int, deg: Int, deriv: Int,
-             firstW: Column, lastW: Column): Column =
-    sgExpr(x, rn, n, w, deg, deriv, firstW, lastW,
-      Window.partitionBy(rec).orderBy(t))
 
   /** DuckDB CTE chain equivalent to [[sgDf]]: returns (cteClauses,
     * finalRelationName); the final relation exposes (rec, t, out).
     *
     * DuckDB rejects window calls nested inside another window's aggregate
-    * ("window function calls cannot be nested"), so — mirroring [[sgDf]] —
-    * row number and record length are materialized as plain columns in a
-    * first CTE, and every window term (lag/lead, first/last-w samples)
-    * becomes a plain column in a second CTE before the edge CASE combines
-    * them arithmetically. Records shorter than `w` are dropped, as in
-    * [[sgDf]].
+    * ("window function calls cannot be nested"), so row number and record
+    * length are materialized as plain columns in a first CTE, and every
+    * window term (lag/lead, first/last-w samples) becomes a plain column in
+    * a second CTE before the edge CASE combines them arithmetically, with
+    * the same tap order as [[graft.core.SavGol.filter]]. Records shorter
+    * than `w` are dropped, as in [[sgDf]].
     */
   def sgOracleCtes(src: String, x: String, rec: String, t: String,
                    w: Int, deg: Int, deriv: Int, out: String,

@@ -15,33 +15,17 @@ import graft.core.SavGol
   * participate in the global `max`, exactly as the windowed formulation's
   * null-guarded residual behaves under Spark's null-ignoring aggregates).
   *
-  * This replaces three WindowExec passes (stage-1 SG, stage-2 SG over its
-  * output, crossing aggregation) with ONE tight primitive loop evaluated
-  * once per record — the epsilon is a per-record scalar, so there is no
-  * reason to pay per-row window machinery for it. Arithmetic is
-  * bit-identical to the window formulation by construction:
-  *
-  *  - interior rows: left-fold sum over taps j = 0..w-1 of
-  *    `x(i-half+j) * cw(j)` — the same add order as
-  *    [[graft.dsp.SignalOps.sgExpr]]'s `reduce(_ + _)` chain;
-  *  - edge rows: dot of the edge-weight row with the first w (resp.
-  *    reversed last w, sign-flipped for odd derivatives) samples, same
-  *    fold order as `sgExpr`'s `dotLit`;
-  *  - the stddev replays Spark's `CentralMomentAgg` Welford update
-  *    (delta/deltaN/m2) over residuals in ascending t order — the exact
-  *    per-record state sequence `stddev_pop` produces downstream of a
-  *    (record, t)-sorted window, so the emitted epsilon matches the
-  *    previous formulation bit-for-bit.
-  *
-  * Null semantics mirror the windowed chain: a null sample inside an edge
-  * window throws (collect_list would silently shift the edge fit — see
-  * [[graft.dsp.SignalOps.sgEdgeArrays]]); a null interior sample
-  * null-poisons every stencil that covers it, and poisoned residuals are
-  * skipped by the stddev, matching lag/lead null propagation under a
-  * null-ignoring aggregate. Records shorter than 2w+1 return null BEFORE
-  * the edge-null check (the windowed chain raises for such records when a
-  * wider combo shares the frame; with no nulls in the data — the engine's
-  * clean-signal contract — the difference is unobservable).
+  * Two passes of [[SavGol.filter]] (the loop [[SgFilter]] runs), then
+  * Spark's `CentralMomentAgg` Welford update (delta/deltaN/m2) over the
+  * residuals in ascending t order: the exact state sequence `stddev_pop`
+  * produces downstream of a (record, t)-sorted window, so the epsilon
+  * matches the windowed formulation in the test `ReferenceTwins`
+  * bit-for-bit (pinned by SelectorSpec). Poisoned (null) residuals are
+  * skipped, as under a null-ignoring aggregate. Records shorter than 2w+1
+  * return null BEFORE the edge-null check (the windowed chain raises for
+  * such records when a wider combo shares the frame; with no nulls in the
+  * data — the engine's clean-signal contract — the difference is
+  * unobservable).
   *
   * Evaluation is interpreted ([[CodegenFallback]]): the expression runs
   * once per RECORD (thousands of evaluations), not once per sample — codegen
@@ -65,74 +49,23 @@ case class SgResidualStddev(child: Expression, w: Int, deg: Int, deriv: Int)
   override def prettyName: String = "graft_sg_eps"
 
   private val w2 = 2 * w + 1
-  private val sgn = if (deriv % 2 == 0) 1.0 else -1.0
   @transient private lazy val cw1 = SavGol.centralWeights(w, deg, deriv)
   @transient private lazy val ew1 = SavGol.edgeWeights(w, deg, deriv)
   @transient private lazy val cw2 = SavGol.centralWeights(w2, deg, deriv)
   @transient private lazy val ew2 = SavGol.edgeWeights(w2, deg, deriv)
 
-  /** One SG pass over (values, null mask); returns (out, outNullMask). */
-  private def sgPass(x: Array[Double], xn: Array[Boolean], n: Int, w: Int,
-                     cw: Array[Double], ew: Array[Array[Double]])
-      : (Array[Double], Array[Boolean]) = {
-    var j = 0
-    while (j < w) {
-      if (xn(j) || xn(n - 1 - j)) throw new IllegalStateException(
-        "graft_sg_eps: null sample in an SG edge window — a shifted edge " +
-          "fit would be silently wrong; clean the signal first")
-      j += 1
-    }
-    val half = w / 2
-    val out = new Array[Double](n)
-    val on = new Array[Boolean](n)
-    var i = 0
-    while (i < n) {
-      if (i < half) {
-        val e = ew(i)
-        var acc = x(0) * e(0)
-        var k = 1
-        while (k < w) { acc += x(k) * e(k); k += 1 }
-        out(i) = acc
-      } else if (i >= n - half) {
-        val e = ew(n - 1 - i)
-        var acc = x(n - 1) * (sgn * e(0))
-        var k = 1
-        while (k < w) { acc += x(n - 1 - k) * (sgn * e(k)); k += 1 }
-        out(i) = acc
-      } else {
-        val base = i - half
-        var isNull = xn(base)
-        var acc = if (isNull) 0.0 else x(base) * cw(0)
-        var k = 1
-        while (k < w && !isNull) {
-          if (xn(base + k)) isNull = true else acc += x(base + k) * cw(k)
-          k += 1
-        }
-        if (isNull) on(i) = true else out(i) = acc
-      }
-      i += 1
-    }
-    (out, on)
-  }
-
   override def nullSafeEval(v: Any): Any = {
     val arr = v.asInstanceOf[ArrayData]
     val n = arr.numElements()
     if (n < w2) return null
-    val x = new Array[Double](n)
-    val xn = new Array[Boolean](n)
-    var i = 0
-    while (i < n) {
-      if (arr.isNullAt(i)) xn(i) = true else x(i) = arr.getDouble(i)
-      i += 1
-    }
-    val (b, bn) = sgPass(x, xn, n, w, cw1, ew1)
-    val (s2, s2n) = sgPass(b, bn, n, w2, cw2, ew2)
+    val (x, xn) = SgFilter.samples(arr)
+    val (b, bn) = SavGol.filter(x, xn, w, deriv, cw1, ew1, prettyName)
+    val (s2, s2n) = SavGol.filter(b, bn, w2, deriv, cw2, ew2, prettyName)
     // Spark CentralMomentAgg update, residuals in ascending t order
     var cnt = 0.0
     var mean = 0.0
     var m2 = 0.0
-    i = 0
+    var i = 0
     while (i < n) {
       if (!bn(i) && !s2n(i)) {
         val r = b(i) - s2(i)

@@ -14,9 +14,11 @@ import graft.dsp.SignalOps
   * indicators at several (half-width, derivative order, ±sigma) settings,
   * each scaled by a per-(width, order) noise level epsilon.
   *
-  * Everything is window algebra over `(record, t)` — the whole bank is one
-  * shuffle on `record` regardless of grid size — and epsilon is one
-  * per-record native aggregation, never a per-record driver loop.
+  * The SG columns come from one collect of each record and the native
+  * SG kernel, the crossings are window algebra over `(record, t)` — the
+  * whole bank is one shuffle on `record` regardless of grid size — and
+  * epsilon is one per-record native aggregation, never a per-record
+  * driver loop.
   */
 object Indicators {
 
@@ -121,31 +123,18 @@ object Indicators {
   }
 
   /** (rn, n) pair + stage-1 SG column `<prefix>_b_i = SG_w(x, d)` per
-    * combo, each null-guarded to records with >= w samples; rows of
-    * records shorter than the NARROWEST combo window are dropped. The
-    * base of [[bank]]'s output chain.
+    * combo, all from one collect of each record
+    * ([[SignalOps.withSgColumns]]); a combo's column is null on records
+    * shorter than its window, and rows of records shorter than the
+    * NARROWEST combo window are dropped. The base of [[bank]]'s output
+    * chain.
     */
   private[instants] def withStage1Sg(df: DataFrame, rec: String, t: String,
                            combos: Seq[(String, Int, Int)], deg: Int,
-                           prefix: String): DataFrame = {
-    val wOrd = Window.partitionBy(rec).orderBy(t)
-    val wFull = wOrd.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val minW = combos.map(_._2).min
-    val rn = col(s"${prefix}_rn")
-    val n  = col(s"${prefix}_n")
-    val base = df
-      .withColumn(s"${prefix}_rn", row_number().over(wOrd).cast("long"))
-      .withColumn(s"${prefix}_n", count(lit(1)).over(wFull))
-      .filter(n >= minW)
-    combos.zipWithIndex.foldLeft(base) { case (d0, ((x, w, o), i)) =>
-      val (fw, lw) = SignalOps.sgEdgeArrays(col(x), rec, t, rn, n, w)
-      d0.withColumn(s"${prefix}_fw_$i", fw).withColumn(s"${prefix}_lw_$i", lw)
-        .withColumn(s"${prefix}_b_$i",
-          when(n >= w, SignalOps.sgExpr(col(x), rec, t, rn, n, w, deg, o,
-            col(s"${prefix}_fw_$i"), col(s"${prefix}_lw_$i"))))
-        .drop(s"${prefix}_fw_$i", s"${prefix}_lw_$i")
-    }
-  }
+                           prefix: String): DataFrame =
+    SignalOps.withSgColumns(df, rec, t, deg,
+      combos.zipWithIndex.map { case ((x, w, o), i) => (s"${prefix}_b_$i", x, w, o) },
+      positions = Some((s"${prefix}_rn", s"${prefix}_n")))
 
   /** Add the indicator column for one code; `eps` is its noise floor.
     * Reversed codes subtract from the record's last value (instants.py:343).
@@ -174,9 +163,9 @@ object Indicators {
     *
     * The epsilon aggregation is [[epsilons]] (one groupBy job, no window
     * machinery) and the output chain computes its stage-1 SG columns
-    * inline: neither consumer re-reads the other's work, so nothing is
-    * cached. Codes differing only in sigma sign or the reversed variant
-    * reuse the same smoothed column.
+    * from its own collect ([[withStage1Sg]]): neither consumer re-reads
+    * the other's work, so nothing is cached. Codes differing only in
+    * sigma sign or the reversed variant reuse the same smoothed column.
     *
     * Records shorter than the widest code window are dropped (same final
     * row set as folding [[withIndicator]], whose per-code filters compound).

@@ -250,13 +250,6 @@ object StreamOps {
       .trigger(trigger)
       .start()
 
-  /** Stream a transformed signal stream INTO an Opset store: append-mode
-    * parquet sink readable by [[graft.core.Opset.load]], with
-    * exactly-once file commits via the checkpoint. Returns the started
-    * query; await/stop is the caller's choice (the default
-    * `Trigger.AvailableNow` drains the backlog and stops — the
-    * batch-refresh pattern of a large-scale ingest job).
-    */
   /** Continuous IVF index ingest — the STREAMING half of the index
     * maintenance story ([[graft.llm.Similarity.appendToIvfIndex]] is the
     * batch half): each arriving vector is assigned to its frozen coarse
@@ -407,6 +400,13 @@ object StreamOps {
   def readSlices(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     Parquet.read(spark, path).drop("batch")
 
+  /** Stream a transformed signal stream INTO an Opset store: append-mode
+    * parquet sink readable by [[graft.core.Opset.load]], with
+    * exactly-once file commits via the checkpoint. Returns the started
+    * query; await/stop is the caller's choice (the default
+    * `Trigger.AvailableNow` drains the backlog and stops — the
+    * batch-refresh pattern of a large-scale ingest job).
+    */
   def writeOpsetStore(df: DataFrame, path: String, checkpoint: String,
                       trigger: org.apache.spark.sql.streaming.Trigger =
                         org.apache.spark.sql.streaming.Trigger.AvailableNow())

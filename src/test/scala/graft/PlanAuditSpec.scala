@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import graft.core.Opset
+import graft.dsp.SignalOps
 import graft.instants.Splits
 import graft.llm.Dedup
 import graft.tubes.Tube
@@ -576,5 +577,31 @@ class PlanAuditSpec extends SparkSpec {
       corr("l_linenumber", "l_discount"), corr("l_tax", "l_tax"), corr("l_linenumber", "l_linenumber"),
       corr("l_discount", "l_discount"), count(lit(1))).head())
     assert(fit < agg, s"the fit compiled $fit classes, corr per pair $agg")
+  }
+
+  test("sgDf over a record-partitioned input plans no window and no exchange of its own") {
+    val df = (for (r <- 0 until 6; t <- 1 to 30) yield (s"r$r", t.toLong, math.sin(r + t * 0.3)))
+      .toDF("record", "t", "value").repartition(4, col("record"))
+    val p = plan(SignalOps.sgDf(df, "value", "record", "t", 7, 2, 1, "x"))
+    assert(collectAll(p) { case w: WindowExec => w }.isEmpty, s"plan:\n$p")
+    assert(collectAll(p) { case e: ShuffleExchangeExec => e }.size === 1, s"plan:\n$p")
+  }
+
+  test("tube_estimate: the SG kernel and the tube windows share one record exchange") {
+    val p = plan(SparkEntry.queries("tube_estimate")(spark, dir))
+    val byRecord = collectAll(p) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.toString.startsWith("hashpartitioning(record#") => e
+    }
+    assert(byRecord.size === 1, s"plan:\n$p")
+  }
+
+  test("sgDf compiles few classes on a fresh input") {
+    // a schema no other test uses, so no class is in the codegen cache:
+    // the collect and the kernel compile 14 classes in a fresh JVM, the
+    // lag/lead window chain they replaced compiled 42
+    val fresh = (for (r <- 0 until 3; t <- 1 to 40) yield (r.toShort, t, (r + t * 0.1).toFloat, (t % 3).toByte))
+      .toDF("rk", "tk", "v", "b")
+    val n = compiledClasses(SignalOps.sgDf(fresh, "v", "rk", "tk", 11, 3, 2, "x").queryExecution.toRdd.count())
+    assert(n <= 20, s"sgDf compiled $n classes")
   }
 }

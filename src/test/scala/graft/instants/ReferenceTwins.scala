@@ -1,15 +1,94 @@
 package graft.instants
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.dsp.SignalOps
+import org.apache.spark.sql.expressions.Window
+import graft.core.SavGol
 
-/** The windowed formulation of [[Indicators.epsilons]] — the reference
-  * the native per-record expression is pinned bit-identical against
-  * (SelectorSpec): stage-2 SG over [[Indicators.withStage1Sg]]'s stage-1
-  * columns, then per-record stddev_pop and global max.
+/** Window formulations of the native SG kernels, kept as the brute-force
+  * twins they are pinned bit-identical against:
+  *
+  *  - [[sgWindowDf]] twins [[graft.dsp.SignalOps.sgDf]] (SgKernelSpec):
+  *    row number and length, two full-frame edge arrays, `w−1` lag/lead
+  *    frames and a CASE over the edge rows;
+  *  - [[epsilonsFromSg]] twins [[Indicators.epsilons]] (SelectorSpec):
+  *    stage-2 SG over [[Indicators.withStage1Sg]]'s stage-1 columns, then
+  *    per-record stddev_pop and global max.
   */
 object ReferenceTwins {
+
+  /** [[graft.dsp.SignalOps.sgDf]] as a chain of windows over `(rec, t)`.
+    * Row number and record length are materialized first — Spark refuses
+    * window expressions nested inside another window's aggregate — then
+    * both edge arrays in one `select`, then the filtered column.
+    */
+  def sgWindowDf(df: DataFrame, x: String, rec: String, t: String,
+                 w: Int, deg: Int, deriv: Int, out: String): DataFrame = {
+    val wOrd  = Window.partitionBy(rec).orderBy(t)
+    val wFull = Window.partitionBy(rec).orderBy(t)
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val base = df
+      .select(col("*"), row_number().over(wOrd).cast("long").as("_sg_rn"),
+        count(lit(1)).over(wFull).as("_sg_n"))
+      .filter(col("_sg_n") >= w)
+    val (fw, lw) = sgEdgeArrays(col(x), rec, t, col("_sg_rn"), col("_sg_n"), w)
+    base
+      .select(col("*"), fw.as("_sg_fw"), lw.as("_sg_lw"))
+      .withColumn(out, sgExpr(col(x), rec, t, col("_sg_rn"), col("_sg_n"), w, deg, deriv,
+        col("_sg_fw"), col("_sg_lw")))
+      .drop("_sg_rn", "_sg_n", "_sg_fw", "_sg_lw")
+  }
+
+  /** The edge-sample arrays of one (signal, window) pair: the record's
+    * FIRST w samples and its REVERSED last w samples, each as one
+    * full-frame window column. `collect_list` skips nulls, which would
+    * silently SHIFT the edge fit, so a null edge sample raises instead.
+    */
+  private def sgEdgeArrays(x: Column, rec: String, t: String, rn: Column, n: Column,
+                           w: Int): (Column, Column) = {
+    val wFull = Window.partitionBy(rec).orderBy(t)
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val xd = when(x.isNull, raise_error(lit(
+        "sgEdgeArrays: null sample in an SG edge window — collect_list " +
+          "would silently shift the edge fit; clean the signal first"))
+        .cast("double"))
+      .otherwise(x.cast("double"))
+    (collect_list(when(rn <= lit(w), xd)).over(wFull),
+      reverse(collect_list(when(rn > n - lit(w), xd)).over(wFull)))
+  }
+
+  /** The SG filtered value as one Column, given materialized row-number
+    * (`rn`, 1-based, long) and record-length (`n`) columns and the
+    * [[sgEdgeArrays]] columns. Interior: left-fold dot product over
+    * lag/lead taps; edge rows: a CASE over left-fold dot products with the
+    * edge arrays. The caller must have filtered records shorter than `w`
+    * (or guard the expression with `when(n >= w, ...)`).
+    */
+  private def sgExpr(x: Column, rec: String, t: String, rn: Column, n: Column,
+                     w: Int, deg: Int, deriv: Int, firstW: Column, lastW: Column): Column = {
+    val wOrd = Window.partitionBy(rec).orderBy(t)
+    val half = w / 2
+    val cw   = SavGol.centralWeights(w, deg, deriv)
+    val ew   = SavGol.edgeWeights(w, deg, deriv)
+    val interior = (0 until w).map { j =>
+      val off = j - half
+      val term = if (off < 0) lag(x, -off).over(wOrd)
+                 else if (off > 0) lead(x, off).over(wOrd)
+                 else x
+      term * lit(cw(j))
+    }.reduce(_ + _)
+    def dotLit(arr: Column, cs: Array[Double]): Column =
+      (0 until w).map(j => element_at(arr, j + 1) * lit(cs(j))).reduce(_ + _)
+    // right edge (mirror): f^(d)(n-1-i) = (-1)^d * edge(i) . reverse(last w)
+    val sgn = if (deriv % 2 == 0) 1.0 else -1.0
+    (0 until half).foldLeft(
+      (0 until half).foldLeft(interior) { (acc, i) =>
+        when(rn === lit(i + 1).cast("long"), dotLit(firstW, ew(i))).otherwise(acc)
+      }
+    ) { (acc, i) =>
+      when(rn === n - lit(i), dotLit(lastW, ew(i).map(sgn * _))).otherwise(acc)
+    }
+  }
 
   /** Per-combo generated-code cost proxy for the stage-2 residual
     * expression: the edge-fit CASE expands to 2·half₂ rows × w₂ taps of
@@ -66,11 +145,11 @@ object ReferenceTwins {
       val withR = chunk.foldLeft(withB) { case (d0, ((_, w, o), i)) =>
         val w2 = 2 * w + 1
         val b = col(s"${prefix}_b_$i")
-        val (fw, lw) = SignalOps.sgEdgeArrays(b, rec, t, rn, n, w2)
+        val (fw, lw) = sgEdgeArrays(b, rec, t, rn, n, w2)
         d0.withColumn(s"${prefix}_fw2_$i", fw).withColumn(s"${prefix}_lw2_$i", lw)
           .withColumn(s"${prefix}_r_$i",
             when(n >= w2,
-              b - SignalOps.sgExpr(b, rec, t, rn, n, w2, deg, o,
+              b - sgExpr(b, rec, t, rn, n, w2, deg, o,
                 col(s"${prefix}_fw2_$i"), col(s"${prefix}_lw2_$i"))))
           .drop(s"${prefix}_fw2_$i", s"${prefix}_lw2_$i")
       }

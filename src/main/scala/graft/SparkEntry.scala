@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.analysis.{Pca, Sketches, Stats}
-import graft.core.{ColumnMeta, Opset, Parquet, Profile, RangeJoin, SessionArtifacts}
+import graft.core.{ColumnMeta, Opset, Parquet, Profile, RangeJoin, Scratch, SessionArtifacts}
 import graft.llm.MinhashIndex
 import graft.dsp.SignalOps
 import graft.instants.{Indicators, Selector, Splits}
@@ -13,6 +13,7 @@ import graft.instants.Indicators.IndicatorCode
 import graft.events.EventOps
 import graft.llm.{Dedup, Html, Multimodal, Pipeline, Retrieval, Similarity, TextAnalysis, Web}
 import graft.plots.PlotData
+import graft.streaming.{StreamOps, StreamReplay}
 import graft.tubes.Tube
 
 /** The query/oracle contract — one `queries` entry and one DuckDB
@@ -303,85 +304,34 @@ object SparkEntry {
         "doc_id", "text", Seq(1, 2), DsirBuckets).cache()
     }
 
-  /** Drop every memoized plan/model bound to `s` and unpersist its cached
-    * data. Bench calls this between timing passes so every pass is a cold
-    * run; long-lived sessions can call it to release driver/executor memory.
+  /** Drop every memoized plan/model bound to `s`, unpersist its cached
+    * data and delete its staged files. Bench calls this between timing
+    * passes so every pass is a cold run; long-lived sessions can call it
+    * to release driver/executor memory and disk.
+    *
+    * A query's DataFrame is valid until this call: the plans of the
+    * `stream_*` replays, the written indexes and `source_jsonl` read files
+    * staged in the session's [[graft.core.Scratch]] space, which it
+    * deletes. Collect each query before clearing.
     */
   def clearSessionCaches(s: SparkSession): Unit = SessionArtifacts.clear(s)
 
-  /** Recursively delete a directory tree now; missing paths are fine. */
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-    }
-
-  /** Register a directory tree for recursive deletion at JVM exit — for
-    * per-invocation staging dirs the returned lazy plan still reads from.
+  /** The event time of a streamed `events` row, by the read schema of its
+    * `ts`: TIMESTAMP(NANOS) parquet decodes as LONG nanos under the rig's
+    * nanosAsLong conf (truncating to micros cannot move an event across a
+    * 10 s window boundary), timestamp[us] parquet as a timestamp type
+    * (NTZ cast to the session type, the identity on the stored micros in
+    * a UTC session). Both give the DuckDB oracles' epoch_us grid.
     */
-  private def deleteAtExit(p: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(p)))
-
-  /** Run a bounded stream replay (build → start → awaitTermination) with
-    * `spark.sql.shuffle.partitions` — which for a streaming query is the
-    * STATE STORE width, frozen into the checkpoint at first start —
-    * derived from the replayed input's size instead of inherited from the
-    * session's core count. This is the production doctrine: state
-    * partition count is a per-query artifact sized by expected state
-    * volume when the checkpoint is created (it CANNOT follow the executor
-    * count of the moment — Spark refuses to re-partition existing state),
-    * so sizing it by core count was the arbitrary choice, not this.
-    * Operationally each micro-batch pays per state partition (delta file
-    * + commit + sink part-file), so an over-wide tiny stream spends its
-    * whole wall on file ops (measured: 32-wide state on a 2 MB replay ran
-    * ~1.6× slower than data-derived width across the stream suite).
-    * ~8 MB of compressed input per partition keeps partitions in the
-    * guide's efficient range at any scale; the session width is restored
-    * on exit (the graded read-back below runs at session settings).
-    */
-  private def withStreamWidth[T](s: SparkSession, inputPath: String)(body: => T): T = {
-    val width = math.max(1L,
-      math.min(32768L, regularFileBytes(inputPath) / (8L << 20) + 1)).toString
-    // The override is session-global and the streaming plans are built on
-    // `s` (a child session would not see them), so the set/run/restore is
-    // serialized per session: two overlapping replays would otherwise
-    // race the shared conf. The harness runs queries sequentially — the
-    // lock is insurance for a concurrent caller, at worst serializing its
-    // replays; truly concurrent streams should use separate sessions with
-    // pinned widths (the stream_ij pattern).
-    widthLocks.computeIfAbsent(s, _ => new Object).synchronized {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", width)
-      try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  private def streamEventTime(schema: org.apache.spark.sql.types.StructType, query: String): Column =
+    schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType => timestamp_micros(expr("ts div 1000"))
+      case org.apache.spark.sql.types.TimestampType |
+          org.apache.spark.sql.types.TimestampNTZType => col("ts").cast("timestamp")
+      case other => // schema drift: fail here, not as a wrong-but-plausible grid
+        throw new IllegalArgumentException(s"$query: unsupported events.ts type $other — " +
+          "expected LONG (nanos vintage), TIMESTAMP, or TIMESTAMP_NTZ")
     }
-  }
-
-  private val widthLocks =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, Object]())
-
-  /** Total size of the regular files under `path` (the path itself if it
-    * is one). `File.length` on a DIRECTORY-shaped dataset (any
-    * Spark-written parquet) returns the directory inode size (~4 KB) and
-    * would silently collapse a stream's state width to 1 partition; the
-    * testdata inputs are single files today, but the width derivation
-    * must not degrade if the fixture shape changes.
-    */
-  private def regularFileBytes(path: String): Long = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) 0L
-    else if (java.nio.file.Files.isRegularFile(p)) java.nio.file.Files.size(p)
-    else {
-      val s = java.nio.file.Files.walk(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .map(java.nio.file.Files.size).sum
-      } finally s.close()
-    }
-  }
 
   /** DuckDB CTEs computing the epsilon noise floor of column `x` of
     * relation `src` for (w=SgW, d=1): max over records of
@@ -2806,7 +2756,7 @@ object SparkEntry {
     // is literally what the oracle SQL says.
     "dedup_minhash_incr" -> { (s, dir) =>
       val docs = Parquet.read(s, s"$dir/documents.parquet")
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_mh_index_${math.abs(dir.hashCode)}"
+      val path = Scratch(s, dir).dir("mh-index-")
       MinhashIndex.write(docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text",
         path, MinhashIndex.Config(MhShingle, MhHashes, MhBands, MhThreshold),
         graft.core.CacheScope.session)
@@ -2825,51 +2775,27 @@ object SparkEntry {
 
     // -- Structured Streaming near-dup ingestion filter (row 39) --
     // The one streaming row with a batch-SQL oracle: documents replays as
-    // a BOUNDED file stream (one parquet file, no maxFilesPerTrigger cap →
-    // one micro-batch) with event time monotone in doc_id, the per-bucket
-    // first-owner claims land in parquet via foreachBatch (the stateful
+    // a bounded one-batch stream with event time monotone in doc_id, the
+    // per-bucket first-owner claims land via foreachBatch (the stateful
     // operator emits updates, which the file sink proper cannot accept),
     // and the landed claims fold to one verdict per document. Under that
     // event-time order, "first owner" of a band
     // bucket is min(doc_id) over the docs sharing the band signature —
     // exactly what the oracle's GROUP BY reproduces, so the stream's
     // no-re-rank claim semantics are graded by DuckDB like any batch
-    // operator. Fresh sink+checkpoint dirs per call: a bench pass re-runs
-    // the real stream, never a warm checkpoint no-op.
+    // operator.
     "stream_neardup" -> { (s, dir) =>
       val path = s"$dir/documents.parquet"
-      val schema = Parquet.schema(s, path)
-      val outPath = java.nio.file.Files.createTempDirectory("graft-stream-nd")
-      // the returned (lazy) plan reads claims parquet from this dir, so it
-      // cannot be deleted here — but without cleanup a multi-pass bench at
-      // sf1 accumulates gigabytes of /tmp staging copies; reap at JVM exit
-      // (the input copy + checkpoint, the bulk, go eagerly below)
-      deleteAtExit(outPath)
-      val out = outPath.toString
-      // the file stream source reads a DIRECTORY; stage the single test
-      // file into one (a production ingest already points at a landing dir)
-      val in = java.nio.file.Files.createDirectory(
-        java.nio.file.Paths.get(out, "in"))
-      java.nio.file.Files.copy(java.nio.file.Paths.get(path),
-        in.resolve("documents.parquet"))
-      // +1000s: an event time of exactly epoch 0 (doc_id 0) is not ">"
-      // the stateful operator's initial watermark of 0 and gets dropped
-      // as late; any positive offset keeps the order monotone in doc_id
-      val docs = s.readStream.schema(schema).parquet(in.toString)
-        .withColumn("ts", timestamp_seconds(col("doc_id") + 1000))
-      val claims = graft.streaming.StreamOps.streamingNearDupClaims(
-        docs, "doc_id", "text", "ts",
-        shingleLen = MhShingle, numHashes = MhHashes, bands = MhBands)
-      withStreamWidth(s, path)(
-        graft.streaming.StreamOps.landUpdates(
-          claims.toDF(), s"$out/claims", s"$out/ckpt").awaitTermination())
-      // the stream is done: the staged input copy and the checkpoint (the
-      // bulk of the staging) are dead weight now — only claims/ is read by
-      // the returned plan
-      deleteTree(in)
-      deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      val verdicts = graft.streaming.StreamOps.nearDupVerdicts(
-        Parquet.read(s, s"$out/claims"))
+      val rows = StreamReplay.file(s, dir, path) { (docs, rows, ckpt) =>
+        // +1000s: an event time of exactly epoch 0 (doc_id 0) is not ">"
+        // the stateful operator's initial watermark of 0 and gets dropped
+        // as late; any positive offset keeps the order monotone in doc_id
+        val claims = StreamOps.streamingNearDupClaims(
+          docs.withColumn("ts", timestamp_seconds(col("doc_id") + 1000)), "doc_id", "text", "ts",
+          shingleLen = MhShingle, numHashes = MhHashes, bands = MhBands)
+        StreamOps.landUpdates(claims.toDF(), rows, ckpt)
+      }
+      val verdicts = StreamOps.nearDupVerdicts(Parquet.read(s, rows))
       Parquet.read(s, path).select(col("doc_id"))
         .join(verdicts, Seq("doc_id"), "left")
         .select(col("doc_id"), col("dup_of"),
@@ -2879,28 +2805,11 @@ object SparkEntry {
 
     // -- Structured Streaming windowed aggregation (row 39) --
     // Same land-and-grade shape as stream_neardup: events replays as a
-    // bounded file stream (one parquet file, no maxFilesPerTrigger cap ->
-    // one micro-batch, so every group's single Update-mode emission IS its
-    // final aggregate), the watermarked 10 s tumbling windows land via
-    // foreachBatch, and the landed rows equal a batch GROUP BY on the
-    // window start. The event-time column branches on the READ schema of
-    // ts: TIMESTAMP(NANOS) parquet decodes as LONG nanos under the rig's
-    // nanosAsLong conf (truncating to micros cannot move an event across
-    // a 10 s boundary — boundaries are multiples of 1000 ns), while
-    // timestamp[us] parquet decodes as a timestamp type directly (NTZ →
-    // the cast to the session type is identity on the stored micros under
-    // the UTC sessions this rig pins). Both branches yield the same
-    // window grid as the DuckDB oracle's epoch_us floor.
+    // bounded one-batch stream, so every group's single Update-mode
+    // emission IS its final aggregate; the watermarked 10 s tumbling
+    // windows land via foreachBatch, and the landed rows equal a batch
+    // GROUP BY on the window start (event time: [[streamEventTime]]).
     "stream_counts" -> { (s, dir) =>
-      val path = s"$dir/events.parquet"
-      val schema = Parquet.schema(s, path)
-      val outPath = java.nio.file.Files.createTempDirectory("graft-stream-cnt")
-      deleteAtExit(outPath)
-      val out = outPath.toString
-      val in = java.nio.file.Files.createDirectory(
-        java.nio.file.Paths.get(out, "in"))
-      java.nio.file.Files.copy(java.nio.file.Paths.get(path),
-        in.resolve("events.parquet"))
       // The NTZ branch is only window-grid-correct when the session zone
       // is UTC (the cast re-interprets the stored micros in session
       // time); every rig entrypoint pins it, but enforce the invariant at
@@ -2910,27 +2819,11 @@ object SparkEntry {
       require(tz == "UTC",
         s"stream_counts requires spark.sql.session.timeZone=UTC (got $tz): " +
           "the timestamp-schema branch re-interprets stored micros in session time")
-      val etCol = schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType => // ns-vintage: LONG nanos
-          timestamp_micros(expr("ts div 1000"))
-        case org.apache.spark.sql.types.TimestampType |
-            org.apache.spark.sql.types.TimestampNTZType =>
-          col("ts").cast("timestamp")
-        case other => // schema drift: fail here, not as a wrong-but-plausible grid
-          throw new IllegalArgumentException(
-            s"stream_counts: unsupported events.ts type $other — expected " +
-              "LONG (nanos vintage), TIMESTAMP, or TIMESTAMP_NTZ")
-      }
-      val ev = s.readStream.schema(schema).parquet(in.toString)
-        .withColumn("et", etCol)
-      val counts = graft.streaming.StreamOps.windowedEventCounts(
-        ev, "et", "10 seconds", "10 seconds")
-      withStreamWidth(s, path)(
-        graft.streaming.StreamOps.landUpdates(
-          counts, s"$out/rows", s"$out/ckpt").awaitTermination())
-      deleteTree(in)
-      deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      Parquet.read(s, s"$out/rows")
+      val rows = StreamReplay.file(s, dir, s"$dir/events.parquet")((ev, rows, ckpt) =>
+        StreamOps.landUpdates(StreamOps.windowedEventCounts(
+          ev.withColumn("et", streamEventTime(ev.schema, "stream_counts")),
+          "et", "10 seconds", "10 seconds"), rows, ckpt))
+      Parquet.read(s, rows)
         .select(col("window.start").cast("long").as("win_start"),
           col("event_type"), col("n"),
           round(col("avg_value"), 6).as("avg_value"))
@@ -2946,24 +2839,11 @@ object SparkEntry {
     // projected to content-derived columns only (md5 + length of the text
     // the key preserves), never the nondeterministic doc_id.
     "stream_dedup" -> { (s, dir) =>
-      val path = s"$dir/documents.parquet"
-      val schema = Parquet.schema(s, path)
-      val outPath = java.nio.file.Files.createTempDirectory("graft-stream-dd")
-      deleteAtExit(outPath)
-      val out = outPath.toString
-      val in = java.nio.file.Files.createDirectory(
-        java.nio.file.Paths.get(out, "in"))
-      java.nio.file.Files.copy(java.nio.file.Paths.get(path),
-        in.resolve("documents.parquet"))
-      val docs = s.readStream.schema(schema).parquet(in.toString)
-        .withColumn("ts", timestamp_seconds(col("doc_id") + 1000))
-      val kept = graft.streaming.StreamOps.streamingDedup(docs, Seq("text"), "ts")
-      withStreamWidth(s, path)(
-        graft.streaming.StreamOps.writeOpsetStore(
-          kept.select("text"), s"$out/rows", s"$out/ckpt").awaitTermination())
-      deleteTree(in)
-      deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      Parquet.read(s, s"$out/rows")
+      val rows = StreamReplay.file(s, dir, s"$dir/documents.parquet")((docs, rows, ckpt) =>
+        StreamOps.writeOpsetStore(StreamOps.streamingDedup(
+          docs.withColumn("ts", timestamp_seconds(col("doc_id") + 1000)), Seq("text"), "ts")
+          .select("text"), rows, ckpt))
+      Parquet.read(s, rows)
         .select(md5(col("text").cast("binary")).as("fp"),
           length(col("text")).cast("long").as("len"))
         .orderBy("fp")
@@ -2982,28 +2862,16 @@ object SparkEntry {
     // micros end to end.
     "stream_sessions" -> { (s, dir) =>
       import s.implicits._
-      val path = s"$dir/events.parquet"
-      val ev = Parquet.read(s, path)
-      val outPath = java.nio.file.Files.createTempDirectory("graft-stream-sw")
-      deleteAtExit(outPath)
-      val out = outPath.toString
-      val in = s"$out/in"
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       val prepped = ev.select(col("user_id"),
         timestamp_micros(EventOps.eventMicros(ev, "ts")).as("et"))
       val horizon = prepped.agg(max(unix_micros(col("et")))).head().getLong(0)
-      prepped.unionAll(Seq((-1L, horizon + 365L * 86400 * 1000000))
-          .toDF("user_id", "us").select(col("user_id"),
-            timestamp_micros(col("us")).as("et")))
-        .write.parquet(in)
-      val sess = graft.streaming.StreamOps.sessionWindowCounts(
-        s.readStream.schema(prepped.schema).parquet(in),
-        "et", "user_id", "6 hours", "1 hour")
-      withStreamWidth(s, path)(
-        graft.streaming.StreamOps.writeOpsetStore(
-          sess, s"$out/rows", s"$out/ckpt").awaitTermination())
-      deleteTree(java.nio.file.Paths.get(in))
-      deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      Parquet.read(s, s"$out/rows")
+      val staged = prepped.unionAll(Seq((-1L, horizon + 365L * 86400 * 1000000))
+        .toDF("user_id", "us").select(col("user_id"), timestamp_micros(col("us")).as("et")))
+      val rows = StreamReplay.frame(s, dir, staged)((sig, rows, ckpt) =>
+        StreamOps.writeOpsetStore(StreamOps.sessionWindowCounts(
+          sig, "et", "user_id", "6 hours", "1 hour"), rows, ckpt))
+      Parquet.read(s, rows)
         .filter(col("user_id") >= 0)
         .select(col("user_id"),
           unix_micros(col("session.start")).as("sess_start_us"),
@@ -3023,24 +2891,10 @@ object SparkEntry {
     // estimate is the BATCH estimator over the folded registers. Oracle
     // = the same register + estimator SQL as sketch_hll.
     "stream_hll" -> { (s, dir) =>
-      val path = s"$dir/events.parquet"
-      val schema = Parquet.schema(s, path)
-      val outPath = java.nio.file.Files.createTempDirectory("graft-stream-hll")
-      deleteAtExit(outPath)
-      val out = outPath.toString
-      val in = java.nio.file.Files.createDirectory(
-        java.nio.file.Paths.get(out, "in"))
-      java.nio.file.Files.copy(java.nio.file.Paths.get(path),
-        in.resolve("events.parquet"))
-      val regs = Sketches.hllRegisters(
-        s.readStream.schema(schema).parquet(in.toString),
-        Seq("event_type"), col("user_id"), HllP)
-      withStreamWidth(s, path)(
-        graft.streaming.StreamOps.landUpdates(
-          regs, s"$out/rows", s"$out/ckpt").awaitTermination())
-      deleteTree(in)
-      deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      val folded = Parquet.read(s, s"$out/rows")
+      val rows = StreamReplay.file(s, dir, s"$dir/events.parquet")((ev, rows, ckpt) =>
+        StreamOps.landUpdates(
+          Sketches.hllRegisters(ev, Seq("event_type"), col("user_id"), HllP), rows, ckpt))
+      val folded = Parquet.read(s, rows)
         .groupBy("event_type", "bucket")
         .agg(max(col("mj")).cast("int").as("mj"))
       Sketches.hllEstimate(folded, Seq("event_type"), HllP)
@@ -3052,10 +2906,10 @@ object SparkEntry {
     // register-bounded state (<= groups x nBins rows) — the HLL property —
     // so it streams: fixed bounds (a static reference table) broadcast
     // onto the flow, the SAME pinned bin rule, a stateful (group, bin)
-    // count in update mode. Counts only grow, so the landed-emission fold
-    // is max per (group, bin), and the final estimator is the shared
-    // Stats.binnedQuantilesFromCounts — graded against the IDENTICAL
-    // batch oracle as stats_quantiles_binned.
+    // count in update mode over a 4-slice replay. Counts only grow, so the
+    // landed-emission fold is max per (group, bin), and the final
+    // estimator is the shared Stats.binnedQuantilesFromCounts — graded
+    // against the IDENTICAL batch oracle as stats_quantiles_binned.
     "stream_quantiles" -> { (s, dir) =>
       val ev = Parquet.read(s, s"$dir/events.parquet")
         .select(col("event_type"), col("value"))
@@ -3063,21 +2917,10 @@ object SparkEntry {
         .groupBy("event_type")
         .agg(min(col("value").cast("double")).as("_mn"),
           max(col("value").cast("double")).as("_mx"))
-      val outPath = java.nio.file.Files.createTempDirectory("graft-stream-q")
-      deleteAtExit(outPath)
-      val out = outPath.toString
-      val in = s"$out/in"
-      ev.repartition(4).write.parquet(in)
-      val cnts = graft.streaming.StreamOps.streamingBinCounts(
-        s.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1")
-          .parquet(in),
-        Seq("event_type"), col("value"), bounds, QuantileBins)
-      withStreamWidth(s, s"$dir/events.parquet")(
-        graft.streaming.StreamOps.landUpdates(
-          cnts, s"$out/rows", s"$out/ckpt").awaitTermination())
-      deleteTree(java.nio.file.Paths.get(in))
-      deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      val folded = Parquet.read(s, s"$out/rows")
+      val rows = StreamReplay.frame(s, dir, ev, slices = 4)((sig, rows, ckpt) =>
+        StreamOps.landUpdates(StreamOps.streamingBinCounts(
+          sig, Seq("event_type"), col("value"), bounds, QuantileBins), rows, ckpt))
+      val folded = Parquet.read(s, rows)
         .groupBy("event_type", "_bin")
         .agg(max(col("_c")).as("_c"))
       Stats.binnedQuantilesFromCounts(folded, bounds,
@@ -3086,8 +2929,8 @@ object SparkEntry {
     },
 
     // -- Structured Streaming KMV sketch maintenance (rows 39 + 58) --
-    // The corpus replays as a 4-file stream (maxFilesPerTrigger=1 → 4
-    // disjoint micro-batches); each batch lands its OWN bottom-k slice,
+    // The corpus replays in 4 slices (4 disjoint micro-batches); each
+    // batch lands its OWN bottom-k slice,
     // and the read-back kmvMerge re-truncates to the global bottom-k —
     // EXACT vs the whole-corpus sketch because bottom-k under the total
     // (md5, id) order composes over disjoint slices (the oracle-proven
@@ -3097,48 +2940,27 @@ object SparkEntry {
     "stream_kmv" -> { (s, dir) =>
       val ev = Parquet.read(s, s"$dir/events.parquet")
         .select(col("event_type"), col("event_id"), col("value"))
-      val outPath = java.nio.file.Files.createTempDirectory("graft-stream-kmv")
-      deleteAtExit(outPath)
-      val out = outPath.toString
-      val in = s"$out/in"
-      ev.repartition(4).write.parquet(in)
-      withStreamWidth(s, s"$dir/events.parquet")(
-        graft.streaming.StreamOps.streamingKmv(
-          s.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1")
-            .parquet(in),
-          Seq("event_type"), col("event_id"), col("value"), KmvK, KmvSeed,
-          s"$out/rows", s"$out/ckpt").awaitTermination())
-      deleteTree(java.nio.file.Paths.get(in))
-      deleteTree(java.nio.file.Paths.get(out, "ckpt"))
+      val rows = StreamReplay.frame(s, dir, ev, slices = 4)((sig, rows, ckpt) =>
+        StreamOps.streamingKmv(sig, Seq("event_type"), col("event_id"), col("value"),
+          KmvK, KmvSeed, rows, ckpt))
       Sketches.kmvQuantiles(
-          Sketches.kmvMerge(Seq(graft.streaming.StreamOps.readSlices(s, s"$out/rows")),
-            Seq("event_type"), KmvK),
+          Sketches.kmvMerge(Seq(StreamOps.readSlices(s, rows)), Seq("event_type"), KmvK),
           Seq("event_type"), QuantilePs)
         .orderBy("event_type", "p")
     },
 
     // -- Structured Streaming exact top-k per key (rows 39 + 67) --
     // The continuous leaderboard: events_topk's exact semantics running
-    // as a stream — per-batch ≤ k-per-key slices land, the read-back
-    // TopK fold IS the global top-k (top-k under a total order composes
-    // over disjoint batches). Same oracle family as events_topk.
+    // as a 4-slice stream — per-batch ≤ k-per-key slices land, the
+    // read-back TopK fold IS the global top-k (top-k under a total order
+    // composes over disjoint batches). Same oracle family as events_topk.
     "stream_topk" -> { (s, dir) =>
       val ev = Parquet.read(s, s"$dir/events.parquet")
         .select(col("user_id"), col("event_id"), col("value"))
-      val outPath = java.nio.file.Files.createTempDirectory("graft-stream-topk")
-      deleteAtExit(outPath)
-      val out = outPath.toString
-      val in = s"$out/in"
-      ev.repartition(4).write.parquet(in)
-      withStreamWidth(s, s"$dir/events.parquet")(
-        graft.streaming.StreamOps.streamingTopK(
-          s.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1")
-            .parquet(in),
-          Seq("user_id"), Seq(col("value").desc, col("event_id")), 3,
-          s"$out/rows", s"$out/ckpt").awaitTermination())
-      deleteTree(java.nio.file.Paths.get(in))
-      deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      graft.core.TopK.perKey(graft.streaming.StreamOps.readSlices(s, s"$out/rows"),
+      val rows = StreamReplay.frame(s, dir, ev, slices = 4)((sig, rows, ckpt) =>
+        StreamOps.streamingTopK(sig, Seq("user_id"), Seq(col("value").desc, col("event_id")), 3,
+          rows, ckpt))
+      graft.core.TopK.perKey(StreamOps.readSlices(s, rows),
           Seq("user_id"), Seq(col("value").desc, col("event_id")), 3)
         .orderBy("user_id", "rank")
     },
@@ -3152,23 +2974,12 @@ object SparkEntry {
     // against the IDENTICAL batch oracle.
     "stream_latest" -> { (s, dir) =>
       val ev = Parquet.read(s, s"$dir/events.parquet")
-      val outPath = java.nio.file.Files.createTempDirectory("graft-stream-lt")
-      deleteAtExit(outPath)
-      val out = outPath.toString
-      val in = s"$out/in"
-      ev.select(col("user_id"), col("event_type"),
-          EventOps.eventMicros(ev, "ts").as("tus"), col("event_id"), col("value"))
-        .write.parquet(in)
-      val stream = s.readStream
-        .schema(Parquet.schema(s, in)).parquet(in)
-        .groupBy("user_id", "event_type")
-        .agg(max(struct(col("tus"), col("event_id"), col("value"))).as("_m"))
-      withStreamWidth(s, s"$dir/events.parquet")(
-        graft.streaming.StreamOps.landUpdates(
-          stream, s"$out/rows", s"$out/ckpt").awaitTermination())
-      deleteTree(java.nio.file.Paths.get(in))
-      deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      Parquet.read(s, s"$out/rows")
+      val staged = ev.select(col("user_id"), col("event_type"),
+        EventOps.eventMicros(ev, "ts").as("tus"), col("event_id"), col("value"))
+      val rows = StreamReplay.frame(s, dir, staged)((sig, rows, ckpt) =>
+        StreamOps.landUpdates(sig.groupBy("user_id", "event_type")
+          .agg(max(struct(col("tus"), col("event_id"), col("value"))).as("_m")), rows, ckpt))
+      Parquet.read(s, rows)
         .groupBy("user_id", "event_type").agg(max(col("_m")).as("_m"))
         .select(col("user_id"), col("event_type"), col("_m.tus").as("last_us"),
           col("_m.event_id").as("event_id"), col("_m.value").as("value"))
@@ -3185,11 +2996,6 @@ object SparkEntry {
     "stream_outliers" -> { (s, dir) =>
       val sig = opset(s, dir).df.select(col("record"), col("t"),
         col("value").cast("double").as("value"))
-      val outPath = java.nio.file.Files.createTempDirectory("graft-stream-ol")
-      deleteAtExit(outPath)
-      val out = outPath.toString
-      val in = s"$out/in"
-      sig.write.parquet(in)
       val tk = sig.withColumn("_tk", floor(col("value") * 1e6 + 0.5).cast("long"))
       val st = tk.groupBy(col("record")).agg(
         count(lit(1)).as("_n"),
@@ -3198,81 +3004,39 @@ object SparkEntry {
       val mu = col("_s1").cast("double") / col("_n")
       val sd = sqrt(col("_s2").cast("double") / col("_n") - mu * mu)
       val stats = st.select(col("record"), mu.as("_mu"), sd.as("_sd"))
-      val stream = s.readStream.schema(sig.schema).parquet(in)
-        .withColumn("_tk", floor(col("value") * 1e6 + 0.5).cast("long"))
-        .join(broadcast(stats), Seq("record"))
-        .filter(col("_sd") > 0 && abs(col("_tk") - col("_mu")) > lit(3.0) * col("_sd"))
-        .select(col("record"), col("t"), col("value"),
-          round((col("_tk") - col("_mu")) / col("_sd"), 6).as("z"))
-      withStreamWidth(s, s"$dir/events.parquet")(
-        graft.streaming.StreamOps.writeOpsetStore(
-          stream, s"$out/rows", s"$out/ckpt").awaitTermination())
-      deleteTree(java.nio.file.Paths.get(in))
-      deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      Parquet.read(s, s"$out/rows").orderBy("record", "t")
+      val rows = StreamReplay.frame(s, dir, sig)((stream, rows, ckpt) =>
+        StreamOps.writeOpsetStore(stream
+          .withColumn("_tk", floor(col("value") * 1e6 + 0.5).cast("long"))
+          .join(broadcast(stats), Seq("record"))
+          .filter(col("_sd") > 0 && abs(col("_tk") - col("_mu")) > lit(3.0) * col("_sd"))
+          .select(col("record"), col("t"), col("value"),
+            round((col("_tk") - col("_mu")) / col("_sd"), 6).as("z")), rows, ckpt))
+      Parquet.read(s, rows).orderBy("record", "t")
     },
 
     // -- Structured Streaming interval join (row 39) --
     // Land-and-grade for StreamOps.intervalJoin: events replays as a
-    // bounded one-file stream read TWICE (clicks side, views side, each
-    // its own scan of the staged file), the watermarked time-range inner
-    // join runs in append mode, and with one micro-batch every matched
-    // pair lands exactly once. The event-time column branches on the ts
-    // vintage like stream_counts (interval arithmetic is exact micros on
-    // both branches), and the graded surface is integer micros only.
-    // Oracle = the batch self-join with the same range predicate.
-    "stream_join" -> { (s0, dir) =>
-      // stateful-streaming sizing rule: state-store partition count =
-      // spark.sql.shuffle.partitions AT QUERY START, and every state
-      // partition pays a per-batch commit (delta file + rename) whatever
-      // its size. This join's state is KB-sized, so 32 partitions ×
-      // 4 stores × batches = hundreds of near-empty commits whose IO
-      // latency IS the measured wall (run ≫ cpu, zero fetchWait — the
-      // round-11→12 "regression" was the rig's per-commit latency, not a
-      // plan change). Size the state to the state, not to the CPU count:
-      // an isolated child session pins 8 partitions for the streaming
-      // query without mutating the caller's conf. At 100 TB the same
-      // rule sizes it UP — partitions ~ state volume / executor memory.
-      val s = s0.newSession()
-      val path = s"$dir/events.parquet"
-      // the same input-size-derived width withStreamWidth applies
-      // elsewhere (this query pre-dated the helper with a pinned 8; the
-      // child session makes the set-without-restore safe)
-      s.conf.set("spark.sql.shuffle.partitions", math.max(1L,
-        math.min(32768L, regularFileBytes(path) / (8L << 20) + 1)).toString)
-      val schema = Parquet.schema(s, path)
-      val outPath = java.nio.file.Files.createTempDirectory("graft-stream-ij")
-      deleteAtExit(outPath)
-      val out = outPath.toString
-      val in = java.nio.file.Files.createDirectory(
-        java.nio.file.Paths.get(out, "in"))
-      java.nio.file.Files.copy(java.nio.file.Paths.get(path),
-        in.resolve("events.parquet"))
-      def et: Column = schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          timestamp_micros(expr("ts div 1000"))
-        case org.apache.spark.sql.types.TimestampType |
-            org.apache.spark.sql.types.TimestampNTZType =>
-          col("ts").cast("timestamp")
-        case other => throw new IllegalArgumentException(
-          s"stream_join: unsupported events.ts type $other")
+    // bounded one-batch stream read on both sides (clicks, views), the
+    // watermarked time-range inner join runs in append mode, and with one
+    // micro-batch every matched pair lands exactly once. Interval
+    // arithmetic is exact micros on both [[streamEventTime]] branches,
+    // and the graded surface is integer micros only. Oracle = the batch
+    // self-join with the same range predicate.
+    "stream_join" -> { (s, dir) =>
+      val rows = StreamReplay.file(s, dir, s"$dir/events.parquet") { (ev, rows, ckpt) =>
+        def side(tpe: String, prefix: String): DataFrame =
+          ev.filter(col("event_type") === tpe)
+            .select(col("user_id").as(s"${prefix}_user"), col("event_id").as(s"${prefix}_id"),
+              streamEventTime(ev.schema, "stream_join").as(s"${prefix}_et"))
+        val joined = StreamOps.intervalJoin(
+            side("click", "c"), side("view", "v"),
+            col("c_user") === col("v_user"), "c_et", "v_et",
+            JoinLookback, "1 hour")
+          .select(col("c_id").as("click_id"), col("v_id").as("view_id"),
+            (unix_micros(col("c_et")) - unix_micros(col("v_et"))).as("delay_us"))
+        StreamOps.writeOpsetStore(joined, rows, ckpt)
       }
-      def side(tpe: String, prefix: String): DataFrame =
-        s.readStream.schema(schema).parquet(in.toString)
-          .filter(col("event_type") === tpe)
-          .select(col("user_id").as(s"${prefix}_user"),
-            col("event_id").as(s"${prefix}_id"), et.as(s"${prefix}_et"))
-      val joined = graft.streaming.StreamOps.intervalJoin(
-          side("click", "c"), side("view", "v"),
-          col("c_user") === col("v_user"), "c_et", "v_et",
-          JoinLookback, "1 hour")
-        .select(col("c_id").as("click_id"), col("v_id").as("view_id"),
-          (unix_micros(col("c_et")) - unix_micros(col("v_et"))).as("delay_us"))
-      graft.streaming.StreamOps.writeOpsetStore(
-        joined, s"$out/rows", s"$out/ckpt").awaitTermination()
-      deleteTree(in)
-      deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      Parquet.read(s, s"$out/rows").orderBy("click_id", "view_id")
+      Parquet.read(s, rows).orderBy("click_id", "view_id")
     },
 
     // -- Structured Streaming running argmax (row 39) --
@@ -3281,33 +3045,18 @@ object SparkEntry {
     // oracle agree on the t ordering — replays as a bounded stream, the
     // per-record flatMapGroupsWithState detector emits its running
     // (instant, best) in Update mode, and with ONE micro-batch each
-    // record's single emission IS its full-data argmax. The staging
-    // write keeps its natural parallelism (32 part files at local[32]):
-    // the file source's default maxFilesPerTrigger (1000) puts every
-    // staged file in the first AvailableNow batch, so the single-batch
-    // contract holds without a coalesce(1) serializing a 10M-row write
-    // at the larger SFs. The fold is iteration-order-independent (max
-    // value, min t on ties), so the grade is deterministic regardless
-    // of file count or order; oracle = batch argmax per record.
+    // record's single emission IS its full-data argmax. The fold is
+    // iteration-order-independent (max value, min t on ties), so the
+    // grade is deterministic regardless of staged file count or order;
+    // oracle = batch argmax per record.
     "stream_argmax" -> { (s, dir) =>
       import s.implicits._
       val sig = opset(s, dir).df.select(col("record"), col("t"),
         col("value").cast("double").as("value"))
-      val outPath = java.nio.file.Files.createTempDirectory("graft-stream-am")
-      deleteAtExit(outPath)
-      val out = outPath.toString
-      val in = s"$out/in"
-      sig.write.parquet(in)
-      val stream = s.readStream.schema(sig.schema).parquet(in)
-        .as[graft.streaming.StreamOps.SigEvent]
-      val am = graft.streaming.StreamOps.runningArgmax(stream)
-        .toDF("record", "instant", "best")
-      withStreamWidth(s, s"$dir/events.parquet")(
-        graft.streaming.StreamOps.landUpdates(
-          am, s"$out/rows", s"$out/ckpt").awaitTermination())
-      deleteTree(java.nio.file.Paths.get(in))
-      deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      Parquet.read(s, s"$out/rows")
+      val rows = StreamReplay.frame(s, dir, sig)((stream, rows, ckpt) =>
+        StreamOps.landUpdates(StreamOps.runningArgmax(stream.as[StreamOps.SigEvent])
+          .toDF("record", "instant", "best"), rows, ckpt))
+      Parquet.read(s, rows)
         .select(col("record"), col("instant"), round(col("best"), 6).as("best"))
         .orderBy("record")
     },
@@ -3569,9 +3318,7 @@ object SparkEntry {
 
     "source_jsonl" -> { (s, dir) =>
       val docs = Parquet.read(s, s"$dir/documents.parquet")
-      val outPath = java.nio.file.Files.createTempDirectory("graft-jsonl")
-      deleteAtExit(outPath)
-      val corpus = s"$outPath/corpus"
+      val corpus = s"${Scratch(s, dir).dir("jsonl-")}/corpus"
       graft.sources.TextCorpus.writeJsonl(docs, corpus)
       java.nio.file.Files.write(
         java.nio.file.Paths.get(corpus, "part-corrupt.txt"),
@@ -3933,7 +3680,7 @@ object SparkEntry {
     "ann_indexed" -> { (s, dir) =>
       val emb = Parquet.read(s, s"$dir/embeddings.parquet")
       val cents = cachedIvfCentroids(s, dir)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index_${math.abs(dir.hashCode)}"
+      val path = Scratch(s, dir).dir("ivf-index-")
       Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, path)
       Similarity.ivfIndexTopK(Parquet.read(s, path),
           emb.filter(col("vec_id").isin(AnnQueryIds: _*)),
@@ -3950,7 +3697,7 @@ object SparkEntry {
     "ann_indexed_append" -> { (s, dir) =>
       val emb = Parquet.read(s, s"$dir/embeddings.parquet")
       val cents = cachedIvfCentroids(s, dir)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index_append_${math.abs(dir.hashCode)}"
+      val path = Scratch(s, dir).dir("ivf-index-")
       Similarity.writeIvfIndex(emb.filter(col("vec_id") % 2 === 0),
         "vec_id", "embedding", cents, path)
       Similarity.appendToIvfIndex(emb.filter(col("vec_id") % 2 =!= 0),
@@ -3967,23 +3714,10 @@ object SparkEntry {
     // landed (vec_id, cell) table grades against the frozen-centroid
     // assignment re-derived in SQL (the ann_ivf asg CTE).
     "stream_ivf_assign" -> { (s, dir) =>
-      val path = s"$dir/embeddings.parquet"
-      val schema = Parquet.schema(s, path)
-      val emb = Parquet.read(s, path)
       val cents = cachedIvfCentroids(s, dir)
-      val outPath = java.nio.file.Files.createTempDirectory("graft-stream-ivf")
-      deleteAtExit(outPath)
-      val out = outPath.toString
-      val in = java.nio.file.Files.createDirectory(java.nio.file.Paths.get(out, "in"))
-      java.nio.file.Files.copy(java.nio.file.Paths.get(path),
-        in.resolve("embeddings.parquet"))
-      val stream = s.readStream.schema(schema).parquet(in.toString)
-      withStreamWidth(s, path)(
-        graft.streaming.StreamOps.streamingIvfAssign(
-          stream, "embedding", cents, s"$out/rows", s"$out/ckpt").awaitTermination())
-      deleteTree(in)
-      deleteTree(java.nio.file.Paths.get(out, "ckpt"))
-      Parquet.read(s, s"$out/rows")
+      val rows = StreamReplay.file(s, dir, s"$dir/embeddings.parquet")((emb, rows, ckpt) =>
+        StreamOps.streamingIvfAssign(emb, "embedding", cents, rows, ckpt))
+      Parquet.read(s, rows)
         .select(col("vec_id"), col("cell").cast("long").as("cell"))
         .orderBy("vec_id")
     },

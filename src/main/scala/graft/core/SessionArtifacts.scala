@@ -16,12 +16,13 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *
   * Lifecycle:
   *   - [[clear]] releases one session's entries: a `DataFrame` (any
-  *     Dataset) is unpersisted (non-blocking), anything else is just
-  *     dropped;
+  *     Dataset) is unpersisted (non-blocking), an `AutoCloseable` (the
+  *     [[Scratch]] space) is closed, anything else is just dropped;
   *   - one [[EndListener]] per SparkContext drops every entry of that
-  *     context when it stops (references only — its cached blocks died
-  *     with it). The listener holds the context, never a session, so a
-  *     cleared session is garbage as soon as its caller drops it.
+  *     context when it stops and closes its `AutoCloseable`s (its cached
+  *     blocks died with it). The listener holds the context, never a
+  *     session, so a cleared session is garbage as soon as its caller
+  *     drops it.
   */
 object SessionArtifacts {
 
@@ -58,12 +59,17 @@ object SessionArtifacts {
     entries.keys.filter(_._1 eq s).foreach(k =>
       entries.remove(k).foreach {
         case ds: Dataset[_] => ds.unpersist(false)
+        case c: AutoCloseable => c.close()
         case _ =>
       })
 
   /** Drops the entries of every session of `sc` when `sc` stops. */
   final class EndListener private[SessionArtifacts] (sc: SparkContext) extends SparkListener {
     override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
-      entries.keys.filter(_._1.sparkContext eq sc).foreach(entries.remove)
+      entries.keys.filter(_._1.sparkContext eq sc).foreach(k =>
+        entries.remove(k).foreach {
+          case c: AutoCloseable => c.close()
+          case _ =>
+        })
   }
 }

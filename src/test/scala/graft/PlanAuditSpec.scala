@@ -366,22 +366,23 @@ class PlanAuditSpec extends SparkSpec {
   test("ivfIndexTopK prunes the index scan to the probed cells (partition pruning)") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val cents = graft.llm.Similarity.ivfCentroids(emb, "vec_id", "embedding", k = 4, iters = 2)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_audit").toString
-    graft.llm.Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, path)
-    val p = plan(graft.llm.Similarity.ivfIndexTopK(spark.read.parquet(path),
-      emb.filter(col("vec_id").isin(0L, 1L)), "vec_id", "embedding", 3, cents, nProbe = 1))
-    // the probed-cell literal must land in the scan's PARTITION filters —
-    // pruning at plan time, not a post-scan row filter
-    val idxScans = collectAll(p) {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec
-        if s.relation.location.rootPaths.exists(_.toString.contains("graft_ivf_audit")) => s
-    }
-    assert(idxScans.nonEmpty, s"expected a scan of the written index:\n$p")
-    idxScans.foreach { s =>
-      assert(s.partitionFilters.nonEmpty,
-        s"index scan must carry partition filters (pruned cells):\n$s")
-      assert(s.relation.partitionSchema.fieldNames.contains("cell"),
-        "index layout must be partitioned by cell")
+    withTempDir { path =>
+      graft.llm.Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, path)
+      val p = plan(graft.llm.Similarity.ivfIndexTopK(spark.read.parquet(path),
+        emb.filter(col("vec_id").isin(0L, 1L)), "vec_id", "embedding", 3, cents, nProbe = 1))
+      // the probed-cell literal must land in the scan's PARTITION filters —
+      // pruning at plan time, not a post-scan row filter
+      val idxScans = collectAll(p) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == new java.io.File(path).getName) => s
+      }
+      assert(idxScans.nonEmpty, s"expected a scan of the written index:\n$p")
+      idxScans.foreach { s =>
+        assert(s.partitionFilters.nonEmpty,
+          s"index scan must carry partition filters (pruned cells):\n$s")
+        assert(s.relation.partitionSchema.fieldNames.contains("cell"),
+          "index layout must be partitioned by cell")
+      }
     }
   }
 
@@ -556,9 +557,10 @@ class PlanAuditSpec extends SparkSpec {
   test("building a plan runs no Spark job: parquet schemas come from footers") {
     for (q <- Seq("sg_smooth", "events_funnel", "plot_byunit", "text_pii", "dedup_exact_salted"))
       assert(jobsStarted(SparkEntry.queries(q)(spark, dir)) === 0, s"jobs while building $q")
-    val store = java.nio.file.Files.createTempDirectory("graft-audit-store").toString
-    Opset.fromEvents(spark, dir).save(store)
-    assert(jobsStarted(Opset.load(spark, store)) === 0, "jobs while loading an Opset store")
+    withTempDir { store =>
+      Opset.fromEvents(spark, dir).save(store)
+      assert(jobsStarted(Opset.load(spark, store)) === 0, "jobs while loading an Opset store")
+    }
   }
 
   test("pca_circle: the fit is one job and compiles less than corr per pair; the table needs no sort") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 
 /** Guards the query/oracle contract: every query has exactly one oracle
@@ -21,16 +19,15 @@ class SparkEntrySpec extends SparkSpec {
     "ann_pq", "text_classifier", "pipe_funnel", "dedup_semantic", "dedup_text",
     "ann_probe_auto")
 
-  /** The model tables of [[Dir]] with about a fifth of each one's rows
-    * dropped: another directory whose fits differ from the fixture's.
+  /** `out`, holding the model tables of [[Dir]] with about a fifth of each
+    * one's rows dropped: another directory whose fits differ from the
+    * fixture's.
     */
-  private lazy val OtherDir: String = {
-    val out = Files.createTempDirectory("graft-entry-other").toString
+  private def otherDir(out: String): String = {
     for ((table, key) <- Seq("events" -> "event_id", "lineitem" -> "l_orderkey",
         "embeddings" -> "vec_id", "documents" -> "doc_id"))
       graft.core.Parquet.read(spark, s"$Dir/$table.parquet").filter(col(key) % 5 =!= 3)
         .coalesce(1).write.parquet(s"$out/$table.parquet")
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(new java.io.File(out))
     out
   }
 
@@ -92,29 +89,30 @@ class SparkEntrySpec extends SparkSpec {
     assert(jobsOnceQueried === 0)
   }
 
-  test("fitting at another directory leaves the fixture's model oracles unchanged") {
+  test("fitting at another directory leaves the fixture's model oracles unchanged") { withTempDir { tmp =>
     val fixture = modelOracles(Dir)
-    val other = SparkEntry.oracleSql(spark, OtherDir)
+    val other = SparkEntry.oracleSql(spark, otherDir(tmp))
     assert(other.keySet === SparkEntry.queries.keySet)
     assert(modelOracles(Dir) === fixture)
     // the other directory fits other models, so a mix-up would show
     for (q <- Seq("pca_circle", "instants_fit", "tube_fit", "ann_ivf", "text_classifier"))
       assert(other(q) !== fixture(q), q)
-  }
+    SparkEntry.clearSessionCaches(spark)
+  }}
 
-  test("the no-arg oracleSql holds a model's oracle only while one directory has fitted it") {
+  test("the no-arg oracleSql holds a model's oracle only while one directory has fitted it") { withTempDir { tmp =>
     SparkEntry.clearSessionCaches(spark)
     assert(!SparkEntry.oracleSql.contains("pca_circle"))
     SparkEntry.queries("pca_circle")(spark, Dir)
     val one = SparkEntry.oracleSql
     assert(ModelQueries.filter(one.contains) === Seq("pca_circle"), "it fits nothing")
     assert(one("pca_circle") === SparkEntry.oracleSql(spark, Dir)("pca_circle"))
-    SparkEntry.queries("pca_circle")(spark, OtherDir)
+    SparkEntry.queries("pca_circle")(spark, otherDir(tmp))
     val two = SparkEntry.oracleSql
     assert(!two.contains("pca_circle"))
     assert(ModelQueries.filter(two.contains).size === 15, "the models one directory fitted stay")
     SparkEntry.clearSessionCaches(spark)
-  }
+  }}
 
   // A consumer of a shared session artifact must return the same rows
   // whether its producer query built the artifact or the consumer did.

@@ -44,6 +44,14 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** Run `body` with a fresh temporary directory, deleted with all it
+    * holds when `body` returns or throws.
+    */
+  def withTempDir[A](body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-spec-").toString
+    try body(dir) finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   /** The number of Spark jobs `body` starts. The listener bus is drained
     * before the count starts and after `body` returns, so earlier jobs'
     * events are not counted and this body's are not missed.

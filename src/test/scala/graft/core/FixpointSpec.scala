@@ -2,7 +2,6 @@ package graft.core
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -15,11 +14,6 @@ class FixpointSpec extends SparkSpec {
   private def countDown(s: DataFrame): DataFrame =
     s.select(greatest(col("x") - 1, lit(0L)).as("x"))
   private def xs(df: DataFrame): Seq[Long] = df.collect().map(_.getLong(0)).toSeq.sorted
-
-  private def withTempDir[A](body: String => A): A = {
-    val dir = Files.createTempDirectory("graft-fixpoint").toString
-    try body(dir) finally FileUtils.deleteDirectory(new java.io.File(dir))
-  }
 
   test("a stable metric stops the loop, one job per materialisation, no separate check") {
     for (reliable <- Seq(false, true)) withTempDir { tmp =>

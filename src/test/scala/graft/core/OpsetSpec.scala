@@ -56,12 +56,14 @@ class OpsetSpec extends SparkSpec {
   }
 
   test("save/load roundtrips the store with record co-location") {
-    val dir = java.nio.file.Files.createTempDirectory("opset-save").toString + "/store"
-    os.save(dir, numFiles = 2)
-    val back = Opset.load(spark, dir)
-    assert(back.size === 4)
-    assert(back.df.count() === os.df.count())
-    assert(back.get("r3").count() === 3)
+    withTempDir { tmp =>
+      val dir = s"$tmp/store"
+      os.save(dir, numFiles = 2)
+      val back = Opset.load(spark, dir)
+      assert(back.size === 4)
+      assert(back.df.count() === os.df.count())
+      assert(back.get("r3").count() === 3)
+    }
   }
 
   test("sampleData loads the canonical events Opset") {

@@ -20,8 +20,6 @@ import graft.SparkSpec
   */
 class ParquetSpec extends SparkSpec {
 
-  private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
-
   /** Same schema as the plain read, and building the frame ran no job. */
   private def assertParity(path: String): Unit = {
     val expected = spark.read.parquet(path).schema
@@ -37,8 +35,7 @@ class ParquetSpec extends SparkSpec {
     fixtures.sortBy(_.getName).foreach(f => assertParity(f.getPath))
   }
 
-  test("a multi-file Opset.save directory with _SUCCESS, field metadata kept") {
-    val path = tmp("graft-parquet-store")
+  test("a multi-file Opset.save directory with _SUCCESS, field metadata kept") { withTempDir { path =>
     val meta = new MetadataBuilder().putString("unit", "m/s").build()
     val os = Opset.sampleData(spark)
     // AQE would coalesce this small output into one file
@@ -51,21 +48,18 @@ class ParquetSpec extends SparkSpec {
     // the metadata lives only in Spark's row-metadata key, not the parquet schema
     assert(Parquet.schema(spark, path)("value").metadata.getString("unit") === "m/s")
     assert(Opset.load(spark, path).df.schema === spark.read.parquet(path).schema)
-  }
+  }}
 
-  test("a partitionBy directory keeps its inferred partition column") {
-    val path = tmp("graft-parquet-cells")
+  test("a partitionBy directory keeps its inferred partition column") { withTempDir { path =>
     spark.range(40).select(col("id"), (col("id") % 4).as("cell"),
         array(col("id").cast("double"), lit(1.0)).as("vec"))
       .write.mode("overwrite").partitionBy("cell").parquet(path)
     assertParity(path)
     assert(Parquet.schema(spark, path).fieldNames.toSeq === Seq("id", "vec", "cell"))
-  }
+  }}
 
-  test("a streaming file-sink directory with _spark_metadata") {
-    val src = tmp("graft-parquet-src")
-    val out = tmp("graft-parquet-sink")
-    val ckpt = tmp("graft-parquet-ckpt")
+  test("a streaming file-sink directory with _spark_metadata") { withTempDir { tmp =>
+    val (src, out, ckpt) = (s"$tmp/src", s"$tmp/sink", s"$tmp/ckpt")
     spark.range(30).select(col("id"), (col("id") * 2).as("v")).write.mode("overwrite").parquet(src)
     val q = spark.readStream.schema(Parquet.schema(spark, src)).parquet(src)
       .writeStream.format("parquet").option("checkpointLocation", ckpt)
@@ -73,12 +67,12 @@ class ParquetSpec extends SparkSpec {
     try q.awaitTermination() finally q.stop()
     assert(new File(out, "_spark_metadata").isDirectory)
     assertParity(out)
-  }
+  }}
 
-  test("binaryAsString and nanosAsLong apply to a footer without Spark's key") {
+  test("binaryAsString and nanosAsLong apply to a footer without Spark's key") { withTempDir { tmp =>
     // written by parquet-mr, not Spark: no row-metadata key, so the
     // session's converter settings decide the types
-    val path = Paths.get(tmp("graft-parquet-mr"), "raw.parquet").toString
+    val path = Paths.get(tmp, "raw.parquet").toString
     val schema = MessageTypeParser.parseMessageType(
       "message m { required binary b; required int64 ns (TIMESTAMP(NANOS,true)); }")
     val writer = ExampleParquetWriter.builder(new Path(path))
@@ -97,25 +91,23 @@ class ParquetSpec extends SparkSpec {
       assertParity(path)
       assert(Parquet.schema(spark, path)("b").dataType === BinaryType)
     }
-  }
+  }}
 
-  test("a store rewritten in place is read with its new schema") {
-    val path = tmp("graft-parquet-rewrite")
+  test("a store rewritten in place is read with its new schema") { withTempDir { path =>
     spark.range(3).select(col("id").as("a")).write.mode("overwrite").parquet(path)
     assert(Parquet.schema(spark, path).fieldNames.toSeq === Seq("a"))
     spark.range(3).select(col("id").as("b"), lit("x").as("c")).write.mode("overwrite").parquet(path)
     assert(Parquet.schema(spark, path).fieldNames.toSeq === Seq("b", "c"))
-  }
+  }}
 
-  test("a missing path and an empty directory fail as spark.read.parquet does") {
-    val missing = Paths.get(tmp("graft-parquet-missing"), "nope").toString
-    val empty = tmp("graft-parquet-empty")
+  test("a missing path and an empty directory fail as spark.read.parquet does") { withTempDir { empty =>
+    val missing = Paths.get(empty, "nope").toString
     for (p <- Seq(missing, empty)) {
       val plain = intercept[Exception](spark.read.parquet(p))
       val helper = intercept[Exception](Parquet.read(spark, p))
       assert(helper.getClass === plain.getClass, s"exception for $p")
     }
-  }
+  }}
 
   test("no src/main call site reads parquet around the helper") {
     val helper = Paths.get("src/main/scala/graft/core/Parquet.scala")

@@ -89,6 +89,68 @@ class SessionArtifactsSpec extends SparkSpec {
       "keep shared state in SessionArtifacts, keyed by (session, dir):\n" + offenders.mkString("\n"))
   }
 
+  // Files a query stages belong to its session's scratch space, which
+  // clearSessionCaches and the context's stop delete; a temp dir made
+  // elsewhere, or deleted only at JVM exit, outlives the session.
+  test("no src/main file outside the scratch owner makes temp dirs or exit hooks") {
+    val owner = Paths.get("src/main/scala/graft/core/Scratch.scala")
+    val banned = Seq("createTempDirectory", "java.io.tmpdir", "addShutdownHook")
+    val offenders = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p != owner)
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if banned.exists(line.contains) => s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    assert(offenders.isEmpty,
+      "stage files under graft.core.Scratch(s, dir):\n" + offenders.mkString("\n"))
+  }
+
+  private val Fixture = "perfbench/fixture"
+
+  private def scratchRoot(s: org.apache.spark.sql.SparkSession, dir: String): java.nio.file.Path =
+    Scratch(s, dir).rootPath.getOrElse(fail(s"no scratch root at $dir"))
+
+  test("clearSessionCaches deletes what the session's queries staged") {
+    val s = spark.newSession()
+    for (q <- Seq("stream_dedup", "source_jsonl", "dedup_minhash_incr"))
+      assert(graft.SparkEntry.queries(q)(s, Fixture).count() > 0, q)
+    val root = scratchRoot(s, Fixture)
+    assert(Files.list(root).count() === 3, "one directory per query")
+    graft.SparkEntry.clearSessionCaches(s)
+    assert(!Files.exists(root))
+  }
+
+  test("the context's stop deletes the scratch root") {
+    val s = spark.newSession()
+    Files.write(Paths.get(Scratch(s, "d").dir("x"), "f"), Array[Byte](1))
+    val root = scratchRoot(s, "d")
+    // delivered directly: stopping the suite's shared context is not an option
+    ListenerProbe.registered[SessionArtifacts.EndListener](spark.sparkContext)
+      .foreach(_.onApplicationEnd(SparkListenerApplicationEnd(0L)))
+    assert(!Files.exists(root))
+  }
+
+  test("the index queries at two dirs in two sessions write under four disjoint roots") {
+    withTempDir { other =>
+      for (t <- Seq("documents", "embeddings"))
+        Files.copy(Paths.get(s"$Fixture/$t.parquet"), Paths.get(other, s"$t.parquet"))
+      val sessions = Seq(spark.newSession(), spark.newSession())
+      val roots = for (s <- sessions; dir <- Seq(Fixture, other)) yield {
+        for (q <- Seq("dedup_minhash_incr", "ann_indexed", "ann_indexed_append"))
+          assert(graft.SparkEntry.queries(q)(s, dir).count() > 0, s"$q at $dir")
+        val root = scratchRoot(s, dir)
+        assert(Files.list(root).iterator().asScala.map(_.getFileName.toString.takeWhile(_ != '-'))
+          .toSeq.sorted === Seq("ivf", "ivf", "mh"), s"$root holds the three indexes")
+        root
+      }
+      for (a <- roots; b <- roots if a ne b)
+        assert(!a.startsWith(b), s"$a lies under $b")
+      sessions.foreach(graft.SparkEntry.clearSessionCaches)
+      assert(roots.forall(!Files.exists(_)))
+    }
+  }
+
   test("one end listener per context, however many sessions use the store") {
     val sessions = Seq.fill(4)(spark.newSession())
     sessions.foreach(s => SessionArtifacts.getOrBuild(s, "d", "k")(1))

@@ -48,15 +48,12 @@ class GraphSpec extends SparkSpec {
   }
 
   test("pagerank: checkpoint dir is restored after a checkpointDir run") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-restore").toString
-    try {
+    withTempDir { dir =>
       assert(spark.sparkContext.getCheckpointDir === None)
       val cyc = Seq(("a", "b"), ("b", "a")).toDF("s", "d")
       Graph.pagerank(cyc, "s", "d", iters = 2, checkpointDir = Some(dir)).collect()
       assert(spark.sparkContext.getCheckpointDir === None,
         "pagerank leaked its checkpoint dir into the session")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
 

@@ -138,18 +138,19 @@ class SelectorSpec extends SparkSpec {
     val (bank, _) = Indicators.bank(df, "record", "t", codes, 2)
     val sel = Selector.fit(bank, selected, "record", "t", featCols,
       retries = 3, samplePct = 0.5, minInstances = 5, seed = 7L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-selector").toString
-    Selector.save(spark, sel, s"$dir/model")
-    val back = Selector.load(spark, s"$dir/model")
-    assert(back.features === sel.features)
-    assert(back.model.toDebugString === sel.model.toDebugString)
-    val a = Selector.predictInstants(
-      Selector.belief(sel, bank, "record", "t", 5), "record", "t")
-      .orderBy("record").collect().toSeq
-    val b = Selector.predictInstants(
-      Selector.belief(back, bank, "record", "t", 5), "record", "t")
-      .orderBy("record").collect().toSeq
-    assert(a === b)
+    withTempDir { dir =>
+      Selector.save(spark, sel, s"$dir/model")
+      val back = Selector.load(spark, s"$dir/model")
+      assert(back.features === sel.features)
+      assert(back.model.toDebugString === sel.model.toDebugString)
+      val a = Selector.predictInstants(
+        Selector.belief(sel, bank, "record", "t", 5), "record", "t")
+        .orderBy("record").collect().toSeq
+      val b = Selector.predictInstants(
+        Selector.belief(back, bank, "record", "t", 5), "record", "t")
+        .orderBy("record").collect().toSeq
+      assert(a === b)
+    }
   }
 
   test("indicator bank scales to a full (width × order × ±sigma) grid") {

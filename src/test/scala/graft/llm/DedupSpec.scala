@@ -204,22 +204,18 @@ class DedupSpec extends SparkSpec {
 
   test("components: checkpoint dir is restored after a checkpointDir run") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-restore").toString
-    try {
+    withTempDir { dir =>
       val prev = spark.sparkContext.getCheckpointDir
       val pairs = Seq((1L, 2L), (5L, 6L)).toDF("id_a", "id_b")
       Dedup.components(pairs, checkpointDir = Some(dir)).collect()
       assert(spark.sparkContext.getCheckpointDir === prev,
         "components leaked its checkpoint dir into the session")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
 
   test("components: reliable checkpointDir path matches localCheckpoint result") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    try {
+    withTempDir { dir =>
       val pairs = Seq((1L, 2L), (2L, 3L), (7L, 1L), (5L, 6L), (10L, 11L)).toDF("id_a", "id_b")
       val local = Dedup.components(pairs).as[(Long, Long)].collect().toMap
       val reliable = Dedup.components(pairs, checkpointDir = Some(dir))
@@ -229,8 +225,6 @@ class DedupSpec extends SparkSpec {
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(p => java.nio.file.Files.isRegularFile(p)).count()
       assert(wrote > 0, "reliable checkpoint wrote no files")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
 
@@ -239,14 +233,11 @@ class DedupSpec extends SparkSpec {
     // the loop's stop metric is observed on each round's materialisation
     // job; a separate convergence job per round took this chain to 86 jobs
     val pairs = (1L to 200L).map(i => (i + 1, i)).toDF("id_a", "id_b")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-jobs").toString
-    try {
+    withTempDir { dir =>
       for (ckpt <- Seq(None, Some(dir))) {
         val jobs = jobsStarted(Dedup.components(pairs, checkpointDir = ckpt))
         assert(jobs <= 66, s"checkpointDir=$ckpt: $jobs jobs")
       }
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
 

@@ -10,9 +10,6 @@ class MinhashIndexSpec extends SparkSpec {
   private val Cfg = MinhashIndex.Config(shingleLen = 4, numHashes = 8, bands = 4,
     threshold = 0.5)
 
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_mhidx_spec_$name"
-
   /** A corpus with planted near-dups across the old/new split and inside
     * the new batch: ids 1..40 old, 41..50 new; doc i is a rotation of one
     * of 6 base sentences so rotations of the same base are near-dups.
@@ -45,8 +42,7 @@ class MinhashIndexSpec extends SparkSpec {
       .select("id_a", "id_b", "jaccard")
   }
 
-  test("dedupAgainst equals the whole-corpus run restricted to batch-touching pairs") {
-    val path = tmp("exact")
+  test("dedupAgainst equals the whole-corpus run restricted to batch-touching pairs") { withTempDir { path =>
     MinhashIndex.write(oldDocs, "doc_id", "text", path, Cfg, CacheScope.session)
     val got = MinhashIndex.dedupAgainst(newDocs, "doc_id", "text", path)
       .as[(Long, Long, Double)].collect().toSet
@@ -56,10 +52,9 @@ class MinhashIndexSpec extends SparkSpec {
     assert(got === want)
     // and it found both batch-vs-corpus AND batch-internal pairs
     assert(got.exists(p => p._1 <= 40 && p._2 > 40))
-  }
+  }}
 
-  test("the mega-bucket cap decision matches the whole-corpus census") {
-    val path = tmp("cap")
+  test("the mega-bucket cap decision matches the whole-corpus census") { withTempDir { path =>
     MinhashIndex.write(oldDocs, "doc_id", "text", path, Cfg, CacheScope.session)
     // cap low enough that rotation cliques overflow their shared buckets —
     // the drop must mirror the one-shot run's union census, not either
@@ -72,10 +67,10 @@ class MinhashIndexSpec extends SparkSpec {
     assert(got === want)
     assert(got.size < fullPairs().filter($"id_a" > 40 || $"id_b" > 40).count(),
       "cap never fired — test corpus no longer exercises the guard")
-  }
+  }}
 
-  test("an index appended in two batches answers like one built in a single shot") {
-    val p1 = tmp("twobatch"); val p2 = tmp("oneshot")
+  test("an index appended in two batches answers like one built in a single shot") { withTempDir { tmp =>
+    val p1 = s"$tmp/twobatch"; val p2 = s"$tmp/oneshot"
     MinhashIndex.write(oldDocs.filter($"doc_id" <= 20), "doc_id", "text", p1, Cfg, CacheScope.session)
     MinhashIndex.append(oldDocs.filter($"doc_id" > 20), "doc_id", "text", p1)
     MinhashIndex.write(oldDocs, "doc_id", "text", p2, Cfg, CacheScope.session)
@@ -84,21 +79,19 @@ class MinhashIndexSpec extends SparkSpec {
     val b = MinhashIndex.dedupAgainst(newDocs, "doc_id", "text", p2)
       .as[(Long, Long, Double)].collect().toSet
     assert(a === b && a.nonEmpty)
-  }
+  }}
 
-  test("config freezes in the artifact; no-config write derives it from the corpus") {
-    val path = tmp("cfg")
+  test("config freezes in the artifact; no-config write derives it from the corpus") { withTempDir { path =>
     val cfg = MinhashIndex.write(oldDocs, "doc_id", "text", path)
     assert(MinhashIndex.readConfig(spark, path) === cfg)
     val auto = Dedup.minhashAutoConfig(40L, 0.6)
     assert(cfg.numHashes === auto.numHashes && cfg.bands === auto.bands)
-  }
+  }}
 
-  test("indexStats surfaces occupancy (the re-index signal)") {
-    val path = tmp("stats")
+  test("indexStats surfaces occupancy (the re-index signal)") { withTempDir { path =>
     MinhashIndex.write(oldDocs, "doc_id", "text", path, Cfg, CacheScope.session)
     val row = MinhashIndex.indexStats(spark, path).head()
     assert(row.getLong(0) === 40L) // n_docs
     assert(row.getLong(1) > 0L && row.getLong(3) >= 1L)
-  }
+  }}
 }

@@ -271,64 +271,67 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", k = 4, iters = 3)
     val direct = Similarity.ivfTopK(emb, "vec_id", "embedding", queries, 3, cents, nProbe = 2)
       .orderBy("q_id", "rank").collect().toSeq
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_spec").toString
-    Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, path)
-    val indexed = Similarity.ivfIndexTopK(spark.read.parquet(path),
-        emb.filter($"vec_id".isin(queries: _*)), "vec_id", "embedding", 3, cents, nProbe = 2)
-      .orderBy("q_id", "rank").collect().toSeq
-    assert(indexed === direct,
-      "the storage-side probe must answer identically to the compute-side operator")
+    withTempDir { path =>
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, path)
+      val indexed = Similarity.ivfIndexTopK(spark.read.parquet(path),
+          emb.filter($"vec_id".isin(queries: _*)), "vec_id", "embedding", 3, cents, nProbe = 2)
+        .orderBy("q_id", "rank").collect().toSeq
+      assert(indexed === direct,
+        "the storage-side probe must answer identically to the compute-side operator")
+    }
   }
 
   test("ivfIndexTopK maxPlanCells: past the cap the cell filter becomes a semi-join " +
     "(no literal IN-list, no unbounded driver collect) with identical answers") {
     val queries = (0L to 40L).toSeq // a batch wide enough to probe > 1 distinct cell
     val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", k = 4, iters = 3)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_cap").toString
-    Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, path)
-    val qs = emb.filter($"vec_id".isin(queries: _*))
-    val literal = Similarity.ivfIndexTopK(spark.read.parquet(path), qs,
-      "vec_id", "embedding", 3, cents, nProbe = 2)
-    val capped = Similarity.ivfIndexTopK(spark.read.parquet(path), qs,
-      "vec_id", "embedding", 3, cents, nProbe = 2, maxPlanCells = 1)
-    assert(capped.orderBy("q_id", "rank").collect().toSeq ===
-      literal.orderBy("q_id", "rank").collect().toSeq)
-    // plan audit: the capped path must carry the semi-join, not an IN-list
-    val plan = capped.queryExecution.executedPlan.toString
-    assert(plan.contains("LeftSemi"), s"expected a semi-join cell filter:\n$plan")
-    assert(!plan.contains("cell#) IN") && !"cell IN \\(".r.findFirstIn(plan).isDefined,
-      s"capped path must not plan a literal cell IN-list:\n$plan")
-    // and the literal path keeps plan-time pruning (IN-list present)
-    val litPlan = literal.queryExecution.executedPlan.toString
-    assert(litPlan.contains("LeftSemi") === false)
+    withTempDir { path =>
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, path)
+      val qs = emb.filter($"vec_id".isin(queries: _*))
+      val literal = Similarity.ivfIndexTopK(spark.read.parquet(path), qs,
+        "vec_id", "embedding", 3, cents, nProbe = 2)
+      val capped = Similarity.ivfIndexTopK(spark.read.parquet(path), qs,
+        "vec_id", "embedding", 3, cents, nProbe = 2, maxPlanCells = 1)
+      assert(capped.orderBy("q_id", "rank").collect().toSeq ===
+        literal.orderBy("q_id", "rank").collect().toSeq)
+      // plan audit: the capped path must carry the semi-join, not an IN-list
+      val plan = capped.queryExecution.executedPlan.toString
+      assert(plan.contains("LeftSemi"), s"expected a semi-join cell filter:\n$plan")
+      assert(!plan.contains("cell#) IN") && !"cell IN \\(".r.findFirstIn(plan).isDefined,
+        s"capped path must not plan a literal cell IN-list:\n$plan")
+      // and the literal path keeps plan-time pruning (IN-list present)
+      val litPlan = literal.queryExecution.executedPlan.toString
+      assert(litPlan.contains("LeftSemi") === false)
+    }
   }
 
   test("appendToIvfIndex: two-batch build == one-shot index, centroids round-trip") {
     val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", k = 4, iters = 3)
-    val oneShot = java.nio.file.Files.createTempDirectory("graft_ivf_one").toString
-    val twoStep = java.nio.file.Files.createTempDirectory("graft_ivf_two").toString
-    Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, oneShot)
-    Similarity.writeIvfIndex(emb.filter($"vec_id" % 3 === 0), "vec_id", "embedding",
-      cents, twoStep)
-    Similarity.appendToIvfIndex(emb.filter($"vec_id" % 3 =!= 0), "vec_id", "embedding",
-      twoStep)
-    // the frozen quantizer is part of the artifact and round-trips exactly
-    val back = Similarity.readIvfCentroids(spark, twoStep)
-    assert(back.map(_.toSeq).toSeq === cents.map(_.toSeq).toSeq)
-    // identical (id, cell) assignment — layout compatibility is per-row
-    def rows(p: String) = spark.read.parquet(p)
-      .select("vec_id", "cell").as[(Long, Int)].collect().toSet
-    assert(rows(twoStep) === rows(oneShot))
-    // and identical answers through the probe
-    val queries = Seq(0L, 1L, 2L)
-    def ans(p: String) = Similarity.ivfIndexTopK(spark.read.parquet(p),
-        emb.filter($"vec_id".isin(queries: _*)), "vec_id", "embedding", 3, cents, nProbe = 2)
-      .orderBy("q_id", "rank").collect().toSeq
-    assert(ans(twoStep) === ans(oneShot))
-    // appending under a missing/foreign directory fails loudly
-    intercept[IllegalArgumentException] {
-      Similarity.appendToIvfIndex(emb, "vec_id", "embedding",
-        java.nio.file.Files.createTempDirectory("graft_not_an_index").toString)
+    withTempDir { tmp =>
+      val (oneShot, twoStep) = (s"$tmp/one", s"$tmp/two")
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, oneShot)
+      Similarity.writeIvfIndex(emb.filter($"vec_id" % 3 === 0), "vec_id", "embedding",
+        cents, twoStep)
+      Similarity.appendToIvfIndex(emb.filter($"vec_id" % 3 =!= 0), "vec_id", "embedding",
+        twoStep)
+      // the frozen quantizer is part of the artifact and round-trips exactly
+      val back = Similarity.readIvfCentroids(spark, twoStep)
+      assert(back.map(_.toSeq).toSeq === cents.map(_.toSeq).toSeq)
+      // identical (id, cell) assignment — layout compatibility is per-row
+      def rows(p: String) = spark.read.parquet(p)
+        .select("vec_id", "cell").as[(Long, Int)].collect().toSet
+      assert(rows(twoStep) === rows(oneShot))
+      // and identical answers through the probe
+      val queries = Seq(0L, 1L, 2L)
+      def ans(p: String) = Similarity.ivfIndexTopK(spark.read.parquet(p),
+          emb.filter($"vec_id".isin(queries: _*)), "vec_id", "embedding", 3, cents, nProbe = 2)
+        .orderBy("q_id", "rank").collect().toSeq
+      assert(ans(twoStep) === ans(oneShot))
+      // appending under a missing/foreign directory fails loudly
+      intercept[IllegalArgumentException] {
+        Similarity.appendToIvfIndex(emb, "vec_id", "embedding",
+          java.nio.file.Files.createDirectory(java.nio.file.Paths.get(tmp, "foreign")).toString)
+      }
     }
   }
 
@@ -336,30 +339,31 @@ class SimilaritySpec extends SparkSpec {
     "stored widths == search at explicit widths; uncalibrated reads back None") {
     val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", k = 4, iters = 3)
     val cfg = Similarity.IvfProbeConfig(2, 3, 0.9375, met = true)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_probe").toString
-    Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, path, probe = Some(cfg))
-    assert(Similarity.readIvfProbeConfig(spark, path) === Some(cfg),
-      "the calibrated config must round-trip bit-exactly")
-    val qs = emb.filter($"vec_id".isin(0L, 1L, 2L))
-    val stored = Similarity.ivfIndexTopK(spark, path, qs, "vec_id", "embedding", 3)
-      .orderBy("q_id", "rank").collect().toSeq
-    val explicit = Similarity.ivfIndexTopK(spark.read.parquet(path), qs,
-        "vec_id", "embedding", 3, cents,
-        nProbe = math.min(cfg.nProbeCoarse * cfg.nProbeFine, cents.length))
-      .orderBy("q_id", "rank").collect().toSeq
-    assert(stored === explicit,
-      "stored-widths search must be the explicit-widths search")
-    // an index written WITHOUT a calibration carries no config and
-    // searches at the caller's default breadth
-    val bare = java.nio.file.Files.createTempDirectory("graft_ivf_bare").toString
-    Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, bare)
-    assert(Similarity.readIvfProbeConfig(spark, bare) === None)
-    val atDefault = Similarity.ivfIndexTopK(spark, bare, qs, "vec_id", "embedding", 3)
-      .orderBy("q_id", "rank").collect().toSeq
-    val atTwo = Similarity.ivfIndexTopK(spark.read.parquet(bare), qs,
-        "vec_id", "embedding", 3, cents, nProbe = 2)
-      .orderBy("q_id", "rank").collect().toSeq
-    assert(atDefault === atTwo)
+    withTempDir { tmp =>
+      val (path, bare) = (s"$tmp/calibrated", s"$tmp/bare")
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, path, probe = Some(cfg))
+      assert(Similarity.readIvfProbeConfig(spark, path) === Some(cfg),
+        "the calibrated config must round-trip bit-exactly")
+      val qs = emb.filter($"vec_id".isin(0L, 1L, 2L))
+      val stored = Similarity.ivfIndexTopK(spark, path, qs, "vec_id", "embedding", 3)
+        .orderBy("q_id", "rank").collect().toSeq
+      val explicit = Similarity.ivfIndexTopK(spark.read.parquet(path), qs,
+          "vec_id", "embedding", 3, cents,
+          nProbe = math.min(cfg.nProbeCoarse * cfg.nProbeFine, cents.length))
+        .orderBy("q_id", "rank").collect().toSeq
+      assert(stored === explicit,
+        "stored-widths search must be the explicit-widths search")
+      // an index written WITHOUT a calibration carries no config and
+      // searches at the caller's default breadth
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, bare)
+      assert(Similarity.readIvfProbeConfig(spark, bare) === None)
+      val atDefault = Similarity.ivfIndexTopK(spark, bare, qs, "vec_id", "embedding", 3)
+        .orderBy("q_id", "rank").collect().toSeq
+      val atTwo = Similarity.ivfIndexTopK(spark.read.parquet(bare), qs,
+          "vec_id", "embedding", 3, cents, nProbe = 2)
+        .orderBy("q_id", "rank").collect().toSeq
+      assert(atDefault === atTwo)
+    }
   }
 
   test("ivfAutoProbe knownCount: supplying the corpus count is result-identical " +
@@ -373,11 +377,12 @@ class SimilaritySpec extends SparkSpec {
 
   test("ivfIndexCellStats reports counts and skew vs the median cell") {
     val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", k = 4, iters = 3)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_stats").toString
-    Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, path)
-    val stats = Similarity.ivfIndexCellStats(spark.read.parquet(path)).collect()
-    assert(stats.map(_.getAs[Long]("n")).sum === emb.count())
-    assert(stats.forall(_.getAs[Double]("frac_of_median") > 0.0))
+    withTempDir { path =>
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, path)
+      val stats = Similarity.ivfIndexCellStats(spark.read.parquet(path)).collect()
+      assert(stats.map(_.getAs[Long]("n")).sum === emb.count())
+      assert(stats.forall(_.getAs[Double]("frac_of_median") > 0.0))
+    }
   }
 
   test("pqCodebooks are deterministic and partition-invariant") {

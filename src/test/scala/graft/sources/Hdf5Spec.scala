@@ -88,57 +88,63 @@ class Hdf5Spec extends SparkSpec {
   }
 
   test("Hdf5Opset.load: pandas fixed-format store → long format with nulls for missing signals") {
-    val path = java.nio.file.Files.createTempDirectory("graft_h5").resolve("store.h5").toString
-    Hdf5.writeFile(path, fixtureStore)
-    val df = Hdf5Opset.load(spark, path)
-    assert(df.columns.toSeq === Seq("record", "t", "index", "ALT [ft]", "SPD [kt]"))
-    val rows = df.orderBy("record", "t").collect()
-    assert(rows.length === 5)
-    val a1 = rows(0)
-    assert(a1.getString(0) === "recA" && a1.getLong(1) === 1L && a1.getDouble(2) === 10.0)
-    assert(a1.getDouble(3) === 100.0 && a1.getDouble(4) === 5.0)
-    assert(rows(2).getDouble(3) === 300.0 && rows(2).getDouble(4) === 7.0)
-    val b2 = rows(4)
-    assert(b2.getString(0) === "recB" && b2.getLong(1) === 2L && b2.getDouble(2) === 200.0)
-    assert(b2.getDouble(3) === 2.5)
-    assert(b2.isNullAt(4), "recB has no SPD — must be null, not dropped or zero")
+    withTempDir { tmp =>
+      val path = s"$tmp/store.h5"
+      Hdf5.writeFile(path, fixtureStore)
+      val df = Hdf5Opset.load(spark, path)
+      assert(df.columns.toSeq === Seq("record", "t", "index", "ALT [ft]", "SPD [kt]"))
+      val rows = df.orderBy("record", "t").collect()
+      assert(rows.length === 5)
+      val a1 = rows(0)
+      assert(a1.getString(0) === "recA" && a1.getLong(1) === 1L && a1.getDouble(2) === 10.0)
+      assert(a1.getDouble(3) === 100.0 && a1.getDouble(4) === 5.0)
+      assert(rows(2).getDouble(3) === 300.0 && rows(2).getDouble(4) === 7.0)
+      val b2 = rows(4)
+      assert(b2.getString(0) === "recB" && b2.getLong(1) === 2L && b2.getDouble(2) === 200.0)
+      assert(b2.getDouble(3) === 2.5)
+      assert(b2.isNullAt(4), "recB has no SPD — must be null, not dropped or zero")
+    }
   }
 
   test("Hdf5Opset.loadMany: one task per store, unified schema, loud on extra columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_h5m")
-    val p1 = dir.resolve("storeA.h5").toString
-    val p2 = dir.resolve("storeB.h5").toString
-    Hdf5.writeFile(p1, fixtureStore)
-    Hdf5.writeFile(p2, fixtureStore)
-    val df = Hdf5Opset.loadMany(spark, Seq(p1, p2), Seq("ALT [ft]", "SPD [kt]"))
-    assert(df.columns.toSeq === Seq("store", "record", "t", "index", "ALT [ft]", "SPD [kt]"))
-    assert(df.count() === 10) // 5 rows per store
-    assert(df.select("store").distinct().collect().map(_.getString(0)).sorted
-      === Array("storeA", "storeB"))
-    // same-named records stay distinguishable via the store key
-    assert(df.filter(df("record") === "recA").select("store").distinct().count() === 2)
-    // a store with a column outside signalCols fails loudly...
-    val narrow = intercept[org.apache.spark.SparkException] {
-      Hdf5Opset.loadMany(spark, Seq(p1), Seq("ALT [ft]")).count()
+    withTempDir { tmp =>
+      val dir = java.nio.file.Paths.get(tmp)
+      val p1 = dir.resolve("storeA.h5").toString
+      val p2 = dir.resolve("storeB.h5").toString
+      Hdf5.writeFile(p1, fixtureStore)
+      Hdf5.writeFile(p2, fixtureStore)
+      val df = Hdf5Opset.loadMany(spark, Seq(p1, p2), Seq("ALT [ft]", "SPD [kt]"))
+      assert(df.columns.toSeq === Seq("store", "record", "t", "index", "ALT [ft]", "SPD [kt]"))
+      assert(df.count() === 10) // 5 rows per store
+      assert(df.select("store").distinct().collect().map(_.getString(0)).sorted
+        === Array("storeA", "storeB"))
+      // same-named records stay distinguishable via the store key
+      assert(df.filter(df("record") === "recA").select("store").distinct().count() === 2)
+      // a store with a column outside signalCols fails loudly...
+      val narrow = intercept[org.apache.spark.SparkException] {
+        Hdf5Opset.loadMany(spark, Seq(p1), Seq("ALT [ft]")).count()
+      }
+      assert(narrow.getMessage.contains("outside signalCols") ||
+        Option(narrow.getCause).exists(_.getMessage.contains("outside signalCols")))
+      // ...unless the caller opts into dropping it
+      val dropped = Hdf5Opset.loadMany(spark, Seq(p1), Seq("ALT [ft]"),
+        ignoreExtraColumns = true)
+      assert(dropped.count() === 5 && dropped.columns.length === 5)
     }
-    assert(narrow.getMessage.contains("outside signalCols") ||
-      Option(narrow.getCause).exists(_.getMessage.contains("outside signalCols")))
-    // ...unless the caller opts into dropping it
-    val dropped = Hdf5Opset.loadMany(spark, Seq(p1), Seq("ALT [ft]"),
-      ignoreExtraColumns = true)
-    assert(dropped.count() === 5 && dropped.columns.length === 5)
   }
 
   test("Hdf5Opset.convert lands parquet that graft operators read back") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_h5c")
-    val h5 = dir.resolve("store.h5").toString
-    val out = dir.resolve("opset_parquet").toString
-    Hdf5.writeFile(h5, fixtureStore)
-    Hdf5Opset.convert(spark, h5, out, numFiles = 2)
-    val back = spark.read.parquet(out)
-    assert(back.count() === 5)
-    // the converted store answers through the ordinary Opset surface
-    val ops = graft.core.Opset(back)
-    assert(ops.records.collect().map(_.getString(0)).toSeq === Seq("recA", "recB"))
+    withTempDir { tmp =>
+      val dir = java.nio.file.Paths.get(tmp)
+      val h5 = dir.resolve("store.h5").toString
+      val out = dir.resolve("opset_parquet").toString
+      Hdf5.writeFile(h5, fixtureStore)
+      Hdf5Opset.convert(spark, h5, out, numFiles = 2)
+      val back = spark.read.parquet(out)
+      assert(back.count() === 5)
+      // the converted store answers through the ordinary Opset surface
+      val ops = graft.core.Opset(back)
+      assert(ops.records.collect().map(_.getString(0)).toSeq === Seq("recA", "recB"))
+    }
   }
 }

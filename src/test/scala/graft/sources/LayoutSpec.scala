@@ -38,17 +38,18 @@ class LayoutSpec extends SparkSpec {
   test("writeZordered: per-file ranges are tight on BOTH columns") {
     val rnd = new scala.util.Random(11)
     val rows = Seq.fill(20000)((rnd.nextInt(1000).toLong, rnd.nextInt(1000).toLong, rnd.nextLong()))
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    Layout.writeZordered(rows.toDF("a", "b", "payload"), Seq("a", "b"), 8,
-      s"$dir/t", numFiles = 16)
-    val spans = spark.read.parquet(s"$dir/t")
-      .groupBy(input_file_name().as("f"))
-      .agg((max("a") - min("a")).as("sa"), (max("b") - min("b")).as("sb"))
-      .agg(avg("sa"), avg("sb")).head()
-    // random order would give per-file spans ~ the full 0..999 range on
-    // both columns; z-clustering must compress BOTH well below it
-    assert(spans.getDouble(0) < 600, s"a-span ${spans.getDouble(0)}")
-    assert(spans.getDouble(1) < 600, s"b-span ${spans.getDouble(1)}")
-    // sanity: both dims share the tightening (neither is a plain sort)
+    withTempDir { dir =>
+      Layout.writeZordered(rows.toDF("a", "b", "payload"), Seq("a", "b"), 8,
+        s"$dir/t", numFiles = 16)
+      val spans = spark.read.parquet(s"$dir/t")
+        .groupBy(input_file_name().as("f"))
+        .agg((max("a") - min("a")).as("sa"), (max("b") - min("b")).as("sb"))
+        .agg(avg("sa"), avg("sb")).head()
+      // random order would give per-file spans ~ the full 0..999 range on
+      // both columns; z-clustering must compress BOTH well below it
+      assert(spans.getDouble(0) < 600, s"a-span ${spans.getDouble(0)}")
+      assert(spans.getDouble(1) < 600, s"b-span ${spans.getDouble(1)}")
+      // sanity: both dims share the tightening (neither is a plain sort)
+    }
   }
 }

@@ -74,8 +74,8 @@ class WarcSpec extends SparkSpec {
       "Content-Length: 5\n\nhello\n\n"
     val rec2 = "WARC/1.0\nWARC-Type: conversion\nWARC-Target-URI: u2\n" +
       "Content-Length: 5\n\nworld\n\n"
-    val dir = java.nio.file.Files.createTempDirectory("warcgz").toFile
-    try {
+    withTempDir { tmp =>
+      val dir = new java.io.File(tmp)
       // file A: ONE member holding both records; file B: one member PER
       // record, concatenated (the real .warc.gz layout); file C: garbage
       java.nio.file.Files.write(new java.io.File(dir, "a.wet.gz").toPath, gz(rec1 + rec2))
@@ -110,8 +110,6 @@ class WarcSpec extends SparkSpec {
       // silence and never an ok record
       assert(byF("c.wet.gz").map(t => (t._2, t._4, t._5)).toSeq ===
         Seq((false, false, "")), "garbage must surface as a flagged sentinel row")
-    } finally {
-      dir.listFiles.foreach(_.delete()); dir.delete()
     }
   }
 
@@ -126,8 +124,8 @@ class WarcSpec extends SparkSpec {
     def rec(u: String, pay: String) =
       s"WARC/1.0\nWARC-Type: conversion\nWARC-Target-URI: $u\n" +
         s"Content-Length: ${pay.length}\n\n$pay\n\n"
-    val dir = java.nio.file.Files.createTempDirectory("warcgz2").toFile
-    try {
+    withTempDir { tmp =>
+      val dir = new java.io.File(tmp)
       // whole-file gzip cut mid-stream: record 1 inflates, record 2 is
       // the damaged tail
       val whole = gz(rec("u1", "hello") + rec("u2", "world"))
@@ -145,8 +143,6 @@ class WarcSpec extends SparkSpec {
           maxRecordBytes = 512)
         .select("uri", "ok").collect().map(r => (r.getString(0), r.getBoolean(1))).toMap
       assert(capped === Map("s1" -> true, "s2" -> false, "s3" -> true))
-    } finally {
-      dir.listFiles.foreach(_.delete()); dir.delete()
     }
   }
 }

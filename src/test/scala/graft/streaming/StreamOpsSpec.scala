@@ -147,21 +147,22 @@ class StreamOpsSpec extends SparkSpec {
     implicit val sc = spark.sqlContext
     import graft.core.Opset
     val in = MemoryStream[(String, Long, Double)]
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-store").toString
-    in.addData(("r1", 1L, 10.0), ("r1", 2L, 11.0), ("r2", 1L, 20.0))
-    val q = StreamOps.writeOpsetStore(
-      in.toDF().toDF("record", "t", "value"),
-      s"$dir/store", s"$dir/ckpt")
-    q.awaitTermination() // AvailableNow: drains the backlog and stops
-    val os = Opset.load(spark, s"$dir/store")
-    assert(os.size === 2L)
-    assert(os.get("r1").count() === 2L)
-    // exactly-once: restarting over the same checkpoint adds nothing
-    val q2 = StreamOps.writeOpsetStore(
-      in.toDF().toDF("record", "t", "value"),
-      s"$dir/store", s"$dir/ckpt")
-    q2.awaitTermination()
-    assert(Opset.load(spark, s"$dir/store").df.count() === 3L)
+    withTempDir { dir =>
+      in.addData(("r1", 1L, 10.0), ("r1", 2L, 11.0), ("r2", 1L, 20.0))
+      val q = StreamOps.writeOpsetStore(
+        in.toDF().toDF("record", "t", "value"),
+        s"$dir/store", s"$dir/ckpt")
+      q.awaitTermination() // AvailableNow: drains the backlog and stops
+      val os = Opset.load(spark, s"$dir/store")
+      assert(os.size === 2L)
+      assert(os.get("r1").count() === 2L)
+      // exactly-once: restarting over the same checkpoint adds nothing
+      val q2 = StreamOps.writeOpsetStore(
+        in.toDF().toDF("record", "t", "value"),
+        s"$dir/store", s"$dir/ckpt")
+      q2.awaitTermination()
+      assert(Opset.load(spark, s"$dir/store").df.count() === 3L)
+    }
   }
 
   test("Sketches.hllRegisters applies unchanged to a stream; the multi-batch fold equals the batch sketch") {
@@ -239,59 +240,61 @@ class StreamOpsSpec extends SparkSpec {
   test("streamingKmv: landed per-batch slices merge to the exact whole-corpus sketch") {
     implicit val sc = spark.sqlContext
     val in = MemoryStream[(String, Long, Double)]
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-kmv").toString
-    val q = StreamOps.streamingKmv(in.toDF().toDF("g", "id", "v"),
-      Seq("g"), col("id"), col("v"), k = 16, seed = 7L,
-      s"$dir/rows", s"$dir/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-    try {
-      val all = (1 to 200).map(i => (s"g${i % 2}", i.toLong, i * 1.5))
-      in.addData(all.take(90): _*)
-      q.processAllAvailable()
-      in.addData(all.drop(90): _*) // disjoint ids: the kmvMerge contract
-      q.processAllAvailable()
-    } finally q.stop()
-    // the exactly-once layout: one batch=<id> subdir per micro-batch
-    val raw = spark.read.parquet(s"$dir/rows")
-    assert(raw.columns.contains("batch"))
-    assert(raw.select("batch").distinct().count() >= 2)
-    val slices = StreamOps.readSlices(spark, s"$dir/rows")
-    assert(!slices.columns.contains("batch"))
-    // at least two landed slices, each truncated to <= k rows per group
-    assert(slices.count() > 16 * 2)
-    val merged = graft.analysis.Sketches.kmvMerge(Seq(slices), Seq("g"), 16)
-    val whole = graft.analysis.Sketches.kmvSketch(
-      (1 to 200).map(i => (s"g${i % 2}", i.toLong, i * 1.5)).toDF("g", "id", "v"),
-      Seq("g"), col("id"), col("v"), 16, 7L)
-    assert(merged.collect().toSet === whole.collect().toSet)
-    // and the quantile surface folds identically
-    val qm = graft.analysis.Sketches.kmvQuantiles(merged, Seq("g"), Seq(0.5, 0.9))
-    val qw = graft.analysis.Sketches.kmvQuantiles(whole, Seq("g"), Seq(0.5, 0.9))
-    assert(qm.collect().toSet === qw.collect().toSet)
+    withTempDir { dir =>
+      val q = StreamOps.streamingKmv(in.toDF().toDF("g", "id", "v"),
+        Seq("g"), col("id"), col("v"), k = 16, seed = 7L,
+        s"$dir/rows", s"$dir/ckpt",
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+      try {
+        val all = (1 to 200).map(i => (s"g${i % 2}", i.toLong, i * 1.5))
+        in.addData(all.take(90): _*)
+        q.processAllAvailable()
+        in.addData(all.drop(90): _*) // disjoint ids: the kmvMerge contract
+        q.processAllAvailable()
+      } finally q.stop()
+      // the exactly-once layout: one batch=<id> subdir per micro-batch
+      val raw = spark.read.parquet(s"$dir/rows")
+      assert(raw.columns.contains("batch"))
+      assert(raw.select("batch").distinct().count() >= 2)
+      val slices = StreamOps.readSlices(spark, s"$dir/rows")
+      assert(!slices.columns.contains("batch"))
+      // at least two landed slices, each truncated to <= k rows per group
+      assert(slices.count() > 16 * 2)
+      val merged = graft.analysis.Sketches.kmvMerge(Seq(slices), Seq("g"), 16)
+      val whole = graft.analysis.Sketches.kmvSketch(
+        (1 to 200).map(i => (s"g${i % 2}", i.toLong, i * 1.5)).toDF("g", "id", "v"),
+        Seq("g"), col("id"), col("v"), 16, 7L)
+      assert(merged.collect().toSet === whole.collect().toSet)
+      // and the quantile surface folds identically
+      val qm = graft.analysis.Sketches.kmvQuantiles(merged, Seq("g"), Seq(0.5, 0.9))
+      val qw = graft.analysis.Sketches.kmvQuantiles(whole, Seq("g"), Seq(0.5, 0.9))
+      assert(qm.collect().toSet === qw.collect().toSet)
+    }
   }
 
   test("streamingTopK: landed per-batch slices fold to the exact global leaderboard") {
     implicit val sc = spark.sqlContext
     val in = MemoryStream[(Long, Long, Double)]
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-topk").toString
-    val ord = Seq(col("v").desc, col("id").asc)
-    val q = StreamOps.streamingTopK(in.toDF().toDF("k", "id", "v"),
-      Seq("k"), ord, k = 3, s"$dir/rows", s"$dir/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-    try {
-      val all = (1 to 120).map(i => ((i % 4).toLong, i.toLong, (i * 37 % 101).toDouble))
-      in.addData(all.take(50): _*)
-      q.processAllAvailable()
-      in.addData(all.drop(50): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val folded = graft.core.TopK.perKey(
-      StreamOps.readSlices(spark, s"$dir/rows"), Seq("k"), ord, 3)
-    val whole = graft.core.TopK.perKey(
-      (1 to 120).map(i => ((i % 4).toLong, i.toLong, (i * 37 % 101).toDouble))
-        .toDF("k", "id", "v"), Seq("k"), ord, 3)
-    assert(folded.collect().toSet === whole.collect().toSet)
-    assert(folded.count() === 12L) // 4 keys x top-3, ranks intact
+    withTempDir { dir =>
+      val ord = Seq(col("v").desc, col("id").asc)
+      val q = StreamOps.streamingTopK(in.toDF().toDF("k", "id", "v"),
+        Seq("k"), ord, k = 3, s"$dir/rows", s"$dir/ckpt",
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+      try {
+        val all = (1 to 120).map(i => ((i % 4).toLong, i.toLong, (i * 37 % 101).toDouble))
+        in.addData(all.take(50): _*)
+        q.processAllAvailable()
+        in.addData(all.drop(50): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      val folded = graft.core.TopK.perKey(
+        StreamOps.readSlices(spark, s"$dir/rows"), Seq("k"), ord, 3)
+      val whole = graft.core.TopK.perKey(
+        (1 to 120).map(i => ((i % 4).toLong, i.toLong, (i * 37 % 101).toDouble))
+          .toDF("k", "id", "v"), Seq("k"), ord, 3)
+      assert(folded.collect().toSet === whole.collect().toSet)
+      assert(folded.count() === 12L) // 4 keys x top-3, ranks intact
+    }
   }
 
   test("streamingBinCounts: multi-batch update emissions fold (max per bin) to the " +
@@ -305,32 +308,33 @@ class StreamOpsSpec extends SparkSpec {
     val in = MemoryStream[(String, Double)]
     val cnts = StreamOps.streamingBinCounts(
       in.toDF().toDF("g", "v"), Seq("g"), col("v"), bounds, nBins)
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-binq").toString
-    val q = StreamOps.landUpdates(cnts, s"$dir/rows", s"$dir/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-    try {
-      in.addData(all.take(130): _*)
-      q.processAllAvailable()
-      in.addData(all.drop(130): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    // monotone-register fold: max count per (group, bin)
-    val folded = spark.read.parquet(s"$dir/rows")
-      .groupBy("g", "_bin").agg(max(col("_c")).as("_c"))
-    // register-bounded: never more than groups x nBins state rows
-    assert(folded.count() <= 2L * nBins)
-    // the folded table IS the batch count table
-    val batchCnts = batchDf
-      .select(col("g"), col("v").cast("double").as("_v"))
-      .join(broadcast(bounds), Seq("g"))
-      .withColumn("_bin", graft.analysis.Stats.binIndex(nBins))
-      .groupBy("g", "_bin").agg(count(lit(1)).as("_c"))
-    assert(folded.collect().toSet === batchCnts.collect().toSet)
-    // and the shared estimator reproduces the batch operator bit-for-bit
-    val viaStream = graft.analysis.Stats.binnedQuantilesFromCounts(
-      folded, bounds, Seq("g"), Seq(0.5, 0.9), nBins)
-    val viaBatch = graft.analysis.Stats.binnedQuantiles(
-      batchDf, Seq("g"), col("v"), Seq(0.5, 0.9), nBins)
-    assert(viaStream.collect().toSet === viaBatch.collect().toSet)
+    withTempDir { dir =>
+      val q = StreamOps.landUpdates(cnts, s"$dir/rows", s"$dir/ckpt",
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+      try {
+        in.addData(all.take(130): _*)
+        q.processAllAvailable()
+        in.addData(all.drop(130): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      // monotone-register fold: max count per (group, bin)
+      val folded = spark.read.parquet(s"$dir/rows")
+        .groupBy("g", "_bin").agg(max(col("_c")).as("_c"))
+      // register-bounded: never more than groups x nBins state rows
+      assert(folded.count() <= 2L * nBins)
+      // the folded table IS the batch count table
+      val batchCnts = batchDf
+        .select(col("g"), col("v").cast("double").as("_v"))
+        .join(broadcast(bounds), Seq("g"))
+        .withColumn("_bin", graft.analysis.Stats.binIndex(nBins))
+        .groupBy("g", "_bin").agg(count(lit(1)).as("_c"))
+      assert(folded.collect().toSet === batchCnts.collect().toSet)
+      // and the shared estimator reproduces the batch operator bit-for-bit
+      val viaStream = graft.analysis.Stats.binnedQuantilesFromCounts(
+        folded, bounds, Seq("g"), Seq(0.5, 0.9), nBins)
+      val viaBatch = graft.analysis.Stats.binnedQuantiles(
+        batchDf, Seq("g"), col("v"), Seq(0.5, 0.9), nBins)
+      assert(viaStream.collect().toSet === viaBatch.collect().toSet)
+    }
   }
 }

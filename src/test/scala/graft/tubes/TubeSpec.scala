@@ -108,19 +108,20 @@ class TubeSpec extends SparkSpec {
         Tube.TubeModel(Seq("TIME", "TIME2"), 1.25, Array(2.5, -0.125), 0.875),
         Tube.TubeModel(Seq("SGV"), -3.0, Array(0.0625), 0.5)),
       "other" -> Seq(Tube.TubeModel(Seq("TIME"), 0.1, Array(1e-17), -0.25)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-tube-models").toString
-    Tube.saveFitted(spark, fitted, s"$dir/models")
-    val back = Tube.loadFitted(spark, s"$dir/models")
-    assert(back.map(_._1) === Seq("other", "value"))
-    val bm = back.toMap
-    fitted.foreach { case (tgt, ms) =>
-      val rs = bm(tgt)
-      assert(rs.size === ms.size)
-      ms.zip(rs).foreach { case (a, b) =>
-        assert(a.factors === b.factors)
-        assert(a.intercept === b.intercept)
-        assert(a.coefs.toSeq === b.coefs.toSeq)
-        assert(a.r2 === b.r2)
+    withTempDir { dir =>
+      Tube.saveFitted(spark, fitted, s"$dir/models")
+      val back = Tube.loadFitted(spark, s"$dir/models")
+      assert(back.map(_._1) === Seq("other", "value"))
+      val bm = back.toMap
+      fitted.foreach { case (tgt, ms) =>
+        val rs = bm(tgt)
+        assert(rs.size === ms.size)
+        ms.zip(rs).foreach { case (a, b) =>
+          assert(a.factors === b.factors)
+          assert(a.intercept === b.intercept)
+          assert(a.coefs.toSeq === b.coefs.toSeq)
+          assert(a.r2 === b.r2)
+        }
       }
     }
   }

@@ -63,14 +63,7 @@ object Bench {
       "SPARK_GRAFT_BENCH_RUNS", if (sessions > 1) "2" else "3").toInt)
 
     def buildSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val s = Session.builder(cpus.toInt).getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       // absorb session/executor init so the first query of each session
       // isn't charged the one-time startup

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit helper: prints `explain("formatted")` for the named queries
   * (or a headline set) so scan pruning (`ReadSchema`), filter pushdown
   * (`PushedFilters`), broadcast joins and WholeStageCodegen spans can be
@@ -15,12 +13,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else Headline
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===================== $n =====================")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import graft.util.Json
 
@@ -8,28 +7,13 @@ import graft.util.Json
   * plus oracle_sql.json, for the driver's DuckDB compare.
   */
 object Verify {
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query ...]")
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args: run only these queries (local iteration; the
     // driver always passes exactly two args and gets the full set)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects by
-      // default; read as long nanos (ts is only used for ordering, which
-      // long nanos preserve — matches DuckDB's native ns ordering).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Per-query failures (exceptions AND cap fires) are collected here and
@@ -52,7 +36,7 @@ object Verify {
           .parquet(s"$outDir/$name")
         val fired = graft.core.Salting.recordedDropEvents.drop(dropsBefore)
         if (fired.nonEmpty) {
-          deleteRecursively(new java.io.File(s"$outDir/$name"))
+          graft.core.Scratch.delete(s"$outDir/$name")
           throw new IllegalStateException(
             s"over-cap drop fired during graded query (oracle does not model the cap): " +
               fired.map(e => s"${e.what} nGroups=${e.nGroups} max=${e.maxSize}").mkString("; "))

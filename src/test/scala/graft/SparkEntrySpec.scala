@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions.col
 
+import graft.queries.{ModelSql, QuerySpec}
+
 /** Guards the query/oracle contract: every query has exactly one oracle
   * at any directory, a fitted model's oracle describes the fit of the
   * directory it is asked about whatever ran before, and the inventory
@@ -50,6 +52,19 @@ class SparkEntrySpec extends SparkSpec {
     val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql(spark, Dir).keySet
     assert(rowsOnly.isEmpty, s"unexpected rows-only queries: $rowsOnly")
     assert(ModelQueries.size === 16 && ModelQueries.forall(SparkEntry.queries.contains))
+  }
+
+  // `queries` is a ListMap over the family runs: a name declared twice
+  // would silently keep one entry.
+  test("every query name is declared once") {
+    val names = SparkEntry.specs.map(_.name)
+    assert(names.diff(names.distinct).isEmpty, "declared more than once")
+    assert(SparkEntry.queries.size === SparkEntry.specs.size)
+  }
+
+  test("the model queries are exactly the specs whose oracle reads a fitted model") {
+    val fromModel = SparkEntry.specs.collect { case QuerySpec(q, _, _: ModelSql[_]) => q }
+    assert(fromModel.sorted === ModelQueries.sorted)
   }
 
   test("the graded inventory does not shrink") {
